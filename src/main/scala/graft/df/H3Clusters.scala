@@ -31,8 +31,9 @@ object H3Clusters {
     * plan (no driver actions, no checkpoints) — right when the component
     * diameter is known-bounded (each round propagates labels one hop, and
     * min-labels race ahead, so n >= diameter always suffices).
-    * `fixedRounds = None` loops to convergence, materializing each round
-    * (localCheckpoint) and stopping when no label changes. */
+    * `fixedRounds = None` loops to convergence through
+    * `graft.util.Fixpoint.converge`, materializing each round and stopping
+    * when no label changes. */
   def cellClusters(df: DataFrame, cellCol: String, valueCol: Option[String] = None,
       fixedRounds: Option[Int] = None, maxIterations: Int = 64,
       checkpointDir: Option[String] = None): DataFrame = {
@@ -104,41 +105,27 @@ object H3Clusters {
             .select((keyCols ++ relaxed.columns.filter(_ == "__prev").map(col) :+
               coalesce(col("__repcluster"), col("cluster")).as("cluster")): _*)
         }
-        var changed = true
-        var iter = 0
-        // frees the superseded label generation once the round's action
-        // has materialized its successor (the final generation is never
-        // freed — the result join below reads it)
-        var freeLabels: () => Unit = () => ()
-        while (changed && iter < maxIterations) {
+        val res = graft.util.Fixpoint.converge(labels, () => (), maxIterations,
+            checkpointDir) { (state, _) =>
           // the slim relaxed frame is barrier'd BEFORE the compression
           // self-join: with propagate's join tree on both sides, Catalyst's
           // size-only stats estimation multiplies the unknown-size leaves
           // into astronomically wide BigInts (minutes of Toom-Cook per
           // round); as a leaf, the self-join costs nothing to plan
           val (relaxed, freeRelaxed) = graft.util.Barriers.statSafeFreeable(
-            propagate(labels, carryPrev = true))
-          // checkpointDir upgrades every few rounds to a reliable
-          // checkpoint (executor-loss-safe); see graft.util.Barriers.
-          // Each key's previous label rides the frame, so change counting
+            propagate(state.drop("__prev"), carryPrev = true))
+          // each key's previous label rides the frame, so change counting
           // shares the materializing job — one action per round where the
           // old exceptAll-vs-prev convergence check paid its own
           // two-shuffle job
-          val comp = compress(relaxed)
-          val ci = comp.columns.indexOf("cluster")
-          val pi = comp.columns.indexOf("__prev")
-          val (next, nChanged, freeNext) = graft.util.Barriers.roundBarrierCountingFreeable(
-            comp, iter, checkpointDir)(r => r.get(ci) != r.get(pi))
-          freeRelaxed(); freeLabels()
-          freeLabels = freeNext
-          labels = next.drop("__prev")
-          changed = nChanged > 0
-          iter += 1
+          graft.util.Fixpoint.Round(compress(relaxed),
+            graft.util.Fixpoint.differs("cluster", "__prev"), Seq(freeRelaxed))
         }
-        if (changed)
+        if (!res.converged)
           org.slf4j.LoggerFactory.getLogger(getClass).warn(
             s"cellClusters stopped after maxIterations=$maxIterations with labels " +
               "still changing: clusters may be split; raise maxIterations")
+        labels = res.frame.drop("__prev")
     }
     joinOnKeys(df,
       labels.select((col(cellCol) +: valueCol.map(col).toSeq :+ col("cluster")): _*))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.pipeline.CheckpointLayout
-import graft.util.Barriers
+import graft.util.{Barriers, Fixpoint}
 
 /**
  * Community detection by synchronous label propagation (Raghavan et al.
@@ -62,34 +62,29 @@ object Communities {
     // distinct node frame IS the initial label frame, so the gate's
     // aggregate is reused, not redundant; its count also materializes
     // adj0, which round 1 needs anyway.
-    val (nodes0, freeNodes0) = graft.util.Barriers.statSafeFreeable(
+    val (nodes0, freeNodes0) = Barriers.statSafeFreeable(
       adj0.select(col("a").as("node")).distinct())
     val nNodes = nodes0.count()
     val (adj, freeAdj, cluster) = CheckpointLayout.statSafeReclusterIfOver(
       adj0, freeAdj0, measured = nNodes, key = "b")
-    // clustered regime: rounds are EAGER with the superseded generation's
-    // blocks freed each round, and a reliable checkpoint every
-    // ReliableEvery-th round for executor-loss durability — the CC
-    // discipline. Small regime keeps the lazy adaptive chain.
-    var freeLabels: () => Unit = () => ()
-    var labels =
+    val (labels0, freeLabels0) =
       if (cluster) {
         val (l0, free0) = CheckpointLayout.statSafeClusteredBy(
           nodes0, key = "node")
         l0.queryExecution.toRdd.count() // materialize, then drop the source
         freeNodes0()
-        freeLabels = free0
-        l0.select(col("node"), col("node").as("label"))
+        (l0.select(col("node"), col("node").as("label")), free0)
       } else
         // nodes0 is already a stat-safe checkpoint; the label frame is a
         // trivial projection over it — a second barrier would only pin
         // one more session-lifetime RDD
-        nodes0.select(col("node"), col("node").as("label"))
-    for (round <- 0 until iters) {
+        (nodes0.select(col("node"), col("node").as("label")), () => ())
+    Fixpoint.fixedRounds(labels0, freeLabels0, iters, cluster, checkpointDir,
+        release = freeAdj) { labels =>
       // slim-side hint (CheckpointLayout.slimHint): small regime = node
       // count measured ≤ the cluster bound, so the label frame broadcasts
       // by measurement and the adjacency never re-exchanges per round
-      val next = adj.join(CheckpointLayout.slimHint(labels, cluster),
+      adj.join(CheckpointLayout.slimHint(labels, cluster),
           adj("b") === labels("node"))
         .select(adj("a").as("node"), col("label"))
         .groupBy(col("node"), col("label")).agg(count(lit(1)).as("c"))
@@ -97,18 +92,7 @@ object Communities {
         .groupBy(col("node"))
         .agg(max(struct(col("c"), (-col("label")).as("nl"))).as("m"))
         .select(col("node"), (-col("m.nl")).as("label"))
-      if (cluster) {
-        val (nl, free) = CheckpointLayout.roundBarrierKeepingLayout(next, round, checkpointDir)
-        freeLabels() // nl is eager: the generation it superseded is dead
-        freeLabels = free
-        labels = nl
-      } else labels = Barriers.statSafe(next)
     }
-    // clustered regime: the final labels generation is its own eager
-    // checkpoint, so the adjacency's blocks are dead now (the small
-    // regime's lazy chain still reads adj — nothing to free there)
-    if (cluster) freeAdj()
-    labels
   }
 
   /** Community roll-up: one row per final label with member count and

@@ -3,7 +3,8 @@ package graft.graph
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.util.Barriers
+import graft.pipeline.CheckpointLayout
+import graft.util.{Barriers, Fixpoint}
 
 /**
  * Bounded-round k-core peeling (Seidman 1983; the distributed peel of
@@ -30,29 +31,28 @@ object Cores {
   /** Nodes of the `rounds`-round k-core: `(node, degree)` with the
     * degree measured in the surviving subgraph.
     *
-    * Rounds are EAGER with the superseded edge generation's blocks freed
-    * as soon as its successor is materialized — the lazy chain this
-    * replaced pinned every generation (`rounds` × edge-frame memory, the
-    * LayoutScaleProbe lesson) for the session. The row count rides the
-    * materializing job's accumulator for free and doubles as a FIXPOINT
-    * exit: `e` only ever shrinks under the semi-joins, so an unchanged
-    * count means an unchanged set and every remaining round is a no-op —
-    * results are identical to running the full budget (spec-pinned).
-    * `checkpointDir` gives the loop the same executor-loss durability
-    * cadence as CC/LPA/PR (a reliable file checkpoint every
+    * Rounds run through [[Fixpoint.converge]]: eager, with the superseded
+    * edge generation's blocks freed as soon as its successor is
+    * materialized (a lazy chain pins every generation — `rounds` ×
+    * edge-frame memory, the LayoutScaleProbe lesson). The row count rides
+    * the materializing job's accumulator for free and doubles as a
+    * FIXPOINT exit: `e` only ever shrinks under the semi-joins, so an
+    * unchanged count means an unchanged set and every remaining round is
+    * a no-op — results are identical to running the full budget
+    * (spec-pinned). `checkpointDir` gives the loop the same executor-loss
+    * durability cadence as CC/LPA/PR (a reliable file checkpoint every
     * [[Barriers.ReliableEvery]]-th round; local blocks otherwise). */
   def kCore(edges: DataFrame, src: Column, dst: Column, k: Int,
       rounds: Int, checkpointDir: Option[String] = None): DataFrame = {
     require(k >= 1 && rounds >= 1, s"need k >= 1 and rounds >= 1, got $k/$rounds")
-    var (e, freeE) = Barriers.statSafeFreeable(Triangles.canonicalEdges(edges, src, dst))
-    var prevRows = -1L
-    var round = 0
-    var fixpoint = false
-    while (round < rounds && !fixpoint) {
-      val deg = e.select(col("u").as("n")).unionAll(e.select(col("v").as("n")))
+    def degrees(e: DataFrame): DataFrame =
+      e.select(col("u").as("n")).unionAll(e.select(col("v").as("n")))
         .groupBy(col("n")).agg(count(lit(1)).as("deg"))
+    val (e0, freeE0) = Barriers.statSafeFreeable(Triangles.canonicalEdges(edges, src, dst))
+    val e = Fixpoint.converge(e0, freeE0, rounds, checkpointDir,
+        stop = Fixpoint.sameCount) { (e, prevRows) =>
       val (keep, freeKeep) = Barriers.statSafeFreeable(
-        deg.filter(col("deg") >= k).select(col("n")))
+        degrees(e).filter(col("deg") >= k).select(col("n")))
       // slim-side hint (CheckpointLayout.slimHint): this loop has no
       // upfront regime gate (the edge frame only shrinks), so the previous
       // round's measured row count stands in — round 0 runs unhinted, and
@@ -63,25 +63,16 @@ object Cores {
       // reference the same subtree, so exchange reuse builds the keep
       // set's broadcast once per round (the former per-side `.as(c)`
       // aliases made the subtrees canonically distinct and the broadcast
-      // was built twice — the r16 advisor's finding).
-      val bound = graft.pipeline.CheckpointLayout.clusterMinRows(e.sparkSession)
+      // was built twice).
+      val bound = CheckpointLayout.clusterMinRows(e.sparkSession)
       val big = prevRows < 0 || bound <= 0 || prevRows > bound
-      val hintedKeep = graft.pipeline.CheckpointLayout.slimHint(keep, clustered = big)
-      val (next, nRows, freeNext) = Barriers.roundBarrierCountingFreeable(
+      val hintedKeep = CheckpointLayout.slimHint(keep, clustered = big)
+      Fixpoint.Round(
         e.join(hintedKeep, col("u") === col("n"), "leftsemi")
           .join(hintedKeep, col("v") === col("n"), "leftsemi")
-          .select(col("u"), col("v")), round, checkpointDir)(_ => true)
-      // next is materialized: the round's survivor set and the previous
-      // edge generation are dead (the final generation is never freed —
-      // the caller's result reads it)
-      freeKeep(); freeE()
-      e = next; freeE = freeNext
-      fixpoint = nRows == prevRows
-      prevRows = nRows
-      round += 1
-    }
-    e.select(col("u").as("n")).unionAll(e.select(col("v").as("n")))
-      .groupBy(col("n")).agg(count(lit(1)).as("degree"))
-      .select(col("n").as("node"), col("degree"))
+          .select(col("u"), col("v")),
+        Fixpoint.everyRow, Seq(freeKeep))
+    }.frame
+    degrees(e).select(col("n").as("node"), col("deg").as("degree"))
   }
 }

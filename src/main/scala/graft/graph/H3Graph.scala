@@ -5,6 +5,8 @@ import org.apache.spark.sql.catalyst.encoders.RowEncoder
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.functions._
+import graft.pipeline.CheckpointLayout
+import graft.util.{Barriers, Fixpoint}
 import scala.collection.mutable
 
 /**
@@ -476,131 +478,108 @@ object H3Graph {
     }
   }
 
-  /** Distributed SSSP for graphs beyond [[MaxBroadcastEdges]]: Pregel-style
-    * iterative relaxation entirely in DataFrames. State is
-    * `(cell, src, cost)` = best known cost from origin `src` to `cell`;
-    * each round joins the improved frontier against the edge table (an
-    * equi-join Catalyst plans as a shuffle join — or broadcast, if the
-    * frontier is small under AQE) and keeps per-(cell, src) minima with a
-    * map-side partial min. Each materialized round performs `hopsPerRound`
-    * relaxation hops (default 2 — the barrier job is the latency driver
-    * at scale, and total shuffle volume per hop is unchanged), so it
-    * converges in <= ceil(diameter / hopsPerRound) + 1 rounds; lineage is
-    * cut per round with localCheckpoint. Costs match local Dijkstra
-    * exactly (spec-pinned); paths are not materialized on this path —
-    * predecessor reconstruction at this scale belongs in storage, not a
-    * result column. Origins/destinations must be graph nodes (no snapping
-    * on the distributed path). */
-  /** Shared edge build of both iterative SSSP variants: null-endpoint OR
-    * null-weight rows are not edges (a null destination folds a phantom
-    * null cell into the best-cost table; a null weight makes `min(cost)`
-    * carry nulls, so the frontier's improved-filter keeps the row forever
-    * and the loop never converges — and the paths variant's
-    * `min(struct(cost, ...))` argmin sorts a null cost FIRST, letting it
-    * beat real finite paths). The frontier's size is unknowable upfront,
-    * so the edge-frame row count gates the layout regime as a proxy (see
-    * CheckpointLayout.ClusterLayoutMinRows). */
-  private def iterativeEdges(graph: DataFrame): (DataFrame, () => Unit, Boolean, Long) = {
-    val (e0, freeE0) = graft.util.Barriers.statSafeFreeable(
+  /** Shared relaxation loop of both iterative SSSP variants, Pregel-style
+    * entirely in DataFrames and run through [[Fixpoint.converge]]. Each
+    * generation is the fold frame `(cell, src, cost[, pred], __old)`: the
+    * best known cost from origin `src` to `cell` (plus, with `withPred`,
+    * the argmin predecessor) and the pre-fold best `__old`. The best table
+    * and the improved frontier are both projections of it, and the
+    * convergence count (improved rows) rides its materializing job. Each
+    * round joins the frontier against the edge table and keeps
+    * per-(cell, src) minima with a map-side partial min. Returns the final
+    * generation projected to the best table, the layout regime, and the
+    * measured edge count.
+    *
+    * Edges: null-endpoint OR null-weight rows are not edges (a null
+    * destination folds a phantom null cell into the best-cost table; a
+    * null weight makes `min(cost)` carry nulls, so the frontier's
+    * improved-filter keeps the row forever and the loop never converges —
+    * and the paths variant's `min(struct(cost, ...))` argmin sorts a null
+    * cost FIRST, letting it beat real finite paths). The frontier's size
+    * is unknowable upfront, so the edge-frame row count gates the layout
+    * regime as a proxy (see CheckpointLayout.ClusterLayoutMinRows): small
+    * graphs keep the plain statSafe frame; past the bound the table is
+    * re-clustered ONCE by the relax-join key so every hop's
+    * frontier⋈edges join streams it in place — the frontier (slim) is the
+    * only thing that moves. Stats stay dropped in both regimes. */
+  private def relaxIterative(spark: SparkSession, graph: DataFrame, origins: Seq[Long],
+      maxRounds: Int, checkpointDir: Option[String], hopsPerRound: Int,
+      withPred: Boolean): (Fixpoint.Result, Boolean, Long) = {
+    require(hopsPerRound >= 1, s"hopsPerRound must be >= 1, got $hopsPerRound")
+    import spark.implicits._
+    val (e0, freeE0) = Barriers.statSafeFreeable(
       graph.select(col("origin").as("__eo"), col("destination").as("__ed"),
         col("weight").cast("double").as("__ew"))
         .filter(col("__eo").isNotNull && col("__ed").isNotNull &&
           col("__ew").isNotNull))
-    val measured = e0.count()
-    val (ec, freeEc, clustered) = graft.pipeline.CheckpointLayout.statSafeReclusterIfOver(
-      e0, freeE0, measured = measured, key = "__eo")
-    (ec, freeEc, clustered, measured)
-  }
-
-  /** Small-regime broadcast hint for the relax join's STATIC side (the
-    * edge table), gated on the SAME measured regime decision as the edge
-    * layout: below the cluster bound the edge count is MEASURED ≤
-    * ClusterLayoutMinRows (≈ tens of MB of 3 longs), so the static hint
-    * removes the per-hop edge-side shuffle stage AQE would otherwise
-    * materialize before its own runtime broadcast decision (measured at
-    * sf0.1: p116 ran 172 jobs for 0.18 s of parallel task work — the wall
-    * was stage scheduling). Hinting the STATIC side rather than the
-    * evolving frontier (the r16 shape) matters for the same reason: a
-    * frontier hint paid one broadcast-BUILD job per hop (the frontier
-    * changes every hop), while the edge broadcast is built once per
-    * materializing job and REUSED by every hop's join inside it
-    * (exchange reuse over the identical subtree). Past the bound the
-    * hint would broadcast an unbounded edge table: clustered regime
-    * keeps the co-partitioned streaming join, hint-free.
-    * `graft.sssp.frontierHint=false` restores the unhinted small-regime
-    * joins (A/B instrumentation; the default is the measured winner). */
-  private def frontierHint(spark: org.apache.spark.sql.SparkSession,
-      clustered: Boolean): DataFrame => DataFrame =
-    if (clustered ||
-      spark.conf.get("graft.sssp.frontierHint", "true") != "true") identity
-    else broadcast
-
-  /** [[frontierHint]] for the walk-reconstruction join's static side (the
-    * predecessor table): bounded by |nodes| × |origins| rows, and
-    * |origins| is CALLER-controlled — a small-regime graph with a large
-    * origin set could force a multi-GB static broadcast AQE's runtime
-    * size check would have declined (the r16 advisor's finding). The gate
-    * therefore also requires `2 × measuredEdges × |origins|` (nodes ≤
-    * 2·edges, so an upper bound on the broadcast rows) at or under
-    * `graft.sssp.frontierRowBudget` (default 4M rows of 3-4 longs ≈ low
-    * hundreds of MB built). Over budget the walk falls back to
-    * broadcasting the WALK side (bounded by the origins × destinations
-    * pair set — always slim), one build per hop. */
-  private def predsHintOn(spark: org.apache.spark.sql.SparkSession,
-      clustered: Boolean, measuredEdges: Long, nOrigins: Int): Boolean = {
-    val budget = spark.conf.get("graft.sssp.frontierRowBudget", "4000000").toLong
-    !clustered &&
-      2L * measuredEdges * math.max(nOrigins, 1) <= budget &&
-      spark.conf.get("graft.sssp.frontierHint", "true") == "true"
-  }
-
-  def shortestPathsIterative(spark: SparkSession, graph: DataFrame, origins: Seq[Long],
-      destinations: Seq[Long], maxRounds: Int = 256,
-      checkpointDir: Option[String] = None, hopsPerRound: Int = 2): DataFrame = {
-    require(hopsPerRound >= 1, s"hopsPerRound must be >= 1, got $hopsPerRound")
-    import spark.implicits._
-    // Dual-regime edge layout (see CheckpointLayout.ClusterLayoutMinRows):
-    // small graphs keep the plain statSafe frame (the frontier broadcasts
-    // into the relax join under AQE, so the edge table streams anyway).
-    // Past the bound the table is re-clustered ONCE by the relax-join key
-    // so every hop's frontier⋈edges join streams it in place — no
-    // per-hop exchange or sort of the big side; the frontier (slim) is
-    // the only thing that moves. Stats stay dropped in both regimes.
-    val (edges0, freeEdges, clustered, measuredEdges) = iterativeEdges(graph)
-    // static-side hint: built once per materializing job, reused by every
-    // hop's relax join inside it — see frontierHint
-    val edges = frontierHint(spark, clustered)(edges0)
-    var best = origins.distinct.toDF("cell")
-      .select(col("cell"), col("cell").as("src"), lit(0.0).as("cost"))
+    val measuredEdges = e0.count()
+    val (edges0, freeEdges, clustered) = CheckpointLayout.statSafeReclusterIfOver(
+      e0, freeE0, measured = measuredEdges, key = "__eo")
+    // Small-regime broadcast hint for the relax join's STATIC side (the
+    // edge table): below the cluster bound the edge count is MEASURED ≤
+    // ClusterLayoutMinRows (≈ tens of MB of 3 longs), so the hint removes
+    // the per-hop edge-side shuffle stage AQE would otherwise materialize
+    // before its own runtime broadcast decision (measured at sf0.1: p116
+    // ran 172 jobs for 0.18 s of parallel task work — the wall was stage
+    // scheduling). Hinting the STATIC side rather than the evolving
+    // frontier matters for the same reason: a frontier hint paid one
+    // broadcast-BUILD job per hop, while the edge broadcast is built once
+    // per materializing job and REUSED by every hop's join inside it
+    // (exchange reuse over the identical subtree). Past the bound the
+    // clustered regime keeps the co-partitioned streaming join, hint-free.
+    val edges = CheckpointLayout.slimHint(edges0, clustered)
+    val stateCols = Seq("cell", "src", "cost") ++ (if (withPred) Seq("pred") else Nil)
+    // the origins are their own first frontier: a null pre-fold best marks
+    // every row improved (the projection sits above the checkpoint, which
+    // keeps the state columns only)
+    val best0 = origins.distinct.toDF("cell")
+      .select(Seq(col("cell"), col("cell").as("src"), lit(0.0).as("cost")) ++
+        (if (withPred) Seq(lit(null).cast("long").as("pred")) else Nil): _*)
       .localCheckpoint(false)
-    var frontier = best
-    var round = 0
-    var converged = false
-    // frees the superseded fold generation's blocks (no-op before round 1;
-    // the FINAL generation is never freed — the caller's result reads it)
-    var freeBest: () => Unit = () => ()
+      .withColumn("__old", lit(null).cast("double"))
     def relax(f: DataFrame): DataFrame =
       f.join(edges, col("cell") === col("__eo"))
-        .select(col("__ed").as("cell"), col("src"), (col("cost") + col("__ew")).as("cost"))
+        .select(Seq(col("__ed").as("cell"), col("src"),
+          (col("cost") + col("__ew")).as("cost")) ++
+          (if (withPred) Seq(col("__eo").as("pred")) else Nil): _*)
     // The fold carries the PRE-fold best as a second agg column: `b` has
     // unique (cell, src) — origins are distinct and every later `b` is a
     // fold output — so `min(cost over b's lane)` IS the old best cost, and
     // the former improved-join (per hop: one broadcast build of the old
     // best + one join; per round at scale: a full shuffle join) collapses
     // into one agg column plus a filter (guide §2.4 — remove shuffles
-    // outright). The improvement test `__old IS NULL OR cost < __old` is
-    // verbatim the old join's filter.
-    def fold(b: DataFrame, r: DataFrame): DataFrame =
-      b.withColumn("__prio", lit(0)).unionByName(r.withColumn("__prio", lit(1)))
+    // outright).
+    // With `withPred` the fold is an argmin with a priority lane: the
+    // accumulated best (prio 0) WINS cost ties against fresh relax
+    // candidates (prio 1). Keeping the already-settled pred on ties makes
+    // the predecessor graph provably acyclic even with zero-weight edges:
+    // a pred is only ever assigned on first appearance (where every
+    // candidate pred is from an older generation) or on a STRICT cost
+    // improvement — two equal-cost neighbors can never flip their preds
+    // onto each other, which would spin the backward walk forever. Fresh
+    // ties still break on the smaller pred id for determinism.
+    // `struct(cost, ...)` ordering compares cost first, so the settled
+    // costs are identical in both variants (spec-pinned); without pred the
+    // fold stays a plain `min(cost)`, one column narrower in the shuffle.
+    def fold(b: DataFrame, r: DataFrame): DataFrame = {
+      val lanes = b.withColumn("__prio", lit(0)).unionByName(r.withColumn("__prio", lit(1)))
         .groupBy(col("cell"), col("src"))
-        .agg(min(col("cost")).as("cost"),
-          min(when(col("__prio") === 0, col("cost"))).as("__old"))
-    def bestOf(f: DataFrame): DataFrame =
-      f.select(col("cell"), col("src"), col("cost"))
+      val old = min(when(col("__prio") === 0, col("cost"))).as("__old")
+      if (withPred)
+        lanes.agg(min(struct(col("cost"), col("__prio"), col("pred"))).as("__m"), old)
+          .select(col("cell"), col("src"), col("__m.cost").as("cost"),
+            col("__m.pred").as("pred"), col("__old"))
+      else lanes.agg(min(col("cost")).as("cost"), old)
+    }
+    def bestOf(f: DataFrame): DataFrame = f.select(stateCols.map(col): _*)
     def improvedOf(f: DataFrame): DataFrame =
-      f.filter(col("__old").isNull || col("cost") < col("__old"))
-        .select(col("cell"), col("src"), col("cost"))
-    while (!converged && round < maxRounds) {
+      bestOf(f.filter(col("__old").isNull || col("cost") < col("__old")))
+    val improved: Fixpoint.Changed = { schema =>
+      val (cost, old) = (schema.fieldIndex("cost"), schema.fieldIndex("__old"))
+      r => r.isNullAt(old) || r.getDouble(cost) < r.getDouble(old)
+    }
+    val res = Fixpoint.converge(best0, () => (), maxRounds, checkpointDir,
+        release = freeEdges) { (state, _) =>
       // hopsPerRound relaxation hops per materialized round: the per-round
       // barrier job is the latency driver at scale (rounds = graph
       // diameter / hopsPerRound) while total shuffle volume is unchanged —
@@ -612,47 +591,61 @@ object H3Graph {
       // fixpoint. Default 2 suits grid-like H3 routing graphs (diameter ~
       // sqrt(N)); pass 1 for low-diameter graphs where the extra per-round
       // plan depth outweighs the saved barriers.
-      var acc = best
-      var front = frontier
-      var freeIntermediates: List[() => Unit] = Nil
-      for (_ <- 1 until hopsPerRound) {
-        val (f, free) = graft.util.Barriers.statSafeFreeable(fold(acc, relax(front)))
-        freeIntermediates ::= free
-        front = improvedOf(f)
-        acc = bestOf(f)
+      val (acc, front, frees) = (1 until hopsPerRound).foldLeft(
+          (bestOf(state), improvedOf(state), List.empty[() => Unit])) {
+        case ((acc, front, frees), _) =>
+          val (f, free) = Barriers.statSafeFreeable(fold(acc, relax(front)))
+          (bestOf(f), improvedOf(f), free :: frees)
       }
-      // ONE barrier materializes the round: the fold-with-__old frame is
-      // checkpointed (reliable every few rounds when checkpointDir is
-      // set — see graft.util.Barriers), its materializing job counts the
-      // improved rows via the accumulator (the convergence check), and
-      // BOTH next-round frames — the best table and the frontier — are
-      // projections of its blocks. Previously the frontier was a second
-      // checkpoint fed by a per-round join against the best table.
-      val (ff, nImproved, freeF) = graft.util.Barriers.roundBarrierCountingFreeable(
-        fold(acc, relax(front)), round, checkpointDir)(
-        r => r.isNullAt(3) || r.getDouble(2) < r.getDouble(3))
-      // that action materialized ff; every generation it superseded — the
-      // previous round's fold and this round's intra-round intermediates —
-      // is dead and its blocks can be freed. Blocks held at any moment:
-      // the current fold generation, not one per round.
-      freeIntermediates.foreach(_())
-      freeBest()
-      freeBest = freeF
-      frontier = improvedOf(ff)
-      converged = nImproved == 0L
-      best = bestOf(ff)
-      round += 1
+      Fixpoint.Round(fold(acc, relax(front)), improved, frees)
     }
-    if (!converged)
+    if (!res.converged)
       org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"shortestPathsIterative stopped after maxRounds=$maxRounds with the " +
-          "frontier still active: reported costs may be suboptimal upper " +
-          "bounds; raise maxRounds")
+        s"iterative SSSP stopped after maxRounds=$maxRounds with the frontier " +
+          "still active: reported costs (and paths, whose walk law cannot " +
+          "detect this) may be suboptimal upper bounds; raise maxRounds")
+    (res.copy(frame = bestOf(res.frame)), clustered, measuredEdges)
+  }
+
+  /** Rows of the walk-reconstruction join's static side (the predecessor
+    * table) that may be broadcast: 4M rows of 3-4 longs ≈ low hundreds of
+    * MB built. */
+  private[graph] val FrontierRowBudget = 4000000L
+
+  /** Whether the walk broadcasts its STATIC side (the predecessor table,
+    * bounded by |nodes| × |origins| rows). |origins| is CALLER-controlled —
+    * a small-regime graph with a large origin set could force a multi-GB
+    * static broadcast AQE's runtime size check would have declined. The
+    * gate therefore also requires
+    * `2 × measuredEdges × |origins|` (nodes ≤ 2·edges, so an upper bound on
+    * the broadcast rows) at or under [[FrontierRowBudget]], compared by
+    * division so a large edge count cannot overflow the product into a
+    * passing gate. Otherwise the walk broadcasts the WALK side (bounded by
+    * the origins × destinations pair set — always slim), one build per
+    * hop. */
+  private[graph] def predsHintOn(clustered: Boolean, measuredEdges: Long,
+      nOrigins: Int): Boolean =
+    !clustered && measuredEdges <= FrontierRowBudget / (2L * math.max(nOrigins, 1))
+
+  /** Distributed SSSP for graphs beyond [[MaxBroadcastEdges]]: iterative
+    * relaxation entirely in DataFrames (see `relaxIterative`). Each
+    * materialized round performs `hopsPerRound` relaxation hops (default 2
+    * — the barrier job is the latency driver at scale, and total shuffle
+    * volume per hop is unchanged), so it converges in <=
+    * ceil(diameter / hopsPerRound) + 1 rounds. Costs match local Dijkstra
+    * exactly (spec-pinned); paths are not materialized on this path —
+    * predecessor reconstruction at this scale belongs in storage, not a
+    * result column. Origins/destinations must be graph nodes (no snapping
+    * on the distributed path). */
+  def shortestPathsIterative(spark: SparkSession, graph: DataFrame, origins: Seq[Long],
+      destinations: Seq[Long], maxRounds: Int = 256,
+      checkpointDir: Option[String] = None, hopsPerRound: Int = 2): DataFrame = {
+    import spark.implicits._
     // the result's lineage reads only the final fold's checkpoint blocks
-    // (best is a projection of them): the edge table is dead
-    freeEdges()
+    val (best, _, _) = relaxIterative(spark, graph, origins, maxRounds,
+      checkpointDir, hopsPerRound, withPred = false)
     val dests = destinations.distinct.toDF("cell")
-    best.join(broadcast(dests), "cell")
+    best.frame.join(broadcast(dests), "cell")
       .select(col("src").as("origin"), col("cell").as("destination"), col("cost"))
   }
 
@@ -672,113 +665,24 @@ object H3Graph {
   def shortestPathsIterativePaths(spark: SparkSession, graph: DataFrame,
       origins: Seq[Long], destinations: Seq[Long], maxRounds: Int = 256,
       checkpointDir: Option[String] = None, hopsPerRound: Int = 2): DataFrame = {
-    require(hopsPerRound >= 1, s"hopsPerRound must be >= 1, got $hopsPerRound")
     import spark.implicits._
-    // Dual-regime edge layout (see CheckpointLayout.ClusterLayoutMinRows):
-    // small graphs keep the plain statSafe frame (the frontier broadcasts
-    // into the relax join under AQE, so the edge table streams anyway).
-    // Past the bound the table is re-clustered ONCE by the relax-join key
-    // so every hop's frontier⋈edges join streams it in place — no
-    // per-hop exchange or sort of the big side; the frontier (slim) is
-    // the only thing that moves. Stats stay dropped in both regimes.
-    val (edges0, freeEdges, clustered, measuredEdges) = iterativeEdges(graph)
-    // static-side hint: built once per materializing job, reused by every
-    // hop's relax join inside it — see frontierHint
-    val edges = frontierHint(spark, clustered)(edges0)
-    var best = origins.distinct.toDF("cell")
-      .select(col("cell"), col("cell").as("src"), lit(0.0).as("cost"),
-        lit(null).cast("long").as("pred"))
-      .localCheckpoint(false)
-    var frontier = best
-    var round = 0
-    var converged = false
-    var freeBest: () => Unit = () => ()
-    def relax(f: DataFrame): DataFrame =
-      f.join(edges, col("cell") === col("__eo"))
-        .select(col("__ed").as("cell"), col("src"),
-          (col("cost") + col("__ew")).as("cost"), col("__eo").as("pred"))
-    // argmin fold with a priority lane: the accumulated best (prio 0)
-    // WINS cost ties against fresh relax candidates (prio 1). Keeping the
-    // already-settled pred on ties makes the predecessor graph provably
-    // acyclic even with zero-weight edges: a pred is only ever assigned
-    // on first appearance (where every candidate pred is from an older
-    // generation) or on a STRICT cost improvement — two equal-cost
-    // neighbors can never flip their preds onto each other, which would
-    // spin the backward walk forever. Fresh ties still break on the
-    // smaller pred id for determinism.
-    // same fused fold as [[shortestPathsIterative]]: `b` has unique
-    // (cell, src), so the old best cost rides the argmin aggregate as a
-    // second column and the former improved-join (one broadcast build per
-    // hop; a shuffle join per round at scale) becomes a filter
-    def fold(b: DataFrame, r: DataFrame): DataFrame =
-      b.withColumn("__prio", lit(0)).unionByName(r.withColumn("__prio", lit(1)))
-        .groupBy(col("cell"), col("src"))
-        .agg(min(struct(col("cost"), col("__prio"), col("pred"))).as("__m"),
-          min(when(col("__prio") === 0, col("cost"))).as("__old"))
-        .select(col("cell"), col("src"), col("__m.cost").as("cost"),
-          col("__m.pred").as("pred"), col("__old"))
-    def bestOf(f: DataFrame): DataFrame =
-      f.select(col("cell"), col("src"), col("cost"), col("pred"))
-    def improvedOf(f: DataFrame): DataFrame =
-      f.filter(col("__old").isNull || col("cost") < col("__old"))
-        .select(col("cell"), col("src"), col("cost"), col("pred"))
-    while (!converged && round < maxRounds) {
-      // same hopsPerRound trade as [[shortestPathsIterative]]: intra-round
-      // hops stay lazy behind statSafe, the last hop pays the barrier; the
-      // Bellman-Ford fixpoint argument is unchanged by the pred column
-      // (argmin rides the same fold)
-      var acc = best
-      var front = frontier
-      var freeIntermediates: List[() => Unit] = Nil
-      for (_ <- 1 until hopsPerRound) {
-        val (f, free) = graft.util.Barriers.statSafeFreeable(fold(acc, relax(front)))
-        freeIntermediates ::= free
-        front = improvedOf(f)
-        acc = bestOf(f)
-      }
-      // one barrier per round: best and frontier are projections of the
-      // fold-with-__old checkpoint, the convergence count rides its
-      // materializing job (see [[shortestPathsIterative]])
-      val (ff, nImproved, freeF) = graft.util.Barriers.roundBarrierCountingFreeable(
-        fold(acc, relax(front)), round, checkpointDir)(
-        r => r.isNullAt(4) || r.getDouble(2) < r.getDouble(4))
-      freeIntermediates.foreach(_())
-      freeBest()
-      freeBest = freeF
-      frontier = improvedOf(ff)
-      converged = nImproved == 0L
-      best = bestOf(ff)
-      round += 1
-    }
-    if (!converged)
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"shortestPathsIterativePaths stopped after maxRounds=$maxRounds with " +
-          "the frontier still active: costs may be suboptimal upper bounds " +
-          "(the walk law cannot detect this — the walk sum matches the " +
-          "suboptimal cost); raise maxRounds")
-    freeEdges()
-    // NOTE on fold's argmin vs the cost-only fold: `struct(cost, pred)`
-    // ordering compares cost first, so the settled costs are identical to
-    // [[shortestPathsIterative]] (spec-pinned); pred adds one column of
-    // shuffle width.
+    val (best, clustered, measuredEdges) = relaxIterative(spark, graph, origins,
+      maxRounds, checkpointDir, hopsPerRound, withPred = true)
     val dests = destinations.distinct.toDF("cell")
     // backward walk: one row per reached (src, destination); `cur` is the
     // cell whose predecessor extends the walk next; done when cur == src
-    var walk = best.join(broadcast(dests), "cell")
+    val walk0 = best.frame.join(broadcast(dests), "cell")
       .select(col("src"), col("cell").as("destination"), col("cost"),
         col("cell").as("cur"), array(col("cell")).as("path"))
       .localCheckpoint(false)
-    var active = 1L
-    var wround = 0
-    var freeWalk: () => Unit = () => ()
-    val preds0 = best.select(col("cell").as("__pc"), col("src").as("__ps"),
+    val preds0 = best.frame.select(col("cell").as("__pc"), col("src").as("__ps"),
       col("pred").as("__pp"))
     // Which side of the pred-hop join broadcasts: the STATIC pred table
     // when it fits the origins budget (built once per job, reused by
     // every hop inside it — see predsHintOn), else the evolving walk
     // side (bounded by the origins × destinations pair set — always
     // slim, but it changes per hop so each hop pays its own build job).
-    val predsB = predsHintOn(spark, clustered, measuredEdges, origins.distinct.size)
+    val predsB = predsHintOn(clustered, measuredEdges, origins.distinct.size)
     val preds = if (predsB) broadcast(preds0) else preds0
     // one backward pred-hop; done rows (cur == src) pass through unchanged,
     // so composing the step is idempotent past the origin
@@ -789,26 +693,20 @@ object H3Graph {
           .otherwise(col("__pp")).as("cur"),
         when(col("cur") === col("src"), col("path"))
           .otherwise(concat(array(col("__pp")), col("path"))).as("path"))
-    while (active > 0 && wround < maxRounds) {
+    // the best-cost generation feeds every walk round and is released once
+    // the walk table is its own checkpoint
+    val walk = Fixpoint.converge(walk0, () => (), maxRounds, checkpointDir,
+        release = best.free) { (w, _) =>
       // hopsPerRound pred-hops per barrier: the walk table is tiny, so the
       // extra hops are additional broadcast joins inside the SAME job —
       // rounds (and their driver-side barrier latency) halve at equal work
-      val stepped = (1 to hopsPerRound).foldLeft(walk)((w, _) => step(w))
-      val (nw, nActive, freeNw) = graft.util.Barriers.roundBarrierCountingFreeable(
-        stepped, wround, checkpointDir)(r => r.getLong(0) != r.getLong(3))
-      freeWalk()
-      freeWalk = freeNw
-      walk = nw
-      active = nActive
-      wround += 1
+      Fixpoint.Round((1 to hopsPerRound).foldLeft(w)((w, _) => step(w)),
+        Fixpoint.differs("src", "cur"))
     }
-    require(active == 0L,
+    require(walk.converged,
       s"path reconstruction did not terminate in $maxRounds rounds " +
         "(cyclic predecessor chain would indicate a relaxation bug)")
-    // the walk table is materialized (its own checkpoint); the best-cost
-    // generation that fed the reconstruction is dead
-    freeBest()
-    walk.select(col("src").as("origin"), col("destination"), col("cost"), col("path"))
+    walk.frame.select(col("src").as("origin"), col("destination"), col("cost"), col("path"))
   }
 
   /** P9: differential routing — costs before and after excluding a cell

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.pipeline.CheckpointLayout
-import graft.util.Barriers
+import graft.util.{Barriers, Fixpoint}
 
 /**
  * Link-graph authority ranking — the URL/domain-ranking step of a crawl
@@ -25,9 +25,10 @@ import graft.util.Barriers
  * Scale shape per iteration: one equi-join of ranks onto the
  * (src-keyed, checkpointed-once) edge+outdeg frame, one map-side-combined
  * sum by dst, one left join back to the node set — all hash-partitioned
- * by node id, no broadcast of anything corpus-sized. Iteration frames
- * pass through [[Barriers.statSafe]] so Catalyst's size-only stats can
- * never elect a stale broadcast inside the loop (the round-9 CC lesson).
+ * by node id, no broadcast of anything corpus-sized. Rounds run through
+ * [[Fixpoint.fixedRounds]], whose stat-safe barriers keep Catalyst's
+ * size-only stats from electing a stale broadcast inside the loop (the
+ * connected-components lesson).
  */
 object Ranks {
 
@@ -93,20 +94,12 @@ object Ranks {
       if (cluster) CheckpointLayout.statSafeKeepingLayout(degFrame)
       else (Barriers.statSafe(degFrame), () => ())
     val (init, tele) = mkInitTele(n)
-    // clustered regime: rounds are EAGER with the superseded generation's
-    // blocks freed each round (a lazy chain pins every generation for the
-    // session) and a reliable checkpoint every ReliableEvery-th round for
-    // executor-loss durability — the CC discipline. Small regime keeps
-    // the lazy adaptive chain (one job, broadcasts per round).
-    var freeRanks: () => Unit = () => ()
-    var ranks =
-      if (cluster) {
-        val (r0, free0) = CheckpointLayout.statSafeKeepingLayout(
-          nodes.select(col("node"), init.as("r")))
-        freeRanks = free0
-        r0
-      } else Barriers.statSafe(nodes.select(col("node"), init.as("r")))
-    for (round <- 0 until iters) {
+    val initRanks = nodes.select(col("node"), init.as("r"))
+    val (ranks0, freeRanks0) =
+      if (cluster) CheckpointLayout.statSafeKeepingLayout(initRanks)
+      else (Barriers.statSafe(initRanks), () => ())
+    Fixpoint.fixedRounds(ranks0, freeRanks0, iters, cluster, checkpointDir,
+        release = () => { freeE(); freeNodes(); freeWithDeg() }) { ranks =>
       // slim-side hints (CheckpointLayout.slimHint): in the small regime
       // the rank frame (|nodes| rows, 2 longs) and the aggregated contrib
       // frame are broadcast-safe by measurement — without the hint every
@@ -117,23 +110,9 @@ object Ranks {
         .select(col("dst").as("node"),
           expr(s"(r * $dampNum) div ($dampDen * deg)").as("c"))
         .groupBy(col("node")).agg(sum(col("c")).as("s"))
-      val next = nodes.join(CheckpointLayout.slimHint(contrib, cluster),
-          Seq("node"), "left")
+      nodes.join(CheckpointLayout.slimHint(contrib, cluster), Seq("node"), "left")
         .select(col("node"), (tele + coalesce(col("s"), lit(0L))).as("r"))
-      if (cluster) {
-        val (nr, free) = CheckpointLayout.roundBarrierKeepingLayout(next, round, checkpointDir)
-        freeRanks() // nr is eager: the generation it superseded is dead
-        freeRanks = free
-        ranks = nr
-      } else ranks = Barriers.statSafe(next)
-    }
-    if (cluster) {
-      // the final ranks generation is its own eager checkpoint: the static
-      // frames are dead and their blocks can be released now (the small
-      // regime's lazy chain still reads them — nothing to free there)
-      freeE(); freeNodes(); freeWithDeg()
-    }
-    ranks.select(col("node"), col("r").as("rank_e9"))
+    }.select(col("node"), col("r").as("rank_e9"))
   }
 
   /**

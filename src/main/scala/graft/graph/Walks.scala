@@ -109,11 +109,11 @@ object Walks {
             // boundary) is dead once it materializes
             val (ck, _) = graft.pipeline.CheckpointLayout.roundBarrierKeepingLayout(
               w0c, Barriers.ReliableEvery - 1, checkpointDir)
-            w0Held.foreach(f => graft.pipeline.CheckpointLayout.freeThunk(f)())
+            w0Held.foreach(f => Barriers.freeThunk(f)())
             ck
           } else {
             w0c.queryExecution.toRdd.count()
-            w0Held.drop(1).foreach(f => graft.pipeline.CheckpointLayout.freeThunk(f)())
+            w0Held.drop(1).foreach(f => Barriers.freeThunk(f)())
             w0c
           }
         freeNodes0(); freeUnd()

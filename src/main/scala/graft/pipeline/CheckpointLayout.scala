@@ -5,6 +5,8 @@ import org.apache.spark.sql.catalyst.expressions.AttributeSet
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions.col
 
+import graft.util.Barriers.{freeAll, freeThunk}
+
 /** Checkpoint a frame so that a `HashPartitioning(key)` + in-partition
   * sort survives into every downstream consumer — the layout a frame
   * needs when it is re-read many times clustered by the same key (an
@@ -183,13 +185,9 @@ object CheckpointLayout {
     * materialize before its own runtime broadcast decision (measured on
     * SSSP: the wall of a tiny-regime loop is stage scheduling, not task
     * work). In the clustered regime the hint would broadcast an unbounded
-    * frame — identity keeps the co-partitioned streaming join.
-    * `graft.loops.slimHint=false` restores the unhinted small-regime plans
-    * (A/B instrumentation; the default is the measured winner). */
+    * frame — identity keeps the co-partitioned streaming join. */
   def slimHint(df: DataFrame, clustered: Boolean): DataFrame =
-    if (clustered ||
-      df.sparkSession.conf.get("graft.loops.slimHint", "true") != "true") df
-    else org.apache.spark.sql.functions.broadcast(df)
+    if (clustered) df else org.apache.spark.sql.functions.broadcast(df)
 
   /** The dual-regime step every loop shares: keep the already-measured
     * statSafe frame when `measured` is at or under the session bound;
@@ -227,21 +225,6 @@ object CheckpointLayout {
     ck.queryExecution.toRdd.count(); ()
   }
 
-  /** Unpersist thunk over every LogicalRDD found in each held frame's
-    * plan. Same contract as `Barriers.freeThunk`: call only after every
-    * consumer is materialized; unexpected shapes leak rather than
-    * misfree. */
-  private def freeAll(held: Seq[DataFrame]): () => Unit =
-    () => held.foreach(f => freeThunk(f)())
-
-  private[graft] def freeThunk(ck: DataFrame): () => Unit =
-    () => try {
-      ck.queryExecution.analyzed.foreach {
-        case lr: LogicalRDD => lr.rdd.unpersist(blocking = false)
-        case _ => ()
-      }
-    } catch { case scala.util.control.NonFatal(_) => () }
-
   /** Stat-safe lazy barrier that KEEPS whatever partitioning/ordering the
     * frame already has — no repartition of its own. For frames whose
     * build is already exchange-free over clustered inputs (a window over
@@ -275,8 +258,8 @@ object CheckpointLayout {
   }
 
   /** EAGER layout-keeping round barrier for the clustered regime of an
-    * iterative loop — [[statSafeKeepingLayout]] plus the
-    * `Barriers.roundBarrier` durability contract: every
+    * iterative loop (reached through `Fixpoint.fixedRounds`) —
+    * [[statSafeKeepingLayout]] plus the round-barrier durability contract: every
     * `Barriers.ReliableEvery`-th round writes a reliable checkpoint that
     * survives executor loss (a localCheckpoint-only chain cannot
     * recompute lost blocks — the CC lesson applied to rank/LPA), other

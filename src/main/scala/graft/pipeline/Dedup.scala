@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.util.Barriers.freeAll
+
 /**
  * Deduplication operators for training-data pipelines: exact, MinHash+LSH,
  * SimHash, and n-gram Jaccard (engine extension beyond the reference).
@@ -107,7 +109,7 @@ object Dedup {
 
   /** [[lshCandidatePairs]] plus the release thunk for the band checkpoint
     * the capped path pins (no-op when uncapped). Same contract as
-    * `CheckpointLayout.freeThunk`: invoke only after every consumer of the
+    * `Barriers.freeThunk`: invoke only after every consumer of the
     * returned frame has materialized — the blocks ARE the frame's lineage.
     * The thunk-less overload above leaves the blocks pinned for the
     * session (the bench/oracle harnesses drop them between queries via
@@ -170,12 +172,6 @@ object Dedup {
 
   /** no-op release thunk (uncapped paths create no checkpoint). */
   private val NoopFree: () => Unit = () => ()
-
-  /** One thunk releasing the MEMORY_AND_DISK blocks behind a set of lazy
-    * localCheckpoints. Contract as `CheckpointLayout.freeThunk`: call only
-    * after every consumer of the frames built over them has materialized. */
-  private def freeAll(held: Seq[DataFrame]): () => Unit =
-    () => held.foreach(f => CheckpointLayout.freeThunk(f)())
 
   /** Exact n-gram Jaccard similarity over the whole input: distinct
     * character `n`-gram sets, every pair whose e4-quantized similarity
@@ -339,7 +335,7 @@ object Dedup {
 
   /** [[ngramJaccardVerify]] plus the release thunk for its internal
     * staging checkpoints (pairs/fingerprints/hash-join/intersections) —
-    * `CheckpointLayout.freeThunk` contract: call only after every consumer
+    * `Barriers.freeThunk` contract: call only after every consumer
     * of the returned frame has materialized. */
   def ngramJaccardVerifyFreeable(df: DataFrame, id: Column, text: Column, n: Int,
       threshold: Double, pairs0: DataFrame): (DataFrame, () => Unit) = {
@@ -479,7 +475,7 @@ object Dedup {
     embeddingNearDupPairsFreeable(df, id, vec, threshold)._1
 
   /** [[embeddingNearDupPairs]] plus the release thunk for the pinned sim
-    * barrier (`CheckpointLayout.freeThunk` contract). */
+    * barrier (`Barriers.freeThunk` contract). */
   def embeddingNearDupPairsFreeable(df: DataFrame, id: Column, vec: Column,
       threshold: Double): (DataFrame, () => Unit) = {
     val a = df.select(id.as("id_a"), vec.cast("array<double>").as("__va"))
@@ -698,16 +694,13 @@ object Dedup {
     val nodeCount = labels0.count()
     val (edges, freeEdges, _) = CheckpointLayout.statSafeReclusterIfOver(
       edges0, freeEdges0, measured = nodeCount, key = "__src")
-    var labels = labels0
-    // frees the superseded label generation once the round's action has
-    // materialized its successor — blocks held at any moment: the current
-    // generation, not one per round (the final generation is never freed;
-    // the caller's result reads it)
-    var freeLabels: () => Unit = freeLabels0
-    val labelType = labels.schema("component").dataType
-    var changed = 1L
-    var round = 0
-    while (changed > 0 && round < maxRounds) {
+    val labelType = labels0.schema("component").dataType
+    // the final labels generation is its own checkpoint, so the edge
+    // table's blocks are released once a round has run (with maxRounds
+    // <= 0 the result is labels0, whose lineage still reads the edges)
+    val res = graft.util.Fixpoint.converge(labels0, freeLabels0, maxRounds,
+        checkpointDir, release = freeEdges) { (state, _) =>
+      val labels = state.select(col("id"), col("component"))
       // each node's PREVIOUS label rides through the relax (labels rows
       // carry it, message rows contribute null; one labels row per id so
       // max() recovers it exactly) — convergence is then read off the same
@@ -715,7 +708,7 @@ object Dedup {
       // job, halving driver-side actions per round
       // NO slim-side hint here, deliberately (r16): unlike the PR/LPA
       // loops (lazy small-regime chains, where the hint wins 1.11-1.17x),
-      // CC materializes every round via roundBarrierCounting and the
+      // CC materializes every round through its counting barrier and the
       // measured A/B read the forced broadcast as a 5-7% LOSS on
       // p13/p24 — AQE's runtime broadcast already serves the per-round
       // jobs here without putting a blocking broadcast build on each
@@ -736,35 +729,22 @@ object Dedup {
       // the representative's own label — min-reachable is preserved (the
       // hop stays inside the component) and propagation distance doubles.
       // Change detection rides the SAME job that materializes the round
-      // barrier (accumulator over the row stream): exactly one action per
-      // round — on slim label frames the loop cost IS job count.
-      val (next, nChanged, freeNext) = graft.util.Barriers.roundBarrierCountingFreeable(
+      // barrier: exactly one action per round — on slim label frames the
+      // loop cost IS job count.
+      graft.util.Fixpoint.Round(
         relaxed.join(
             relaxed.select(col("id").as("__rid"), col("component").as("__rcomp")),
             relaxed("component") === col("__rid"), "left")
           .select(col("id"),
             coalesce(col("__rcomp"), col("component")).as("component"),
             col("__prev")),
-        round, checkpointDir)(r => r.get(1) != r.get(2))
-      changed = nChanged
-      // next is materialized: the round's intermediates and the previous
-      // label generation are dead
-      freeRelaxed(); freeLabels()
-      freeLabels = freeNext
-      labels = next.select(col("id"), col("component"))
-      round += 1
+        graft.util.Fixpoint.differs("component", "__prev"), Seq(freeRelaxed))
     }
-    if (changed > 0)
+    if (!res.converged)
       org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"connectedComponents stopped after maxRounds=$maxRounds with $changed labels " +
+        s"connectedComponents stopped after maxRounds=$maxRounds with labels " +
           "still changing: components may be split; raise maxRounds")
-    // the final labels generation is its own checkpoint — the edge table's
-    // blocks are dead once the loop has converged. Guarded on round > 0:
-    // with maxRounds <= 0 the loop body never ran, labels is still the
-    // lazy labels0 whose lineage READS the edges checkpoint, and freeing
-    // it here would hand the caller a frame over unpersisted blocks.
-    if (round > 0) freeEdges()
-    labels
+    res.frame.select(col("id"), col("component"))
   }
 
   /** Driver union-find over a bounded collected edge list (the
@@ -919,7 +899,7 @@ object Dedup {
       fpp)._1
 
   /** [[incrementalDedup]] plus the release thunk for the pinned
-    * bloom-probe barrier (`CheckpointLayout.freeThunk` contract). */
+    * bloom-probe barrier (`Barriers.freeThunk` contract). */
   def incrementalDedupFreeable(newDf: DataFrame, refDf: DataFrame, newKey: Column,
       refKey: Column, expectedRefItems: Long = 1000000L,
       fpp: Double = 0.01): (DataFrame, () => Unit) = {
@@ -1347,7 +1327,7 @@ object Dedup {
 
   /** [[bandedHammingPairs]] plus the release thunk for the checkpoints the
     * capped path pins (hash projection + band frame) —
-    * `CheckpointLayout.freeThunk` contract: invoke only after every
+    * `Barriers.freeThunk` contract: invoke only after every
     * consumer of the returned frame has materialized. */
   def bandedHammingPairsFreeable(hashed: DataFrame, id: Column, hash: Column,
       bits: Int, maxHamming: Int,

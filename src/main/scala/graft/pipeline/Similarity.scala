@@ -170,9 +170,7 @@ object Similarity {
         .localCheckpoint(false)
       held += cents
     }
-    val frames = held.toList
-    (cents, () => frames.foreach(f =>
-      graft.pipeline.CheckpointLayout.freeThunk(f)()))
+    (cents, graft.util.Barriers.freeAll(held.toList))
   }
 
   /** IVF inverted-list assignment: each vector joins its `nprobe` nearest

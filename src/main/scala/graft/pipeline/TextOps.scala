@@ -887,8 +887,8 @@ object TextOps {
         // f materialized: the plain inner checkpoint and any fallback
         // boundary (featsHeld tail) are dead; f itself (featsHeld head)
         // lives in the returned result's lineage
-        CheckpointLayout.freeThunk(collapsed)()
-        featsHeld.drop(1).foreach(h => CheckpointLayout.freeThunk(h)())
+        graft.util.Barriers.freeThunk(collapsed)()
+        featsHeld.drop(1).foreach(h => graft.util.Barriers.freeThunk(h)())
         f
       }
 

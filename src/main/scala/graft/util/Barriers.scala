@@ -44,57 +44,25 @@ object Barriers {
     if (!matches) sc.setCheckpointDir(dir)
   }
 
-  /** Cut lineage for `df` at iteration `round` (0-based). An existing
-    * session checkpoint dir is respected; otherwise `checkpointDir` is
-    * installed on first reliable use.
-    *
-    * The checkpointed frame is re-wrapped from its RDD to RESET plan
-    * statistics: `Dataset.checkpoint`/`localCheckpoint` rewrite the
-    * origin plan's estimated stats onto the new `LogicalRDD` leaf, and
-    * size-only estimation multiplies child sizes through every join — so
-    * an iterative loop compounds sizeInBytes exponentially round over
-    * round. The estimate is a BigInt: after ~20 rounds it carries
-    * millions of bits and Catalyst burns MINUTES per round inside
-    * BigInteger Toom-Cook multiplication (observed on a 120-cell snake
-    * cluster). Rebuilding from the RDD gives the leaf the constant
-    * `spark.sql.defaultSizeInBytes`, bounding planning cost for any
-    * number of rounds; the blocks behind the RDD are untouched, and
-    * these slim per-round label frames never want stats-driven broadcast
-    * decisions anyway. */
-  /** Unpersist thunk for a checkpointed frame: the persisted RDD is the
-    * one inside the checkpoint's LogicalRDD leaf — unpersisting a derived
-    * wrapper's .rdd would drop a wrapper and leak the actual blocks; an
-    * unexpected plan shape leaks rather than misfrees. */
-  private def freeThunk(cp: DataFrame): () => Unit =
-    () => try cp.queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false); ()
-      case _ => ()
+  /** Unpersist thunk for a checkpointed frame: unpersists every RDD inside
+    * a `LogicalRDD` leaf of its plan — the persisted RDD is the one inside
+    * the checkpoint's leaf; unpersisting a derived wrapper's .rdd would
+    * drop a wrapper and leak the actual blocks. Call only after every
+    * consumer of the frame has been materialized (the truncated lineage
+    * cannot recompute freed blocks); an unexpected plan shape leaks rather
+    * than misfrees. */
+  private[graft] def freeThunk(cp: DataFrame): () => Unit =
+    () => try {
+      cp.queryExecution.analyzed.foreach {
+        case lr: org.apache.spark.sql.execution.LogicalRDD =>
+          lr.rdd.unpersist(blocking = false)
+        case _ => ()
+      }
     } catch { case scala.util.control.NonFatal(_) => () } // leak, don't fail
 
-  def roundBarrier(df: DataFrame, round: Int, checkpointDir: Option[String],
-      eager: Boolean): DataFrame =
-    roundBarrierFreeable(df, round, checkpointDir, eager)._1
-
-  /** [[roundBarrier]] that ALSO returns a thunk unpersisting the
-    * generation's checkpoint blocks — for loops that supersede a full-size
-    * frame every round (SSSP best-cost table): without freeing, every
-    * round's localCheckpoint generation stays pinned in the block manager
-    * for the session. Call the thunk only after every consumer of the
-    * frame has been materialized (the truncated lineage cannot recompute
-    * freed blocks). Reliable-checkpoint rounds return an effective no-op
-    * (their data lives in files, not blocks). */
-  def roundBarrierFreeable(df: DataFrame, round: Int, checkpointDir: Option[String],
-      eager: Boolean): (DataFrame, () => Unit) = {
-    val cp = checkpointDir match {
-      case Some(dir) if round % ReliableEvery == ReliableEvery - 1 =>
-        ensureCheckpointDir(df.sparkSession.sparkContext, dir)
-        df.checkpoint(eager)
-      case _ => df.localCheckpoint(eager)
-    }
-    val out = cp.sparkSession.createDataFrame(cp.rdd, cp.schema)
-    (out, freeThunk(cp))
-  }
+  /** One [[freeThunk]] over every frame in `held`. */
+  private[graft] def freeAll(held: Seq[DataFrame]): () => Unit =
+    () => held.foreach(f => freeThunk(f)())
 
   /** Stat-safe lazy barrier: `localCheckpoint(eager = false)` + re-wrap
     * from the RDD. A plain lazy localCheckpoint KEEPS the origin plan's
@@ -113,8 +81,7 @@ object Barriers {
 
   /** [[statSafe]] that also returns an unpersist thunk, for intra-round
     * intermediates that are dead once the round's action has run — same
-    * call-after-every-consumer-materialized contract as
-    * [[roundBarrierFreeable]]. */
+    * call-after-every-consumer-materialized contract as [[freeThunk]]. */
   def statSafeFreeable(df: DataFrame): (DataFrame, () => Unit) = {
     val cp = df.localCheckpoint(eager = false)
     val out = cp.sparkSession.createDataFrame(cp.rdd, cp.schema)
@@ -137,13 +104,15 @@ object Barriers {
     (out, freeThunk(cp))
   }
 
-  /** [[roundBarrier]] that ALSO counts rows matching `changed` — in the
-    * SAME job that materializes the checkpoint, via an accumulator
-    * threaded through the row stream. An iterative loop's convergence
-    * check then costs zero extra actions per round (previously: one
-    * materializing action + one count action; the count scan is cheap
-    * but on slim label frames per-round job overhead IS the loop cost —
-    * measured 5.6 s of p62's 7.4 s at sf0.1).
+  /** Round barrier for iteration `round` (0-based) that ALSO counts rows
+    * matching `changed` — in the SAME job that materializes the
+    * checkpoint, via an accumulator threaded through the row stream. An
+    * iterative loop's convergence check then costs zero extra actions per
+    * round (previously: one materializing action + one count action; the
+    * count scan is cheap but on slim label frames per-round job overhead
+    * IS the loop cost — measured 5.6 s of p62's 7.4 s at sf0.1). Every
+    * [[ReliableEvery]]-th round under `checkpointDir` writes a reliable
+    * checkpoint; other rounds use `localCheckpoint`.
     *
     * Accumulator semantics under task retries are at-least-once, so the
     * count may OVER-state on a retried task — which only keeps the loop
@@ -151,17 +120,19 @@ object Barriers {
     * convergence (`changed == 0`) is never declared early. The reliable-
     * checkpoint cadence pays its usual second job every
     * [[ReliableEvery]]-th round (RDD `checkpoint` re-runs lineage after
-    * the action); intermediate rounds are exactly one job. */
-  def roundBarrierCounting(df: DataFrame, round: Int,
-      checkpointDir: Option[String])(changed: Row => Boolean): (DataFrame, Long) = {
-    val (out, n, _) = roundBarrierCountingFreeable(df, round, checkpointDir)(changed)
-    (out, n)
-  }
-
-  /** [[roundBarrierCounting]] that also returns the generation's unpersist
-    * thunk (same supersession contract as [[roundBarrierFreeable]]);
-    * reliable-checkpoint rounds already read off files, so their thunk is
-    * a no-op. */
+    * the action); intermediate rounds are exactly one job.
+    *
+    * The frame is re-wrapped from its RDD, which resets its plan
+    * statistics to `spark.sql.defaultSizeInBytes`: checkpoint leaves
+    * otherwise inherit the origin plan's estimate, and size-only
+    * estimation multiplies it through every join, compounding round over
+    * round into BigInts Catalyst spends minutes multiplying.
+    *
+    * Returns the re-wrapped frame, the count, and the generation's
+    * unpersist thunk (call only once every consumer of the frame has been
+    * materialized — for a loop, after its successor's barrier); reliable
+    * rounds already read off files, so their thunk is a no-op. Loops reach
+    * this through [[Fixpoint.converge]]. */
   def roundBarrierCountingFreeable(df: DataFrame, round: Int,
       checkpointDir: Option[String])(changed: Row => Boolean): (DataFrame, Long, () => Unit) = {
     val spark = df.sparkSession

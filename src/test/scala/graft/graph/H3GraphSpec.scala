@@ -351,4 +351,16 @@ class H3GraphSpec extends AnyFunSuite {
     // fewer (or equal) edges after coarsening
     assert(down.length <= g.count())
   }
+
+  test("walk pred-table broadcast budget cannot overflow into a passing gate") {
+    val budget = H3Graph.FrontierRowBudget
+    // 2 × edges × origins just under, at, and just over the budget
+    assert(H3Graph.predsHintOn(clustered = false, budget / 8, nOrigins = 4))
+    assert(!H3Graph.predsHintOn(clustered = false, budget / 8 + 1, nOrigins = 4))
+    assert(!H3Graph.predsHintOn(clustered = true, 1L, nOrigins = 1))
+    // 2 × 2^62 × 4 wraps to 0 in a Long product, which would pass the
+    // budget; the division form rejects it
+    assert(!H3Graph.predsHintOn(clustered = false, 1L << 62, nOrigins = 4))
+    assert(!H3Graph.predsHintOn(clustered = false, Long.MaxValue / 3, nOrigins = 3))
+  }
 }
