@@ -1,8 +1,14 @@
 package graft.df
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.collection.mutable
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import graft.functions._
+import graft.h3.{H3Core, H3Traversal}
+import graft.pipeline.{CheckpointLayout, Dedup}
+import graft.util.{Barriers, Fixpoint}
 
 /**
  * C5: connected components of neighboring cells (reference
@@ -10,11 +16,13 @@ import graft.functions._
  * h3ron-polars/src/algorithm/chunkedarray/cell_clusters.rs:7-81; core
  * union-find h3ron/src/algorithm/cell_clusters.rs:12-151).
  *
- * The reference runs a single-machine union-find over grid-disk probes. At
- * scale that is iterative *label propagation*: every cell starts labeled by
- * itself, each round joins the frontier against the neighbor relation
- * (explode of grid-ring-1, so the join key is the cell id — an equi-join
- * Catalyst shuffles on cell) and adopts the minimum label seen; converged
+ * The reference runs a single-machine union-find over grid-disk probes;
+ * at or under the small-regime bound the engine does the same on the
+ * driver. At scale that is iterative *label propagation*: every cell
+ * starts labeled by itself, each round joins the frontier against the
+ * neighbor relation (explode of grid-ring-1, so the join key is the cell
+ * id — an equi-join Catalyst shuffles on cell) and adopts the minimum
+ * label seen; converged
  * when no label changes. Rounds = component diameter; each round is one
  * shuffle, AQE-sized. Cluster ids are the minimum member cell (stable and
  * deterministic, unlike the reference's arbitrary u32 ids — cluster
@@ -31,9 +39,14 @@ object H3Clusters {
     * plan (no driver actions, no checkpoints) — right when the component
     * diameter is known-bounded (each round propagates labels one hop, and
     * min-labels race ahead, so n >= diameter always suffices).
-    * `fixedRounds = None` loops to convergence through
+    * `fixedRounds = None` measures the distinct keys first. At or under
+    * the small-regime bound (`CheckpointLayout.smallRegime`) it collects
+    * them and runs a driver union-find over ring-1 neighbours
+    * ([[driverLabels]]) — the loop's per-round jobs, not its data, were
+    * its cost there; past the bound it loops to convergence through
     * `graft.util.Fixpoint.converge`, materializing each round and stopping
-    * when no label changes. */
+    * when no label changes. The small regime always returns the converged
+    * components, whatever `maxIterations`. */
   def cellClusters(df: DataFrame, cellCol: String, valueCol: Option[String] = None,
       fixedRounds: Option[Int] = None, maxIterations: Int = 64,
       checkpointDir: Option[String] = None): DataFrame = {
@@ -50,8 +63,7 @@ object H3Clusters {
         (left.columns.toSeq.map(c => col(s"l.$c")) ++
           right.columns.filterNot(keyNames.contains).map(c => col(s"r.$c"))): _*)
     }
-    var labels = df.select(keyCols: _*).distinct()
-      .withColumn("cluster", col(cellCol))
+    val keys = df.select(keyCols: _*).distinct()
 
     // Message-passing round: every cell sends its label to its ring-1
     // neighbors AND to itself (the self-message preserves the label for
@@ -80,55 +92,101 @@ object H3Clusters {
       joinOnKeys(left, agg)
     }
 
+    // The loop regime: label propagation with pointer halving — a label
+    // is itself a member cell's id, so hop once through the
+    // representative's own label (value-matched in the eq-value variant —
+    // a cluster only ever merges equal values, so the rep row with that
+    // value is in the same cluster). Plain propagation converges in
+    // O(diameter) rounds, which a snake-shaped cluster (a coastline at
+    // fine resolution) can push past any fixed budget; the compression
+    // step makes it O(log diameter).
+    def converge(labels0: DataFrame, freeLabels0: () => Unit): DataFrame = {
+      def compress(relaxed: DataFrame): DataFrame = {
+        val reps = relaxed.select(
+          (col(cellCol).as("__rep") +:
+            valueCol.map(c => col(c).as("__repval")).toSeq :+
+            col("cluster").as("__repcluster")): _*)
+        val cond = valueCol.foldLeft(col("cluster") === col("__rep"))(
+          (c, v) => c && (col(v) <=> col("__repval")))
+        relaxed.join(reps, cond, "left")
+          .select((keyCols ++ relaxed.columns.filter(_ == "__prev").map(col) :+
+            coalesce(col("__repcluster"), col("cluster")).as("cluster")): _*)
+      }
+      val res = Fixpoint.converge(labels0, freeLabels0, maxIterations,
+          checkpointDir) { (state, _) =>
+        // the slim relaxed frame is barrier'd BEFORE the compression
+        // self-join: with propagate's join tree on both sides, Catalyst's
+        // size-only stats estimation multiplies the unknown-size leaves
+        // into astronomically wide BigInts (minutes of Toom-Cook per
+        // round); as a leaf, the self-join costs nothing to plan
+        val (relaxed, freeRelaxed) = Barriers.statSafeFreeable(
+          propagate(state.drop("__prev"), carryPrev = true))
+        // each key's previous label rides the frame, so change counting
+        // shares the materializing job — one action per round where the
+        // old exceptAll-vs-prev convergence check paid its own
+        // two-shuffle job
+        Fixpoint.Round(compress(relaxed), Fixpoint.differs("cluster", "__prev"),
+          Seq(freeRelaxed))
+      }
+      if (!res.converged)
+        org.slf4j.LoggerFactory.getLogger(getClass).warn(
+          s"cellClusters stopped after maxIterations=$maxIterations with labels " +
+            "still changing: clusters may be split; raise maxIterations")
+      res.frame.drop("__prev")
+    }
+
     fixedRounds match {
       case Some(n) =>
+        var labels = keys.withColumn("cluster", col(cellCol))
         (1 to n).foreach(_ => labels = propagate(labels))
         // materialize once: downstream consumers would otherwise re-plan
         // and re-execute the n-round join tree per action
-        labels = labels.localCheckpoint(eager = true)
+        joinOnKeys(df, labels.localCheckpoint(eager = true))
       case None =>
-        // pointer halving: a label is itself a member cell's id, so hop
-        // once through the representative's own label (value-matched in
-        // the eq-value variant — a cluster only ever merges equal values,
-        // so the rep row with that value is in the same cluster). Plain
-        // propagation converges in O(diameter) rounds, which a snake-
-        // shaped cluster (a coastline at fine resolution) can push past
-        // any fixed budget; the compression step makes it O(log diameter).
-        def compress(relaxed: DataFrame): DataFrame = {
-          val reps = relaxed.select(
-            (col(cellCol).as("__rep") +:
-              valueCol.map(c => col(c).as("__repval")).toSeq :+
-              col("cluster").as("__repcluster")): _*)
-          val cond = valueCol.foldLeft(col("cluster") === col("__rep"))(
-            (c, v) => c && (col(v) <=> col("__repval")))
-          relaxed.join(reps, cond, "left")
-            .select((keyCols ++ relaxed.columns.filter(_ == "__prev").map(col) :+
-              coalesce(col("__repcluster"), col("cluster")).as("cluster")): _*)
-        }
-        val res = graft.util.Fixpoint.converge(labels, () => (), maxIterations,
-            checkpointDir) { (state, _) =>
-          // the slim relaxed frame is barrier'd BEFORE the compression
-          // self-join: with propagate's join tree on both sides, Catalyst's
-          // size-only stats estimation multiplies the unknown-size leaves
-          // into astronomically wide BigInts (minutes of Toom-Cook per
-          // round); as a leaf, the self-join costs nothing to plan
-          val (relaxed, freeRelaxed) = graft.util.Barriers.statSafeFreeable(
-            propagate(state.drop("__prev"), carryPrev = true))
-          // each key's previous label rides the frame, so change counting
-          // shares the materializing job — one action per round where the
-          // old exceptAll-vs-prev convergence check paid its own
-          // two-shuffle job
-          graft.util.Fixpoint.Round(compress(relaxed),
-            graft.util.Fixpoint.differs("cluster", "__prev"), Seq(freeRelaxed))
-        }
-        if (!res.converged)
-          org.slf4j.LoggerFactory.getLogger(getClass).warn(
-            s"cellClusters stopped after maxIterations=$maxIterations with labels " +
-              "still changing: clusters may be split; raise maxIterations")
-        labels = res.frame.drop("__prev")
+        // the count doubles as the key set's materialization, which the
+        // loop's first round would otherwise pay
+        val (measuredKeys, freeKeys) = Barriers.statSafeFreeable(keys)
+        val labels =
+          if (CheckpointLayout.smallRegime(df.sparkSession, measuredKeys.count())) {
+            val l = driverLabels(measuredKeys, cellCol, valueCol)
+            freeKeys()
+            l
+          } else converge(measuredKeys.withColumn("cluster", col(cellCol)), freeKeys)
+        joinOnKeys(df, labels)
     }
-    joinOnKeys(df,
-      labels.select((col(cellCol) +: valueCol.map(col).toSeq :+ col("cluster")): _*))
+  }
+
+  /** The small regime of [[cellClusters]]: the collected distinct keys
+    * linked by a driver union-find over ring-1 neighbours, one per value
+    * group in the eq-value variant (Spark groups the values, so they
+    * compare as the loop's null-safe group keys do). Each cluster id is
+    * its minimum member cell; a NULL or invalid cell stays a singleton,
+    * and a NULL cell gets a NULL cluster id. */
+  private def driverLabels(keys: DataFrame, cellCol: String,
+      valueCol: Option[String]): DataFrame = {
+    val spark = keys.sparkSession
+    val groups: Seq[(Seq[Any], Seq[Row])] = valueCol match {
+      case None => Seq((Nil, keys.collect().toSeq))
+      case Some(v) =>
+        keys.groupBy(col(v)).agg(collect_list(struct(col(cellCol))).as("__cells"))
+          .collect().toSeq.map(r => (Seq(r.get(0)), r.getSeq[Row](1)))
+    }
+    val rows = groups.flatMap { case (value, cellRows) =>
+      val (nulls, valid) = cellRows.partition(_.isNullAt(0))
+      val cells = valid.map(_.getLong(0))
+      val present = mutable.LongMap(cells.map(_ -> ()): _*)
+      val uf = new Dedup.MinRootUnionFind
+      cells.foreach { c =>
+        uf.add(c)
+        if (H3Core.isValidCell(c))
+          H3Traversal.gridRing(c, 1).foreach(n => if (present.contains(n)) uf.union(c, n))
+      }
+      cells.map(c => Row.fromSeq(c +: value :+ uf.find(c))) ++
+        nulls.map(_ => Row.fromSeq(null +: value :+ null))
+    }
+    val schema = StructType(keys.schema.fields :+ StructField("cluster", LongType, nullable = true))
+    spark.createDataFrame(
+      spark.sparkContext.parallelize(rows, math.max(1, math.min(rows.size, 32))), schema)
   }
 
   /** C8: aggregate bounding rect of all cells in a column — one row

@@ -2,6 +2,7 @@ package graft.graph
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.RowEncoder
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.functions._
@@ -241,12 +242,17 @@ object H3Graph {
       s"graph exceeds $maxEdges edges - beyond the broadcast-adjacency routing path. " +
         "Use shortestPathsIterative (distributed relaxation) for graphs this size, " +
         "or downsample() to a coarser resolution first")
+    adjacencyOf(rows)
+  }
+
+  /** (origin, destination, weight) rows of longs and a double grouped by
+    * origin, neighbors in destination order; duplicate edges are kept. */
+  private def adjacencyOf(rows: Array[Row]): Map[Long, Array[(Long, Double)]] =
     rows
       .groupBy(_.getLong(0))
       .map { case (o, rs) =>
         o -> rs.map(r => (r.getLong(1), r.getDouble(2))).sortBy(_._1)
       }
-  }
 
   /** A contracted fork-free chain (the reference's `LongEdge`,
     * longedge.rs:37-47): entering the chain at its head via `firstHop`
@@ -478,33 +484,66 @@ object H3Graph {
     }
   }
 
-  /** Shared relaxation loop of both iterative SSSP variants, Pregel-style
-    * entirely in DataFrames and run through [[Fixpoint.converge]]. Each
-    * generation is the fold frame `(cell, src, cost[, pred], __old)`: the
-    * best known cost from origin `src` to `cell` (plus, with `withPred`,
-    * the argmin predecessor) and the pre-fold best `__old`. The best table
-    * and the improved frontier are both projections of it, and the
-    * convergence count (improved rows) rides its materializing job. Each
-    * round joins the frontier against the edge table and keeps
-    * per-(cell, src) minima with a map-side partial min. Returns the final
-    * generation projected to the best table, the layout regime, and the
-    * measured edge count.
+  /** Distributed SSSP for graphs beyond [[MaxBroadcastEdges]]: the
+    * synchronous Bellman-Ford relaxation of every origin at once. Each
+    * materialized round of the loop performs `hopsPerRound` relaxation
+    * hops (default 2 — the barrier job is the latency driver at scale,
+    * and total shuffle volume per hop is unchanged), so it converges in
+    * <= ceil(diameter / hopsPerRound) + 1 rounds; at or under the
+    * small-regime bound the same relaxation runs as one operator (see
+    * `iterativeSssp`). Costs match local Dijkstra exactly (spec-pinned);
+    * paths are not materialized here — predecessor reconstruction at this
+    * scale belongs in storage, not a result column. Origins/destinations
+    * must be graph nodes (no snapping on the distributed path). */
+  def shortestPathsIterative(spark: SparkSession, graph: DataFrame, origins: Seq[Long],
+      destinations: Seq[Long], maxRounds: Int = 256,
+      checkpointDir: Option[String] = None, hopsPerRound: Int = 2): DataFrame =
+    iterativeSssp(spark, graph, origins, destinations, maxRounds, checkpointDir,
+      hopsPerRound, withPaths = false)
+
+  /** [[shortestPathsIterative]] with P12 path parity: the relaxation
+    * additionally threads a PREDECESSOR (argmin via
+    * `min(struct(cost, pred))` — ties break on the smaller pred cell, so
+    * the walk is deterministic), and paths are reconstructed after
+    * convergence by walking the predecessors backward — <= diameter
+    * rounds, no driver state, in the loop regime. Each reconstruction
+    * round joins the small (origins x destinations)-row walk table against
+    * the best-cost table; the walk side is broadcast, so the big table is
+    * scanned, never shuffled. That makes reconstruction cost `path-length
+    * x best-scan` — right for routing a bounded pair set; for bulk path
+    * materialization at 100 TB, persist the `(cell, src, pred)` table to
+    * parquet and walk it in storage instead (the reference's Path
+    * contract, path.rs:13-266, is per-query too). Output: `(origin,
+    * destination, cost, path)`. */
+  def shortestPathsIterativePaths(spark: SparkSession, graph: DataFrame,
+      origins: Seq[Long], destinations: Seq[Long], maxRounds: Int = 256,
+      checkpointDir: Option[String] = None, hopsPerRound: Int = 2): DataFrame =
+    iterativeSssp(spark, graph, origins, destinations, maxRounds, checkpointDir,
+      hopsPerRound, withPaths = true)
+
+  /** Both iterative SSSP variants. The filtered edge table is measured
+    * once; its row count picks the regime against
+    * `CheckpointLayout.smallRegime` (the frontier's size is unknowable
+    * upfront, so the edge count stands in for it):
+    *  - small: the edges are collected into a broadcast adjacency and
+    *    [[relaxLocal]] replays the loop's relaxation and walk, origins
+    *    fanned over tasks, in ONE job — below the bound each hop of the
+    *    loop costs Spark jobs, not data (`checkpointDir` is unused);
+    *  - past the bound: the table is re-clustered ONCE by the relax-join
+    *    key, so every hop's frontier⋈edges join streams it in place and
+    *    the frontier (slim) is the only thing that moves, and the
+    *    [[Fixpoint]] loop runs ([[relaxIterative]], then [[walkPaths]]).
     *
     * Edges: null-endpoint OR null-weight rows are not edges (a null
     * destination folds a phantom null cell into the best-cost table; a
     * null weight makes `min(cost)` carry nulls, so the frontier's
     * improved-filter keeps the row forever and the loop never converges —
     * and the paths variant's `min(struct(cost, ...))` argmin sorts a null
-    * cost FIRST, letting it beat real finite paths). The frontier's size
-    * is unknowable upfront, so the edge-frame row count gates the layout
-    * regime as a proxy (see CheckpointLayout.ClusterLayoutMinRows): small
-    * graphs keep the plain statSafe frame; past the bound the table is
-    * re-clustered ONCE by the relax-join key so every hop's
-    * frontier⋈edges join streams it in place — the frontier (slim) is the
-    * only thing that moves. Stats stay dropped in both regimes. */
-  private def relaxIterative(spark: SparkSession, graph: DataFrame, origins: Seq[Long],
-      maxRounds: Int, checkpointDir: Option[String], hopsPerRound: Int,
-      withPred: Boolean): (Fixpoint.Result, Boolean, Long) = {
+    * cost FIRST, letting it beat real finite paths). Origins are not
+    * snapped: every origin is its own row at cost 0. */
+  private def iterativeSssp(spark: SparkSession, graph: DataFrame, origins: Seq[Long],
+      destinations: Seq[Long], maxRounds: Int, checkpointDir: Option[String],
+      hopsPerRound: Int, withPaths: Boolean): DataFrame = {
     require(hopsPerRound >= 1, s"hopsPerRound must be >= 1, got $hopsPerRound")
     import spark.implicits._
     val (e0, freeE0) = Barriers.statSafeFreeable(
@@ -513,21 +552,148 @@ object H3Graph {
         .filter(col("__eo").isNotNull && col("__ed").isNotNull &&
           col("__ew").isNotNull))
     val measuredEdges = e0.count()
-    val (edges0, freeEdges, clustered) = CheckpointLayout.statSafeReclusterIfOver(
-      e0, freeE0, measured = measuredEdges, key = "__eo")
-    // Small-regime broadcast hint for the relax join's STATIC side (the
-    // edge table): below the cluster bound the edge count is MEASURED ≤
-    // ClusterLayoutMinRows (≈ tens of MB of 3 longs), so the hint removes
-    // the per-hop edge-side shuffle stage AQE would otherwise materialize
-    // before its own runtime broadcast decision (measured at sf0.1: p116
-    // ran 172 jobs for 0.18 s of parallel task work — the wall was stage
-    // scheduling). Hinting the STATIC side rather than the evolving
-    // frontier matters for the same reason: a frontier hint paid one
-    // broadcast-BUILD job per hop, while the edge broadcast is built once
-    // per materializing job and REUSED by every hop's join inside it
-    // (exchange reuse over the identical subtree). Past the bound the
-    // clustered regime keeps the co-partitioned streaming join, hint-free.
-    val edges = CheckpointLayout.slimHint(edges0, clustered)
+    if (CheckpointLayout.smallRegime(spark, measuredEdges)) {
+      val adj = adjacencyOf(e0.select(col("__eo").cast("long"), col("__ed").cast("long"),
+        col("__ew")).collect())
+      freeE0()
+      relaxLocal(spark, adj, origins, destinations, maxRounds, hopsPerRound, withPaths)
+    } else {
+      val (edges, freeEdges, _) = CheckpointLayout.statSafeReclusterIfOver(
+        e0, freeE0, measured = measuredEdges, key = "__eo")
+      val best = relaxIterative(spark, edges, freeEdges, origins, maxRounds,
+        checkpointDir, hopsPerRound, withPred = withPaths)
+      val dests = destinations.distinct.toDF("cell")
+      // the result's lineage reads only the final fold's checkpoint blocks
+      if (withPaths) walkPaths(best, dests, maxRounds, checkpointDir, hopsPerRound)
+      else best.frame.join(broadcast(dests), "cell")
+        .select(col("src").as("origin"), col("cell").as("destination"), col("cost"))
+    }
+  }
+
+  private def warnRoundCap(maxRounds: Int): Unit =
+    org.slf4j.LoggerFactory.getLogger(getClass).warn(
+      s"iterative SSSP stopped after maxRounds=$maxRounds with the frontier " +
+        "still active: reported costs (and paths, whose walk law cannot " +
+        "detect this) may be suboptimal upper bounds; raise maxRounds")
+
+  private def requireWalked(walked: Boolean, maxRounds: Int): Unit =
+    require(walked,
+      s"path reconstruction did not terminate in $maxRounds rounds " +
+        "(cyclic predecessor chain would indicate a relaxation bug)")
+
+  /** A row's cost is an improvement over its pre-fold best: Spark's
+    * double ordering (NaN is the largest value, -0.0 equals 0.0), as the
+    * loop's `cost < __old` filter evaluates it. */
+  private def cheaper(cost: Double, old: Double): Boolean =
+    SQLOrderingUtil.compareDoubles(cost, old) < 0
+
+  /** One origin's lane of the synchronous relaxation: each reached cell's
+    * best cost and predecessor (the origin has none unless a negative
+    * cycle improves it) and whether a hop improved nothing. */
+  private final case class Lane(cost: mutable.LongMap[Double],
+      pred: mutable.LongMap[Long], converged: Boolean) {
+    /** The backward predecessor walk origin..dest, or None when it needs
+      * more than `maxSteps` hops (or never reaches the origin). */
+    def walk(origin: Long, dest: Long, maxSteps: Long): Option[Array[Long]] = {
+      var path = List(dest)
+      var steps = 0L
+      val limit = math.min(maxSteps, cost.size.toLong) // longer is a cycle
+      while (path.head != origin && steps < limit) { path = pred(path.head) :: path; steps += 1 }
+      if (path.head == origin) Some(path.toArray) else None
+    }
+  }
+
+  /** The loop's fold, replayed hop by hop for one origin for at most
+    * `maxHops` hops. The frontier is the set of cells improved in the
+    * previous hop (the origin first); a candidate costs `cost + weight`;
+    * among fresh candidates the cheaper wins, then the smaller pred; the
+    * settled row wins cost ties; a cell improves when it is new or its
+    * cost drops strictly ([[cheaper]]). Lanes are independent — the loop
+    * groups by (cell, src) — and a lane whose frontier empties stays
+    * fixed, so replaying every lane to its own end equals the loop's
+    * global stop. */
+  private def relaxLane(adj: Map[Long, Array[(Long, Double)]], origin: Long,
+      maxHops: Long): Lane = {
+    val cost = mutable.LongMap(origin -> 0.0)
+    val pred = mutable.LongMap.empty[Long]
+    var frontier = Array(origin)
+    var hops = 0L
+    var converged = false
+    while (!converged && hops < maxHops) {
+      val cand = mutable.LongMap.empty[(Double, Long)]
+      for (u <- frontier; (v, w) <- adj.getOrElse(u, Array.empty[(Long, Double)])) {
+        val c = cost(u) + w
+        val wins = cand.get(v).forall { case (c0, p0) =>
+          val o = SQLOrderingUtil.compareDoubles(c, c0)
+          o < 0 || (o == 0 && u < p0)
+        }
+        if (wins) cand(v) = (c, u)
+      }
+      val improved = mutable.ArrayBuilder.make[Long]
+      cand.foreach { case (v, (c, p)) =>
+        if (cost.get(v).forall(cheaper(c, _))) { cost(v) = c; pred(v) = p; improved += v }
+      }
+      frontier = improved.result()
+      hops += 1
+      converged = frontier.isEmpty
+    }
+    Lane(cost, pred, converged)
+  }
+
+  /** The small regime of both iterative SSSP variants as one operator: the
+    * adjacency is broadcast, origins fan out over tasks like
+    * [[shortestPathsLocal]], and each task replays its origins' lanes
+    * ([[relaxLane]]) and walks ([[Lane.walk]]) under the loop's hop cap
+    * `maxRounds × hopsPerRound`. The lanes come back to the driver in that
+    * one job, so the round-cap warning and the walk's `require` fire at
+    * call time, as the loop's do. The rows are bounded by the
+    * origins × destinations pair set the loop's walk table already
+    * broadcast; the result is a parallelized frame, so nothing stays
+    * pinned. */
+  private def relaxLocal(spark: SparkSession, adj: Map[Long, Array[(Long, Double)]],
+      origins: Seq[Long], destinations: Seq[Long], maxRounds: Int, hopsPerRound: Int,
+      withPaths: Boolean): DataFrame = {
+    val sc = spark.sparkContext
+    val maxHops = math.max(maxRounds, 0).toLong * hopsPerRound
+    val dests = destinations.distinct
+    val os = origins.distinct
+    val bAdj = sc.broadcast(adj)
+    // per origin: lane converged, every walk reached its origin, rows
+    val lanes = sc.parallelize(os, math.max(1, math.min(os.size, 32))).map { o =>
+      val lane = relaxLane(bAdj.value, o, maxHops)
+      val reached = dests.filter(lane.cost.contains)
+      if (!withPaths) (lane.converged, true, reached.map(d => Row(o, d, lane.cost(d))))
+      else {
+        val walks = reached.map(d => d -> lane.walk(o, d, maxHops))
+        (lane.converged, walks.forall(_._2.isDefined), walks.collect {
+          case (d, Some(path)) => Row(o, d, lane.cost(d), path)
+        })
+      }
+    }.collect()
+    bAdj.destroy()
+    // the loop runs no round when maxRounds <= 0, so it never converges
+    if (maxRounds < 1 || !lanes.forall(_._1)) warnRoundCap(maxRounds)
+    if (withPaths) requireWalked(maxRounds >= 1 && lanes.forall(_._2), maxRounds)
+    val rows = lanes.flatMap(_._3).toSeq
+    spark.createDataFrame(sc.parallelize(rows, math.max(1, math.min(rows.size, 32))),
+      StructType(if (withPaths) pathSchema.fields else pathSchema.fields.take(3)))
+  }
+
+  /** The loop regime's relaxation, Pregel-style entirely in DataFrames
+    * and run through [[Fixpoint.converge]] over the clustered edge table
+    * (released once a round has run). Each generation is the fold frame
+    * `(cell, src, cost[, pred], __old)`: the best known cost from origin
+    * `src` to `cell` (plus, with `withPred`, the argmin predecessor) and
+    * the pre-fold best `__old`. The best table and the improved frontier
+    * are both projections of it, and the convergence count (improved
+    * rows) rides its materializing job. Each round joins the frontier
+    * against the edge table and keeps per-(cell, src) minima with a
+    * map-side partial min. Returns the final generation projected to the
+    * best table. Stats stay dropped. */
+  private def relaxIterative(spark: SparkSession, edges: DataFrame, freeEdges: () => Unit,
+      origins: Seq[Long], maxRounds: Int, checkpointDir: Option[String], hopsPerRound: Int,
+      withPred: Boolean): Fixpoint.Result = {
+    import spark.implicits._
     val stateCols = Seq("cell", "src", "cost") ++ (if (withPred) Seq("pred") else Nil)
     // the origins are their own first frontier: a null pre-fold best marks
     // every row improved (the projection sits above the checkpoint, which
@@ -576,7 +742,7 @@ object H3Graph {
       bestOf(f.filter(col("__old").isNull || col("cost") < col("__old")))
     val improved: Fixpoint.Changed = { schema =>
       val (cost, old) = (schema.fieldIndex("cost"), schema.fieldIndex("__old"))
-      r => r.isNullAt(old) || r.getDouble(cost) < r.getDouble(old)
+      r => r.isNullAt(old) || cheaper(r.getDouble(cost), r.getDouble(old))
     }
     val res = Fixpoint.converge(best0, () => (), maxRounds, checkpointDir,
         release = freeEdges) { (state, _) =>
@@ -599,94 +765,26 @@ object H3Graph {
       }
       Fixpoint.Round(fold(acc, relax(front)), improved, frees)
     }
-    if (!res.converged)
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"iterative SSSP stopped after maxRounds=$maxRounds with the frontier " +
-          "still active: reported costs (and paths, whose walk law cannot " +
-          "detect this) may be suboptimal upper bounds; raise maxRounds")
-    (res.copy(frame = bestOf(res.frame)), clustered, measuredEdges)
+    if (!res.converged) warnRoundCap(maxRounds)
+    res.copy(frame = bestOf(res.frame))
   }
 
-  /** Rows of the walk-reconstruction join's static side (the predecessor
-    * table) that may be broadcast: 4M rows of 3-4 longs ≈ low hundreds of
-    * MB built. */
-  private[graph] val FrontierRowBudget = 4000000L
-
-  /** Whether the walk broadcasts its STATIC side (the predecessor table,
-    * bounded by |nodes| × |origins| rows). |origins| is CALLER-controlled —
-    * a small-regime graph with a large origin set could force a multi-GB
-    * static broadcast AQE's runtime size check would have declined. The
-    * gate therefore also requires
-    * `2 × measuredEdges × |origins|` (nodes ≤ 2·edges, so an upper bound on
-    * the broadcast rows) at or under [[FrontierRowBudget]], compared by
-    * division so a large edge count cannot overflow the product into a
-    * passing gate. Otherwise the walk broadcasts the WALK side (bounded by
-    * the origins × destinations pair set — always slim), one build per
-    * hop. */
-  private[graph] def predsHintOn(clustered: Boolean, measuredEdges: Long,
-      nOrigins: Int): Boolean =
-    !clustered && measuredEdges <= FrontierRowBudget / (2L * math.max(nOrigins, 1))
-
-  /** Distributed SSSP for graphs beyond [[MaxBroadcastEdges]]: iterative
-    * relaxation entirely in DataFrames (see `relaxIterative`). Each
-    * materialized round performs `hopsPerRound` relaxation hops (default 2
-    * — the barrier job is the latency driver at scale, and total shuffle
-    * volume per hop is unchanged), so it converges in <=
-    * ceil(diameter / hopsPerRound) + 1 rounds. Costs match local Dijkstra
-    * exactly (spec-pinned); paths are not materialized on this path —
-    * predecessor reconstruction at this scale belongs in storage, not a
-    * result column. Origins/destinations must be graph nodes (no snapping
-    * on the distributed path). */
-  def shortestPathsIterative(spark: SparkSession, graph: DataFrame, origins: Seq[Long],
-      destinations: Seq[Long], maxRounds: Int = 256,
-      checkpointDir: Option[String] = None, hopsPerRound: Int = 2): DataFrame = {
-    import spark.implicits._
-    // the result's lineage reads only the final fold's checkpoint blocks
-    val (best, _, _) = relaxIterative(spark, graph, origins, maxRounds,
-      checkpointDir, hopsPerRound, withPred = false)
-    val dests = destinations.distinct.toDF("cell")
-    best.frame.join(broadcast(dests), "cell")
-      .select(col("src").as("origin"), col("cell").as("destination"), col("cost"))
-  }
-
-  /** [[shortestPathsIterative]] with P12 path parity: the relaxation
-    * additionally threads a PREDECESSOR column (argmin via
-    * `min(struct(cost, pred))` — ties break on the smaller pred cell, so
-    * the walk is deterministic), and paths are reconstructed after
-    * convergence by an iterative backward walk — ≤ diameter rounds, no
-    * driver state. Each reconstruction round joins the small
-    * (origins x destinations)-row walk table against the best-cost table;
-    * the walk side is broadcast, so the big table is scanned, never
-    * shuffled. That makes reconstruction cost `path-length x best-scan` —
-    * right for routing a bounded pair set; for bulk path materialization
-    * at 100 TB, persist the `(cell, src, pred)` table to parquet and walk
-    * it in storage instead (the reference's Path contract, path.rs:13-266,
-    * is per-query too). Output: `(origin, destination, cost, path)`. */
-  def shortestPathsIterativePaths(spark: SparkSession, graph: DataFrame,
-      origins: Seq[Long], destinations: Seq[Long], maxRounds: Int = 256,
-      checkpointDir: Option[String] = None, hopsPerRound: Int = 2): DataFrame = {
-    import spark.implicits._
-    val (best, clustered, measuredEdges) = relaxIterative(spark, graph, origins,
-      maxRounds, checkpointDir, hopsPerRound, withPred = true)
-    val dests = destinations.distinct.toDF("cell")
-    // backward walk: one row per reached (src, destination); `cur` is the
-    // cell whose predecessor extends the walk next; done when cur == src
+  /** The loop regime's path reconstruction: an iterative backward walk
+    * over the predecessors in `best`, one row per reached (src,
+    * destination); `cur` is the cell whose predecessor extends the walk
+    * next, done when cur == src. The walk side (bounded by the origins ×
+    * destinations pair set — always slim) is broadcast each hop. */
+  private def walkPaths(best: Fixpoint.Result, dests: DataFrame, maxRounds: Int,
+      checkpointDir: Option[String], hopsPerRound: Int): DataFrame = {
     val walk0 = best.frame.join(broadcast(dests), "cell")
       .select(col("src"), col("cell").as("destination"), col("cost"),
         col("cell").as("cur"), array(col("cell")).as("path"))
       .localCheckpoint(false)
-    val preds0 = best.frame.select(col("cell").as("__pc"), col("src").as("__ps"),
+    val preds = best.frame.select(col("cell").as("__pc"), col("src").as("__ps"),
       col("pred").as("__pp"))
-    // Which side of the pred-hop join broadcasts: the STATIC pred table
-    // when it fits the origins budget (built once per job, reused by
-    // every hop inside it — see predsHintOn), else the evolving walk
-    // side (bounded by the origins × destinations pair set — always
-    // slim, but it changes per hop so each hop pays its own build job).
-    val predsB = predsHintOn(clustered, measuredEdges, origins.distinct.size)
-    val preds = if (predsB) broadcast(preds0) else preds0
     // one backward pred-hop; done rows (cur == src) pass through unchanged,
     // so composing the step is idempotent past the origin
-    def step(w: DataFrame): DataFrame = (if (predsB) w else broadcast(w))
+    def step(w: DataFrame): DataFrame = broadcast(w)
       .join(preds, col("cur") === col("__pc") && col("src") === col("__ps"), "left")
       .select(col("src"), col("destination"), col("cost"),
         when(col("cur") === col("src"), col("cur"))
@@ -703,9 +801,7 @@ object H3Graph {
       Fixpoint.Round((1 to hopsPerRound).foldLeft(w)((w, _) => step(w)),
         Fixpoint.differs("src", "cur"))
     }
-    require(walk.converged,
-      s"path reconstruction did not terminate in $maxRounds rounds " +
-        "(cyclic predecessor chain would indicate a relaxation bug)")
+    requireWalked(walk.converged, maxRounds)
     walk.frame.select(col("src").as("origin"), col("destination"), col("cost"), col("path"))
   }
 

@@ -64,6 +64,14 @@ object CheckpointLayout {
     * whose slim-side size is unknowable upfront (SSSP's frontier, CC's
     * label set) gate on their big-frame row count as a proxy and say so.
     *
+    * The same bound also selects the one-operator small regime of the
+    * loops whose whole input fits the driver: iterative SSSP (measured
+    * edge rows) and `cellClusters(fixedRounds = None)` (measured distinct
+    * keys) collect their input once and replace the job-per-hop loop with
+    * one broadcast-adjacency job or a driver union-find (see
+    * [[smallRegime]]); past the bound they run their `Fixpoint` loop,
+    * SSSP always clustered.
+    *
     * Skew trade the clustered regime accepts: the co-partitioned round
     * join loses AQE's runtime skew-splitting, so a celebrity key's
     * partition becomes one long task instead of being split. The
@@ -75,10 +83,19 @@ object CheckpointLayout {
   val ClusterLayoutMinRows = 1000000L
 
   /** [[ClusterLayoutMinRows]], overridable per session via the
-    * `graft.layout.clusterMinRows` conf (0 forces the clustered regime —
-    * used by plan-shape specs; a huge value disables it). */
+    * `graft.layout.clusterMinRows` conf (0 forces the clustered regime and
+    * the loops — used by plan-shape and regime-equivalence specs; a huge
+    * value disables it). */
   def clusterMinRows(spark: SparkSession): Long =
     spark.conf.get("graft.layout.clusterMinRows", ClusterLayoutMinRows.toString).toLong
+
+  /** Whether `measured` rows are in the small regime: at or under the
+    * session's [[clusterMinRows]], which must be positive (0 forces the
+    * clustered regime even for an empty frame). */
+  def smallRegime(spark: SparkSession, measured: Long): Boolean = {
+    val bound = clusterMinRows(spark)
+    bound > 0 && measured <= bound
+  }
 
   /** AQE off for the capture via a THROWAWAY SESSION CLONE, never by
     * mutating the shared session conf. `InsertAdaptiveSparkPlan` reads the
@@ -203,10 +220,7 @@ object CheckpointLayout {
   def statSafeReclusterIfOver(frame0: DataFrame, free0: () => Unit,
       measured: Long, key: String,
       distinct: Boolean = false): (DataFrame, () => Unit, Boolean) = {
-    // bound == 0 FORCES the clustered regime (the documented conf
-    // contract plan-shape specs rely on), even for an empty frame
-    val bound = clusterMinRows(frame0.sparkSession)
-    if (bound > 0 && measured <= bound) (frame0, free0, false)
+    if (smallRegime(frame0.sparkSession, measured)) (frame0, free0, false)
     else {
       val (c, f) = statSafeClusteredBy(frame0, key, distinct)
       materialize(c) // then free the original

@@ -747,10 +747,32 @@ object Dedup {
     res.frame.select(col("id"), col("component"))
   }
 
+  /** Driver union-find whose every root is its component's minimum id:
+    * a larger root links under a smaller one, so `find` returns exactly
+    * the min-label fixpoint of the distributed loops. Shared by the
+    * driver regimes of [[connectedComponents]] and
+    * `H3Clusters.cellClusters`. */
+  private[graft] final class MinRootUnionFind {
+    private val parent = scala.collection.mutable.LongMap.empty[Long]
+    def add(x: Long): Unit = if (!parent.contains(x)) parent(x) = x
+    def find(x: Long): Long = {
+      var r = x
+      while (parent(r) != r) r = parent(r)
+      var c = x
+      while (c != r) { val n = parent(c); parent(c) = r; c = n }
+      r
+    }
+    def union(a: Long, b: Long): Unit = {
+      add(a); add(b)
+      val ra = find(a); val rb = find(b)
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    /** Every id added so far, ascending. */
+    def ids: Array[Long] = parent.keysIterator.toArray.sorted
+  }
+
   /** Driver union-find over a bounded collected edge list (the
-    * [[connectedComponents]] small-graph regime). Larger roots link under
-    * smaller ones, so each component's final root is its minimum id —
-    * exactly the distributed loop's min-label fixpoint. */
+    * [[connectedComponents]] small-graph regime). */
   private def driverComponents(edges: DataFrame,
       idType: org.apache.spark.sql.types.DataType): DataFrame = {
     val spark = edges.sparkSession
@@ -758,28 +780,13 @@ object Dedup {
       case org.apache.spark.sql.types.IntegerType => r.getInt(i).toLong
       case _ => r.getLong(i)
     }
-    val parent = new java.util.HashMap[Long, Long]()
-    def find(x: Long): Long = {
-      var r = x
-      while (parent.get(r) != r) r = parent.get(r)
-      var c = x
-      while (c != r) { val n = parent.get(c); parent.put(c, r); c = n }
-      r
-    }
-    edges.collect().foreach { row =>
-      val a = asLong(row, 0); val b = asLong(row, 1)
-      parent.putIfAbsent(a, a)
-      parent.putIfAbsent(b, b)
-      val ra = find(a); val rb = find(b)
-      if (ra != rb) parent.put(math.max(ra, rb), math.min(ra, rb))
-    }
-    import scala.jdk.CollectionConverters._
+    val uf = new MinRootUnionFind
+    edges.collect().foreach(row => uf.union(asLong(row, 0), asLong(row, 1)))
     def lit(v: Long): Any = idType match {
       case org.apache.spark.sql.types.IntegerType => v.toInt
       case _ => v
     }
-    val rows: Seq[Row] = parent.keySet().asScala.toSeq.sorted
-      .map(id => Row(lit(id), lit(find(id))))
+    val rows: Seq[Row] = uf.ids.toSeq.map(id => Row(lit(id), lit(uf.find(id))))
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("id", idType, nullable = false),
       org.apache.spark.sql.types.StructField("component", idType, nullable = false)))

@@ -4,10 +4,16 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.expr.SparkTestSession
 import graft.h3.{H3Core, H3Geo, H3Traversal}
+import graft.util.Regimes
 
 class H3GraphSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
+
+  /** Collected in the one-operator small regime and in the forced loop;
+    * the rows (walks included) must be identical. */
+  private def bothRegimes(run: => org.apache.spark.sql.DataFrame) =
+    Regimes.bothRegimes(spark)(run)
 
   // small H3-native chain: a res-8 grid path with unit-ish metric weights
   private lazy val chainCells: Array[Long] = {
@@ -139,8 +145,10 @@ class H3GraphSpec extends AnyFunSuite {
     val dests = Seq(chainCells.last, chainCells(1))
     val viaDijkstra = H3Graph.shortestPathsLocal(spark, lg, origins, dests)
       .select($"origin", $"destination", $"cost").as[(Long, Long, Double)].collect().toSet
-    val viaIterative = H3Graph.shortestPathsIterative(spark, chainGraph, origins, dests)
-      .as[(Long, Long, Double)].collect().toSet
+    def costs(rows: Array[org.apache.spark.sql.Row]): Set[(Long, Long, Double)] =
+      rows.map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    val viaIterative = costs(bothRegimes(
+      H3Graph.shortestPathsIterative(spark, chainGraph, origins, dests)))
     assert(viaIterative.map(t => (t._1, t._2)) == viaDijkstra.map(t => (t._1, t._2)))
     val dMap = viaDijkstra.map(t => (t._1, t._2) -> t._3).toMap
     viaIterative.foreach { case (o, d, c) =>
@@ -150,13 +158,18 @@ class H3GraphSpec extends AnyFunSuite {
     // single-hop loop, the default two-hop loop, and the deep-hop loops
     // p114/p116 use to cut round-barrier latency must agree exactly
     for (hops <- Seq(1, 4, 8)) {
-      val got = H3Graph.shortestPathsIterative(spark, chainGraph, origins, dests,
-        hopsPerRound = hops).as[(Long, Long, Double)].collect().toSet
+      val got = costs(bothRegimes(H3Graph.shortestPathsIterative(spark, chainGraph,
+        origins, dests, hopsPerRound = hops)))
       assert(got == viaIterative, s"hopsPerRound=$hops and =2 diverged")
     }
   }
 
   test("iterative SSSP under reliable checkpointing: identical fixpoint, ReliableEvery fires mid-loop") {
+    Regimes.clustered(spark)(reliableCadence())
+  }
+
+  /** Runs only as the loop: the small regime takes no checkpoints. */
+  private def reliableCadence(): Unit = {
     // hopsPerRound=1 forces one round per chain hop, so a chain longer
     // than 2*ReliableEvery guarantees the reliable persist->checkpoint->
     // count->unpersist branch (Barriers.scala) runs MID-loop, not just at
@@ -195,9 +208,9 @@ class H3GraphSpec extends AnyFunSuite {
     val origins = Seq(chainCells.head, chainCells(2))
     val dests = Seq(chainCells.last, chainCells(1))
     val dir = java.nio.file.Files.createTempDirectory("sssp_paths_ck").toString
-    val got = H3Graph.shortestPathsIterativePaths(spark, chainGraph, origins, dests,
-      checkpointDir = Some(dir))
-      .collect().map(r => ((r.getLong(0), r.getLong(1)), (r.getDouble(2), r.getSeq[Long](3))))
+    val got = bothRegimes(H3Graph.shortestPathsIterativePaths(spark, chainGraph, origins,
+      dests, checkpointDir = Some(dir)))
+      .map(r => ((r.getLong(0), r.getLong(1)), (r.getDouble(2), r.getSeq[Long](3))))
       .toMap
     val oracle = H3Graph.shortestPaths(spark, chainGraph, origins, dests)
       .collect().map(r => ((r.getLong(0), r.getLong(1)), (r.getDouble(2), r.getSeq[Long](3))))
@@ -213,9 +226,9 @@ class H3GraphSpec extends AnyFunSuite {
     // the single-hop and deep-hop loops reconstruct the identical walks
     // (the fixpoint and the pred chain are hop-count-invariant)
     for (hops <- Seq(1, 4, 8)) {
-      val alt = H3Graph.shortestPathsIterativePaths(spark, chainGraph, origins, dests,
-        hopsPerRound = hops)
-        .collect().map(r => ((r.getLong(0), r.getLong(1)), (r.getDouble(2), r.getSeq[Long](3))))
+      val alt = bothRegimes(H3Graph.shortestPathsIterativePaths(spark, chainGraph, origins,
+        dests, hopsPerRound = hops))
+        .map(r => ((r.getLong(0), r.getLong(1)), (r.getDouble(2), r.getSeq[Long](3))))
         .toMap
       assert(alt == got, s"hopsPerRound=$hops and =2 path reconstructions diverged")
     }
@@ -243,9 +256,9 @@ class H3GraphSpec extends AnyFunSuite {
       (x, a, 1.0), (x, b, 1.0),
       (a, b, 0.0), (b, a, 0.0),
       (a, c, 1.0), (b, c, 1.0)).toDF("origin", "destination", "weight")
-    val got = H3Graph.shortestPathsIterativePaths(spark, g, Seq(x), Seq(a, b, c),
-      maxRounds = 32)
-      .collect().map(r => (r.getLong(1), (r.getDouble(2), r.getSeq[Long](3)))).toMap
+    val got = bothRegimes(H3Graph.shortestPathsIterativePaths(spark, g, Seq(x), Seq(a, b, c),
+      maxRounds = 32))
+      .map(r => (r.getLong(1), (r.getDouble(2), r.getSeq[Long](3)))).toMap
     assert(got.keySet == Set(a, b, c))
     assert(got(a)._1 == 1.0 && got(b)._1 == 1.0 && got(c)._1 == 2.0)
     // each walk starts at the origin, ends at its destination, and its
@@ -276,8 +289,8 @@ class H3GraphSpec extends AnyFunSuite {
     }
     check(H3Graph.shortestPaths(spark, g, Seq(origin), Seq(origin, dest)).collect())
     // the distributed path-reconstruction regime agrees
-    check(H3Graph.shortestPathsIterativePaths(spark, g, Seq(origin), Seq(origin, dest))
-      .collect())
+    check(bothRegimes(
+      H3Graph.shortestPathsIterativePaths(spark, g, Seq(origin), Seq(origin, dest))))
   }
 
   test("bincode writer rejects non-neighbor edge lists instead of writing corrupt ids") {
@@ -352,15 +365,72 @@ class H3GraphSpec extends AnyFunSuite {
     assert(down.length <= g.count())
   }
 
-  test("walk pred-table broadcast budget cannot overflow into a passing gate") {
-    val budget = H3Graph.FrontierRowBudget
-    // 2 × edges × origins just under, at, and just over the budget
-    assert(H3Graph.predsHintOn(clustered = false, budget / 8, nOrigins = 4))
-    assert(!H3Graph.predsHintOn(clustered = false, budget / 8 + 1, nOrigins = 4))
-    assert(!H3Graph.predsHintOn(clustered = true, 1L, nOrigins = 1))
-    // 2 × 2^62 × 4 wraps to 0 in a Long product, which would pass the
-    // budget; the division form rejects it
-    assert(!H3Graph.predsHintOn(clustered = false, 1L << 62, nOrigins = 4))
-    assert(!H3Graph.predsHintOn(clustered = false, Long.MaxValue / 3, nOrigins = 3))
+  /** Both iterative SSSP variants over `g`, each in both regimes: the cost
+    * rows and the path rows, keyed by (origin, destination). */
+  private def ssspBoth(g: org.apache.spark.sql.DataFrame, origins: Seq[Long],
+      dests: Seq[Long]) = (
+    bothRegimes(H3Graph.shortestPathsIterative(spark, g, origins, dests))
+      .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap,
+    bothRegimes(H3Graph.shortestPathsIterativePaths(spark, g, origins, dests))
+      .map(r => (r.getLong(0), r.getLong(1)) -> ((r.getDouble(2), r.getSeq[Long](3)))).toMap)
+
+  test("iterative SSSP regimes agree: duplicate edges with different weights") {
+    val g = Seq((1L, 2L, 5.0), (1L, 2L, 3.0), (2L, 3L, 1.5), (2L, 3L, 1.0))
+      .toDF("origin", "destination", "weight")
+    val (costs, paths) = ssspBoth(g, Seq(1L), Seq(2L, 3L))
+    assert(costs == Map((1L, 2L) -> 3.0, (1L, 3L) -> 4.0))
+    assert(paths((1L, 3L)) == ((4.0, Seq(1L, 2L, 3L))))
+  }
+
+  test("iterative SSSP regimes agree: an unreachable destination has no row") {
+    val g = Seq((1L, 2L, 1.0), (3L, 4L, 1.0)).toDF("origin", "destination", "weight")
+    val (costs, paths) = ssspBoth(g, Seq(1L), Seq(2L, 4L, 99L))
+    assert(costs.keySet == Set((1L, 2L)) && paths.keySet == Set((1L, 2L)))
+  }
+
+  test("iterative SSSP regimes agree: null-endpoint and null-weight rows are not edges") {
+    val g = Seq[(Option[Long], Option[Long], Option[Double])](
+      (Some(1L), Some(2L), Some(1.0)), (Some(2L), Some(3L), Some(1.0)),
+      (None, Some(3L), Some(0.1)), (Some(1L), None, Some(0.1)), (Some(1L), Some(3L), None))
+      .toDF("origin", "destination", "weight")
+    val (costs, paths) = ssspBoth(g, Seq(1L), Seq(2L, 3L))
+    assert(costs == Map((1L, 2L) -> 1.0, (1L, 3L) -> 2.0))
+    assert(paths((1L, 3L)) == ((2.0, Seq(1L, 2L, 3L))))
+  }
+
+  test("iterative SSSP regimes agree: an off-graph origin that is also a destination") {
+    val g = Seq((1L, 2L, 1.0)).toDF("origin", "destination", "weight")
+    val (costs, paths) = ssspBoth(g, Seq(7L, 1L), Seq(7L, 2L))
+    assert(costs == Map((7L, 7L) -> 0.0, (1L, 2L) -> 1.0))
+    assert(paths((7L, 7L)) == ((0.0, Seq(7L))))
+  }
+
+  test("iterative SSSP regimes agree at the round cap: same rows and warning; a walk past it fails") {
+    // o reaches u directly (10) or in 3 hops through x and y (3); u -> v.
+    // After 3 hops u holds its 3-hop route while v keeps the pred u it
+    // took at hop 2, so v's walk needs 4 hops; hop 5 improves nothing
+    val (o, x, y, u, v) = (1L, 2L, 3L, 4L, 5L)
+    val g = Seq((o, u, 10.0), (o, x, 1.0), (x, y, 1.0), (y, u, 1.0), (u, v, 1.0))
+      .toDF("origin", "destination", "weight")
+    def costs(maxRounds: Int) = Regimes.warnings(H3Graph.getClass) {
+      bothRegimes(H3Graph.shortestPathsIterative(spark, g, Seq(o), Seq(u, v),
+        maxRounds = maxRounds, hopsPerRound = 1))
+        .map(r => (r.getLong(1), r.getDouble(2))).toMap
+    }
+    val (capped, warned) = costs(3)
+    assert(capped == Map(u -> 3.0, v -> 11.0))
+    // once per regime
+    assert(warned.count(_.startsWith("iterative SSSP stopped after maxRounds=3 ")) == 2, warned)
+    val (converged, quiet) = costs(5)
+    assert(converged == Map(u -> 3.0, v -> 4.0))
+    assert(!quiet.exists(_.startsWith("iterative SSSP stopped")), quiet)
+    def paths(maxRounds: Int) = H3Graph.shortestPathsIterativePaths(spark, g, Seq(o), Seq(v),
+      maxRounds = maxRounds, hopsPerRound = 1).collect()
+    val small = intercept[IllegalArgumentException](paths(3))
+    val loop = intercept[IllegalArgumentException](Regimes.clustered(spark)(paths(3)))
+    assert(small.getMessage == loop.getMessage)
+    assert(small.getMessage.contains("path reconstruction did not terminate in 3 rounds"))
+    assert(bothRegimes(H3Graph.shortestPathsIterativePaths(spark, g, Seq(o), Seq(v),
+      maxRounds = 5, hopsPerRound = 1)).map(_.getSeq[Long](3)).toSeq == Seq(Seq(o, x, y, u, v)))
   }
 }

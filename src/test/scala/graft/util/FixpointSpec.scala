@@ -153,16 +153,24 @@ class FixpointSpec extends AnyFunSuite {
     assertFlat("connectedComponents", minExtraJobs = 3)(run(8), run(128))
   }
 
+  /** Runs `body` with the clustered regime and the loops forced. */
+  private def clustered(body: => Unit): Unit = Regimes.clustered(spark)(body)
+
+  /** A straight res-9 line of cells `km` long (7 cells at 2 km, 33 at 10). */
+  private def snake(km: Double): Seq[Long] = {
+    val a = H3Geo.latLngToCell(48.85, 2.35, 9)
+    val g = H3Geo.cellToLatLng(a)
+    H3Traversal.gridPathCells(a, H3Geo.latLngToCell(g.lat, g.lng + km / 73.0, 9)).toSeq
+  }
+
+  private def snakeClusters(km: Double): DataFrame =
+    graft.df.H3Clusters.cellClusters(snake(km).toDF("cell"), "cell")
+
   test("cellClusters frees every superseded generation on a snake") {
-    // a straight res-9 line of 7 and 33 cells: 44 and 198 jobs on a
-    // 4-core host
-    def snake(km: Double) = {
-      val a = H3Geo.latLngToCell(48.85, 2.35, 9)
-      val g = H3Geo.cellToLatLng(a)
-      H3Traversal.gridPathCells(a, H3Geo.latLngToCell(g.lat, g.lng + km / 73.0, 9)).toSeq
+    // 44 and 198 jobs on a 4-core host
+    clustered {
+      assertFlat("cellClusters", minExtraJobs = 3)(snakeClusters(2.0), snakeClusters(10.0))
     }
-    def run(km: Double) = graft.df.H3Clusters.cellClusters(snake(km).toDF("cell"), "cell")
-    assertFlat("cellClusters", minExtraJobs = 3)(run(2.0), run(10.0))
   }
 
   private def chain(n: Int): DataFrame = {
@@ -170,22 +178,36 @@ class FixpointSpec extends AnyFunSuite {
     (e ++ e.map(_.swap)).map { case (a, b) => (a, b, 1.0) }.toDF("origin", "destination", "weight")
   }
 
+  private def chainCosts(n: Int): DataFrame = graft.graph.H3Graph.shortestPathsIterative(
+    spark, chain(n), Seq(0L), Seq(n - 1L), hopsPerRound = 1)
+
+  private def chainPaths(n: Int): DataFrame = graft.graph.H3Graph.shortestPathsIterativePaths(
+    spark, chain(n), Seq(0L), Seq(n - 1L), hopsPerRound = 1)
+
   test("iterative SSSP frees every superseded generation: chains of N and 2N rounds") {
-    def run(n: Int) = graft.graph.H3Graph.shortestPathsIterative(spark, chain(n),
-      Seq(0L), Seq(n - 1L), hopsPerRound = 1)
-    assertFlat("shortestPathsIterative", minExtraJobs = 6)(run(8), run(16))
+    clustered {
+      assertFlat("shortestPathsIterative", minExtraJobs = 6)(chainCosts(8), chainCosts(16))
+    }
   }
 
   test("iterative SSSP with paths frees every superseded generation") {
-    def run(n: Int) = graft.graph.H3Graph.shortestPathsIterativePaths(spark, chain(n),
-      Seq(0L), Seq(n - 1L), hopsPerRound = 1)
-    assertFlat("shortestPathsIterativePaths", minExtraJobs = 6)(run(8), run(16))
+    clustered {
+      assertFlat("shortestPathsIterativePaths", minExtraJobs = 6)(chainPaths(8), chainPaths(16))
+    }
   }
 
-  /** Runs `body` with the clustered regime forced. */
-  private def clustered(body: => Unit): Unit = {
-    spark.conf.set("graft.layout.clusterMinRows", "0")
-    try body finally spark.conf.unset("graft.layout.clusterMinRows")
+  test("small regime: SSSP and cellClusters run as one operator, whatever the hops, and pin nothing") {
+    // the loop's job count grows with the hops (see the clustered specs
+    // above); the small regime's must not, and it leaves no RDD pinned
+    for ((name, short, long) <- Seq(
+        ("shortestPathsIterative", () => chainCosts(8), () => chainCosts(16)),
+        ("shortestPathsIterativePaths", () => chainPaths(8), () => chainPaths(16)),
+        ("cellClusters", () => snakeClusters(2.0), () => snakeClusters(10.0)))) {
+      val (pinShort, jobsShort) = pinsAndJobs(short())
+      val (pinLong, jobsLong) = pinsAndJobs(long())
+      assert(jobsShort == jobsLong, s"$name: $jobsShort jobs on the short input, $jobsLong on the long")
+      assert(pinShort == 0 && pinLong == 0, s"$name: $pinShort and $pinLong RDDs left pinned")
+    }
   }
 
   test("PageRank frees every superseded generation in the clustered regime") {
