@@ -8,7 +8,7 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import graft.functions._
 import graft.h3.{H3Core, H3Traversal}
 import graft.pipeline.{CheckpointLayout, Dedup}
-import graft.util.{Barriers, Fixpoint}
+import graft.util.{Barriers, DriverRegime, Fixpoint}
 
 /**
  * C5: connected components of neighboring cells (reference
@@ -164,7 +164,6 @@ object H3Clusters {
     * and a NULL cell gets a NULL cluster id. */
   private def driverLabels(keys: DataFrame, cellCol: String,
       valueCol: Option[String]): DataFrame = {
-    val spark = keys.sparkSession
     val groups: Seq[(Seq[Any], Seq[Row])] = valueCol match {
       case None => Seq((Nil, keys.collect().toSeq))
       case Some(v) =>
@@ -185,8 +184,7 @@ object H3Clusters {
         nulls.map(_ => Row.fromSeq(null +: value :+ null))
     }
     val schema = StructType(keys.schema.fields :+ StructField("cluster", LongType, nullable = true))
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(rows, math.max(1, math.min(rows.size, 32))), schema)
+    DriverRegime.frame(keys.sparkSession, rows, schema)
   }
 
   /** C8: aggregate bounding rect of all cells in a column — one row

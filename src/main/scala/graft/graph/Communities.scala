@@ -1,10 +1,11 @@
 package graft.graph
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.pipeline.CheckpointLayout
-import graft.util.{Barriers, Fixpoint}
+import graft.util.{Barriers, DriverRegime, Fixpoint}
 
 /**
  * Community detection by synchronous label propagation (Raghavan et al.
@@ -23,12 +24,16 @@ import graft.util.{Barriers, Fixpoint}
  * stable ids are what downstream grouping needs, convergence per se is
  * not.)
  *
- * Scale shape per round: one equi-join of the label frame onto the
- * (node-keyed) adjacency, then TWO map-side-combinable aggregates —
- * count by (node, neighbor-label), then struct-max by node for the
- * arg-max — no window over raw neighbors, so a celebrity node costs
- * its distinct-neighbor-LABEL count after partial aggregation, not its
- * degree, and nothing corpus-sized crosses the driver.
+ * Scale shape: the canonical edge frame is measured first. At or under
+ * the layout bound (`CheckpointLayout.smallRegime`) it is collected once
+ * and the rounds are replayed on the driver over primitive arrays — no
+ * job per round, the result a parallelized frame. Past it, per round:
+ * one equi-join of the label frame onto the (node-keyed) adjacency, then
+ * TWO map-side-combinable aggregates — count by (node, neighbor-label),
+ * then struct-max by node for the arg-max — no window over raw
+ * neighbors, so a celebrity node costs its distinct-neighbor-LABEL count
+ * after partial aggregation, not its degree, and nothing corpus-sized
+ * crosses the driver.
  */
 object Communities {
 
@@ -41,9 +46,62 @@ object Communities {
   def labelPropagation(edges: DataFrame, src: Column, dst: Column,
       iters: Int, checkpointDir: Option[String] = None): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    val e = Triangles.canonicalEdges(edges, src, dst)
+    val (e0, freeE0) = Barriers.statSafeFreeable(Triangles.canonicalEdges(edges, src, dst))
+    DriverRegime.collectIfSmall(e0, freeE0) match {
+      case Some(g) =>
+        DriverRegime.frame(edges.sparkSession, labelsLocal(g, iters), LabelSchema)
+      case None => labelLoop(e0, freeE0, iters, checkpointDir)
+    }
+  }
+
+  private val LabelSchema = StructType(Seq(
+    StructField("node", LongType), StructField("label", LongType)))
+
+  /** The small regime of [[labelPropagation]]: the loop's synchronous
+    * rounds replayed over the collected canonical edges. Per round each
+    * node sorts its neighbours' labels and takes the longest run, the
+    * first (smallest) label among equally long runs. */
+  private def labelsLocal(g: DriverRegime.Edges, iters: Int): Seq[Row] = {
+    // undirected adjacency in CSR form: node i's neighbours are
+    // nbr(start(i) until start(i + 1))
+    val start = new Array[Int](g.nodes + 1)
+    for (i <- 0 until g.size) { start(g.src(i) + 1) += 1; start(g.dst(i) + 1) += 1 }
+    for (i <- 0 until g.nodes) start(i + 1) += start(i)
+    val nbr = new Array[Int](2 * g.size)
+    val fill = start.clone()
+    for (i <- 0 until g.size) {
+      nbr(fill(g.src(i))) = g.dst(i); fill(g.src(i)) += 1
+      nbr(fill(g.dst(i))) = g.src(i); fill(g.dst(i)) += 1
+    }
+    val buf = new Array[Long](if (g.nodes == 0) 0 else
+      (0 until g.nodes).map(i => start(i + 1) - start(i)).max)
+    var labels = g.ids
+    for (_ <- 1 to iters) {
+      labels = Array.tabulate(g.nodes) { v =>
+        val d = start(v + 1) - start(v)
+        for (j <- 0 until d) buf(j) = labels(nbr(start(v) + j))
+        java.util.Arrays.sort(buf, 0, d)
+        var best = buf(0)
+        var bestRun = 0
+        var j = 0
+        while (j < d) {
+          var k = j
+          while (k < d && buf(k) == buf(j)) k += 1
+          if (k - j > bestRun) { best = buf(j); bestRun = k - j }
+          j = k
+        }
+        best
+      }
+    }
+    g.ids.indices.map(i => Row(g.ids(i), labels(i)))
+  }
+
+  /** The loop regime of [[labelPropagation]] over the measured canonical
+    * edge barrier `e0`. */
+  private def labelLoop(e0: DataFrame, freeE0: () => Unit, iters: Int,
+      checkpointDir: Option[String]): DataFrame = {
     // Dual-regime layout (see CheckpointLayout.ClusterLayoutMinRows):
-    // small graphs keep the fully-adaptive statSafe loop (labels
+    // graphs with few nodes keep the fully-adaptive statSafe loop (labels
     // broadcast per round, adjacency streams). Past the bound, the
     // adjacency is clustered ONCE by its JOIN side (b, the neighbor
     // carrying the label lookup) and round labels leave their arg-max
@@ -54,17 +112,18 @@ object Communities {
     // scaladoc is untouched: the first shuffle still carries
     // (node, label) partial counts, never raw neighbor rows).
     val (adj0, freeAdj0) = Barriers.statSafeFreeable(
-      e.select(col("u").as("a"), col("v").as("b"))
-        .unionAll(e.select(col("v").as("a"), col("u").as("b"))))
+      e0.select(col("u").as("a"), col("v").as("b"))
+        .unionAll(e0.select(col("v").as("a"), col("u").as("b"))))
     // Gate on the SLIM side (one label row per node), not the adjacency —
     // adjacency rows are 2x edges and over-trigger the clustered regime
     // on dense graphs whose label frame still broadcasts fine. The
     // distinct node frame IS the initial label frame, so the gate's
     // aggregate is reused, not redundant; its count also materializes
-    // adj0, which round 1 needs anyway.
+    // adj0, which round 1 needs anyway (and which no longer needs e0).
     val (nodes0, freeNodes0) = Barriers.statSafeFreeable(
       adj0.select(col("a").as("node")).distinct())
     val nNodes = nodes0.count()
+    freeE0()
     val (adj, freeAdj, cluster) = CheckpointLayout.statSafeReclusterIfOver(
       adj0, freeAdj0, measured = nNodes, key = "b")
     val (labels0, freeLabels0) =
@@ -88,10 +147,12 @@ object Communities {
           adj("b") === labels("node"))
         .select(adj("a").as("node"), col("label"))
         .groupBy(col("node"), col("label")).agg(count(lit(1)).as("c"))
-        // arg-max by (count desc, label asc) == max of (c, -label)
+        // arg-max by (count desc, label asc) == max of (c, ~label): the
+        // bitwise NOT reverses the order like a negation, and unlike one
+        // cannot overflow on Long.MinValue under ANSI arithmetic
         .groupBy(col("node"))
-        .agg(max(struct(col("c"), (-col("label")).as("nl"))).as("m"))
-        .select(col("node"), (-col("m.nl")).as("label"))
+        .agg(max(struct(col("c"), bitwise_not(col("label")).as("nl"))).as("m"))
+        .select(col("node"), bitwise_not(col("m.nl")).as("label"))
     }
   }
 

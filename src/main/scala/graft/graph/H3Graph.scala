@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.functions._
 import graft.pipeline.CheckpointLayout
-import graft.util.{Barriers, Fixpoint}
+import graft.util.{Barriers, DriverRegime, Fixpoint}
 import scala.collection.mutable
 
 /**
@@ -675,7 +675,7 @@ object H3Graph {
     if (maxRounds < 1 || !lanes.forall(_._1)) warnRoundCap(maxRounds)
     if (withPaths) requireWalked(maxRounds >= 1 && lanes.forall(_._2), maxRounds)
     val rows = lanes.flatMap(_._3).toSeq
-    spark.createDataFrame(sc.parallelize(rows, math.max(1, math.min(rows.size, 32))),
+    DriverRegime.frame(spark, rows,
       StructType(if (withPaths) pathSchema.fields else pathSchema.fields.take(3)))
   }
 

@@ -1,11 +1,12 @@
 package graft.graph
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.pipeline.CheckpointLayout
-import graft.util.{Barriers, Fixpoint}
+import graft.util.{Barriers, DriverRegime, Fixpoint}
 
 /**
  * Link-graph authority ranking — the URL/domain-ranking step of a crawl
@@ -22,10 +23,14 @@ import graft.util.{Barriers, Fixpoint}
  * normalizes dangling mass; here dangling mass simply decays — fine for
  * RANKING, which only needs the order, and exactly replayable.)
  *
- * Scale shape per iteration: one equi-join of ranks onto the
- * (src-keyed, checkpointed-once) edge+outdeg frame, one map-side-combined
- * sum by dst, one left join back to the node set — all hash-partitioned
- * by node id, no broadcast of anything corpus-sized. Rounds run through
+ * Scale shape: the distinct edge frame is measured first. At or under
+ * the layout bound (`CheckpointLayout.smallRegime`) it is collected once
+ * and the rounds are replayed on the driver over primitive arrays — no
+ * job per round, the result a parallelized frame. Past it, per
+ * iteration: one equi-join of ranks onto the (src-keyed,
+ * checkpointed-once) edge+outdeg frame, one map-side-combined sum by
+ * dst, one left join back to the node set — all hash-partitioned by node
+ * id, no broadcast of anything corpus-sized. Those rounds run through
  * [[Fixpoint.fixedRounds]], whose stat-safe barriers keep Catalyst's
  * size-only stats from electing a stale broadcast inside the loop (the
  * connected-components lesson).
@@ -38,22 +43,79 @@ object Ranks {
   def pageRank(edges: DataFrame, src: Column, dst: Column, iters: Int,
       dampNum: Long = 85L, dampDen: Long = 100L,
       checkpointDir: Option[String] = None): DataFrame =
-    rankLoop(edges, src, dst, iters, dampNum, dampDen, checkpointDir) { n =>
-      (lit(1000000000L / n), lit(((dampDen - dampNum) * 1000000000L) / (dampDen * n)))
-    }
+    rankLoop(edges, src, dst, iters, dampNum, dampDen, checkpointDir, seeds = None)
 
-  /** The shared iteration of [[pageRank]] / [[personalizedPageRank]]:
-    * edge dedup + out-degree frame + node set, then per round one
-    * equi-join, one map-side-combined sum by dst, one left join back —
-    * statSafe barriers throughout so size-only stats can never elect a
-    * stale broadcast inside the loop. `mkInitTele` receives the node
-    * count and returns the (initial rank, per-node teleport)
-    * expressions — the ONLY place the two ranks differ. */
+  /** The shared body of [[pageRank]] / [[personalizedPageRank]]: the
+    * distinct edges are measured, then ranked on the driver
+    * ([[ranksLocal]]) at or under the layout bound and by the loop
+    * ([[ranksLoop]]) past it. `seeds` is the ONLY place the two ranks
+    * differ: None teleports to every node (the lattice mass is split over
+    * the node count), Some to the seed set (split over `seeds.length`,
+    * duplicates counted; membership is set membership). */
   private def rankLoop(edges: DataFrame, src: Column, dst: Column, iters: Int,
-      dampNum: Long, dampDen: Long, checkpointDir: Option[String] = None)(
-      mkInitTele: Long => (Column, Column)): DataFrame = {
+      dampNum: Long, dampDen: Long, checkpointDir: Option[String],
+      seeds: Option[Seq[Long]]): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     require(dampNum > 0 && dampNum < dampDen, s"need 0 < dampNum < dampDen")
+    val (e0, freeE0) = Barriers.statSafeFreeable(
+      edges.select(src.cast("long").as("src"), dst.cast("long").as("dst"))
+        // a NULL endpoint is not an edge (the other graph ops drop them
+        // via canonicalEdges' null-propagating comparisons; same contract)
+        .filter(col("src").isNotNull && col("dst").isNotNull)
+        .distinct())
+    // (initial rank, teleport) of a teleport target, over `n` nodes
+    def lattice(n: Long): (Long, Long) = {
+      val m = seeds.fold(n)(_.length.toLong)
+      (1000000000L / m, ((dampDen - dampNum) * 1000000000L) / (dampDen * m))
+    }
+    DriverRegime.collectIfSmall(e0, freeE0) match {
+      case Some(g) =>
+        DriverRegime.frame(edges.sparkSession, ranksLocal(g, iters, dampNum, dampDen,
+          seeds.map(_.toSet), lattice), RankSchema)
+      case None =>
+        ranksLoop(e0, freeE0, iters, dampNum, dampDen, checkpointDir, lattice) { v =>
+          seeds.fold(lit(v))(s => when(col("node").isin(s: _*), lit(v)).otherwise(lit(0L)))
+        }
+    }
+  }
+
+  private val RankSchema = StructType(Seq(
+    StructField("node", LongType), StructField("rank_e9", LongType)))
+
+  /** The small regime of [[rankLoop]]: the loop's rounds replayed over the
+    * collected distinct edges — per source one term
+    * `(r * dampNum) div (dampDen * outdeg)` per round, summed into each
+    * destination over its in-edges, plus the teleport of a target. */
+  private def ranksLocal(g: DriverRegime.Edges, iters: Int, dampNum: Long,
+      dampDen: Long, seeds: Option[Set[Long]],
+      lattice: Long => (Long, Long)): Seq[Row] = {
+    if (g.nodes == 0) return Nil
+    val (init, tele) = lattice(g.nodes.toLong)
+    val target = g.ids.map(v => seeds.forall(_.contains(v)))
+    val deg = new Array[Long](g.nodes)
+    g.src.foreach(u => deg(u) += 1)
+    var r = target.map(t => if (t) init else 0L)
+    for (_ <- 1 to iters) {
+      val term = Array.tabulate(g.nodes) { u =>
+        if (deg(u) == 0) 0L
+        else Math.multiplyExact(r(u), dampNum) / Math.multiplyExact(dampDen, deg(u))
+      }
+      val next = target.map(t => if (t) tele else 0L)
+      for (i <- 0 until g.size) next(g.dst(i)) += term(g.src(i))
+      r = next
+    }
+    g.ids.indices.map(i => Row(g.ids(i), r(i)))
+  }
+
+  /** The loop regime of [[rankLoop]] over the measured edge barrier `e0`:
+    * out-degree frame + node set, then per round one equi-join, one
+    * map-side-combined sum by dst, one left join back — statSafe barriers
+    * throughout so size-only stats can never elect a stale broadcast
+    * inside the loop. `targeted(v)` is `v` on a teleport target and 0
+    * elsewhere. */
+  private def ranksLoop(e0: DataFrame, freeE0: () => Unit, iters: Int, dampNum: Long,
+      dampDen: Long, checkpointDir: Option[String], lattice: Long => (Long, Long))(
+      targeted: Long => Column): DataFrame = {
     // Dual-regime layout (the connectedComponents driverEdgeLimit
     // pattern): below ClusterLayoutMinRows nodes, the rank frame
     // broadcasts per round under AQE and the edge frame already streams —
@@ -66,12 +128,6 @@ object Ranks {
     // every round's two joins co-partitioned: the ONLY per-round exchange
     // is the map-side-combined contribution sum. Stats are dropped at
     // every barrier in both regimes (the statSafe contract).
-    val (e0, freeE0) = Barriers.statSafeFreeable(
-      edges.select(src.cast("long").as("src"), dst.cast("long").as("dst"))
-        // a NULL endpoint is not an edge (the other graph ops drop them
-        // via canonicalEdges' null-propagating comparisons; same contract)
-        .filter(col("src").isNotNull && col("dst").isNotNull)
-        .distinct())
     val (nodes0, freeNodes0) = Barriers.statSafeFreeable(
       e0.select(col("src").as("node")).unionAll(e0.select(col("dst").as("node")))
         .distinct())
@@ -93,8 +149,8 @@ object Ranks {
     val (withDeg, freeWithDeg) =
       if (cluster) CheckpointLayout.statSafeKeepingLayout(degFrame)
       else (Barriers.statSafe(degFrame), () => ())
-    val (init, tele) = mkInitTele(n)
-    val initRanks = nodes.select(col("node"), init.as("r"))
+    val (init, tele) = lattice(n)
+    val initRanks = nodes.select(col("node"), targeted(init).as("r"))
     val (ranks0, freeRanks0) =
       if (cluster) CheckpointLayout.statSafeKeepingLayout(initRanks)
       else (Barriers.statSafe(initRanks), () => ())
@@ -111,7 +167,7 @@ object Ranks {
           expr(s"(r * $dampNum) div ($dampDen * deg)").as("c"))
         .groupBy(col("node")).agg(sum(col("c")).as("s"))
       nodes.join(CheckpointLayout.slimHint(contrib, cluster), Seq("node"), "left")
-        .select(col("node"), (tele + coalesce(col("s"), lit(0L))).as("r"))
+        .select(col("node"), (targeted(tele) + coalesce(col("s"), lit(0L))).as("r"))
     }.select(col("node"), col("r").as("rank_e9"))
   }
 
@@ -131,11 +187,6 @@ object Ranks {
       dampNum: Long = 85L, dampDen: Long = 100L,
       checkpointDir: Option[String] = None): DataFrame = {
     require(seeds.nonEmpty, "need a non-empty seed set")
-    val teleE9 = ((dampDen - dampNum) * 1000000000L) / (dampDen * seeds.length)
-    def isSeed = col("node").isin(seeds: _*)
-    rankLoop(edges, src, dst, iters, dampNum, dampDen, checkpointDir) { _ =>
-      (when(isSeed, lit(1000000000L / seeds.length)).otherwise(lit(0L)),
-        when(isSeed, lit(teleE9)).otherwise(lit(0L)))
-    }
+    rankLoop(edges, src, dst, iters, dampNum, dampDen, checkpointDir, Some(seeds))
   }
 }

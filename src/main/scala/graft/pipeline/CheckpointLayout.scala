@@ -68,9 +68,13 @@ object CheckpointLayout {
     * loops whose whole input fits the driver: iterative SSSP (measured
     * edge rows) and `cellClusters(fixedRounds = None)` (measured distinct
     * keys) collect their input once and replace the job-per-hop loop with
-    * one broadcast-adjacency job or a driver union-find (see
-    * [[smallRegime]]); past the bound they run their `Fixpoint` loop,
-    * SSSP always clustered.
+    * one broadcast-adjacency job or a driver union-find; PageRank/PPR,
+    * label propagation and k-core (measured distinct edge rows) collect
+    * their edges once and replay their rounds on the driver (see
+    * [[smallRegime]] and `graft.util.DriverRegime`). Past the bound they
+    * run their `Fixpoint` loop — SSSP always clustered, PageRank and label
+    * propagation still gated on their node count as above, so their lazy
+    * unclustered chain serves only dense graphs.
     *
     * Skew trade the clustered regime accepts: the co-partitioned round
     * join loses AQE's runtime skew-splitting, so a celebrity key's

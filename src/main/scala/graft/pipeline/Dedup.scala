@@ -775,7 +775,6 @@ object Dedup {
     * [[connectedComponents]] small-graph regime). */
   private def driverComponents(edges: DataFrame,
       idType: org.apache.spark.sql.types.DataType): DataFrame = {
-    val spark = edges.sparkSession
     def asLong(r: Row, i: Int): Long = idType match {
       case org.apache.spark.sql.types.IntegerType => r.getInt(i).toLong
       case _ => r.getLong(i)
@@ -790,9 +789,7 @@ object Dedup {
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("id", idType, nullable = false),
       org.apache.spark.sql.types.StructField("component", idType, nullable = false)))
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(rows, math.max(1, math.min(rows.size, 32))),
-      schema)
+    graft.util.DriverRegime.frame(edges.sparkSession, rows, schema)
   }
 
   /** Near-dup GROUPS straight from a perceptual-hash column, with

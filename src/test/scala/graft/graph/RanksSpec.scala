@@ -1,13 +1,18 @@
 package graft.graph
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.expr.SparkTestSession
+import graft.util.Regimes
 
 /** Integer-lattice PageRank: sequential-reference equality on a seeded
   * random graph (exact — the recurrence has no floats), partitioning
   * invariance, and ranking laws (authority concentrates on the
-  * high-indegree hub; mass never exceeds the initial lattice total). */
+  * high-indegree hub; mass never exceeds the initial lattice total).
+  * Every case runs in all three regimes (one operator, the clustered
+  * loop, and the lazy chain where the graph has more edges than nodes)
+  * and the regimes must agree. */
 class RanksSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
@@ -20,7 +25,16 @@ class RanksSpec extends AnyFunSuite {
     (s, d)
   }.distinct
 
-  private def refPageRank(es: Seq[(Long, Long)], iters: Int): Map[Long, Long] = {
+  /** `run`'s `(node, rank_e9)` rows in every regime of a graph whose
+    * distinct non-null edges are `es`. */
+  private def ranks(es: Seq[(Long, Long)])(run: => DataFrame): Map[Long, Long] = {
+    val nodes = (es.map(_._1) ++ es.map(_._2)).distinct.size.toLong
+    Regimes.allRegimes(spark, nodes, es.distinct.size.toLong)(run)
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+  }
+
+  private def refPageRank(all: Seq[(Long, Long)], iters: Int): Map[Long, Long] = {
+    val es = all.distinct
     val deg = es.groupBy(_._1).view.mapValues(_.size.toLong).toMap
     val nodes = (es.map(_._1) ++ es.map(_._2)).distinct
     val n = nodes.size.toLong
@@ -36,8 +50,7 @@ class RanksSpec extends AnyFunSuite {
 
   test("pageRank matches the sequential integer recurrence exactly") {
     val df = edges.toDF("s", "d").repartition(9)
-    val got = Ranks.pageRank(df, $"s", $"d", iters = 3)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val got = ranks(edges)(Ranks.pageRank(df, $"s", $"d", iters = 3))
     val want = refPageRank(edges, 3)
     assert(got == want)
   }
@@ -85,7 +98,7 @@ class RanksSpec extends AnyFunSuite {
       assert(marginalPerIter <= 1.0,
         s"expected <=1 shuffle-writing stage per extra iteration, got $marginalPerIter (s2=$s2 s6=$s6)")
       // and the clustered regime's values are identical to the default
-      // (broadcast, unclustered) regime's
+      // (one-operator) regime's
       val clusteredRun = Ranks.pageRank(edges.toDF("s", "d"), $"s", $"d", 3)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       spark.conf.unset("graft.layout.clusterMinRows")
@@ -101,10 +114,8 @@ class RanksSpec extends AnyFunSuite {
   }
 
   test("ranking laws: hub dominates; lattice mass bounded; partition-invariant") {
-    val a = Ranks.pageRank(edges.toDF("s", "d").repartition(1), $"s", $"d", 3)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val b = Ranks.pageRank(edges.toDF("s", "d").repartition(13), $"s", $"d", 3)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val a = ranks(edges)(Ranks.pageRank(edges.toDF("s", "d").repartition(1), $"s", $"d", 3))
+    val b = ranks(edges)(Ranks.pageRank(edges.toDF("s", "d").repartition(13), $"s", $"d", 3))
     assert(a == b) // integer arithmetic: no summation-order wiggle at all
     assert(a(7L) == a.values.max, "the hub carries the top rank")
     assert(a(7L) > 3L * (a.values.sum / a.size), "hub well above mean")
@@ -112,11 +123,15 @@ class RanksSpec extends AnyFunSuite {
     assert(a.values.sum <= 1000000000L)
   }
 
-  private def refPpr(es: Seq[(Long, Long)], seeds: Set[Long], iters: Int): Map[Long, Long] = {
+  /** The seed list's length (duplicates counted) splits the lattice mass;
+    * membership is set membership. */
+  private def refPpr(all: Seq[(Long, Long)], seedList: Seq[Long], iters: Int): Map[Long, Long] = {
+    val es = all.distinct
+    val seeds = seedList.toSet
     val deg = es.groupBy(_._1).view.mapValues(_.size.toLong).toMap
     val nodes = (es.map(_._1) ++ es.map(_._2)).distinct
-    val tele = (15L * 1000000000L) / (100L * seeds.size)
-    var r = nodes.map(v => v -> (if (seeds(v)) 1000000000L / seeds.size else 0L)).toMap
+    val tele = (15L * 1000000000L) / (100L * seedList.length)
+    var r = nodes.map(v => v -> (if (seeds(v)) 1000000000L / seedList.length else 0L)).toMap
     for (_ <- 1 to iters) {
       val in = collection.mutable.Map.empty[Long, Long].withDefaultValue(0L)
       es.foreach { case (s, d) => in(d) += (r(s) * 85L) / (100L * deg(s)) }
@@ -128,14 +143,49 @@ class RanksSpec extends AnyFunSuite {
   test("personalizedPageRank matches the sequential recurrence; mass localizes at seeds") {
     val seeds = Seq(3L, 11L)
     val df = edges.toDF("s", "d").repartition(9)
-    val got = Ranks.personalizedPageRank(df, $"s", $"d", seeds, iters = 3)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got == refPpr(edges, seeds.toSet, 3))
+    val got = ranks(edges)(Ranks.personalizedPageRank(df, $"s", $"d", seeds, iters = 3))
+    assert(got == refPpr(edges, seeds, 3))
     // two components joined by NO path: mass never reaches the island
     val island = edges ++ Seq((100L, 101L), (101L, 102L), (102L, 100L))
-    val gotI = Ranks.personalizedPageRank(island.toDF("s", "d"), $"s", $"d", seeds, 3)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val gotI = ranks(island)(
+      Ranks.personalizedPageRank(island.toDF("s", "d"), $"s", $"d", seeds, 3))
     assert(Seq(100L, 101L, 102L).forall(n => gotI(n) == 0L))
-    assert(gotI.filterKeys(_ < 100L).toMap == refPpr(island, seeds.toSet, 3).filterKeys(_ < 100L).toMap)
+    assert(gotI.filterKeys(_ < 100L).toMap == refPpr(island, seeds, 3).filterKeys(_ < 100L).toMap)
+  }
+
+  test("personalizedPageRank: a repeated seed counts twice, a seed off the graph once") {
+    // seeds.length (4) splits the mass; 999 is no node, so its share and
+    // teleport reach no one
+    val seeds = Seq(3L, 3L, 11L, 999L)
+    val got = ranks(edges)(Ranks.personalizedPageRank(edges.toDF("s", "d"), $"s", $"d", seeds, 3))
+    assert(got == refPpr(edges, seeds, 3))
+    assert(!got.contains(999L))
+  }
+
+  test("duplicate edges count once; self-loops are kept") {
+    val loops = Seq((5L, 5L), (7L, 7L), (50L, 50L)) // 50 has only its self-loop
+    val es = edges ++ edges.take(60) ++ loops ++ loops
+    val got = ranks(es)(Ranks.pageRank(es.toDF("s", "d").repartition(4), $"s", $"d", 3))
+    assert(got == refPageRank(es, 3))
+    assert(got.contains(50L))
+  }
+
+  test("rows with a null endpoint are dropped; Int ids rank as longs") {
+    val nulls = edges.map { case (s, d) => (Option(s), Option(d)) } ++
+      Seq((None, Some(3L)), (Some(4L), None), (None, None))
+    val gotNulls = ranks(edges)(Ranks.pageRank(nulls.toDF("s", "d"), $"s", $"d", 3))
+    assert(gotNulls == refPageRank(edges, 3))
+    val ints = edges.map { case (s, d) => (s.toInt, d.toInt) }.toDF("s", "d")
+    val gotInts = ranks(edges)(Ranks.pageRank(ints, $"s", $"d", 3))
+    assert(gotInts == refPageRank(edges, 3))
+    assert(Ranks.pageRank(ints, $"s", $"d", 3).schema.map(_.dataType.simpleString) ==
+      Seq("bigint", "bigint"))
+  }
+
+  test("an empty graph ranks no node") {
+    val empty = Seq.empty[(Long, Long)].toDF("s", "d")
+    assert(ranks(Nil)(Ranks.pageRank(empty, $"s", $"d", 3)).isEmpty)
+    assert(ranks(Nil)(Ranks.personalizedPageRank(empty, $"s", $"d", Seq(1L), 3)).isEmpty)
+    assert(Ranks.pageRank(empty, $"s", $"d", 3).columns.toSeq == Seq("node", "rank_e9"))
   }
 }

@@ -139,11 +139,14 @@ class FixpointSpec extends AnyFunSuite {
 
   private def path(n: Int): Seq[(Long, Long)] = (0L until n - 1L).map(i => (i, i + 1))
 
+  private def kCorePath(n: Int): DataFrame = graft.graph.Cores.kCore(
+    path(n).toDF("src", "dst"), col("src"), col("dst"), k = 2, rounds = 64)
+
   test("k-core frees every superseded generation: path graphs of N and 2N rounds") {
     // k=2 peels one node from each end per round
-    def run(n: Int) = graft.graph.Cores.kCore(path(n).toDF("src", "dst"),
-      col("src"), col("dst"), k = 2, rounds = 64)
-    assertFlat("kCore", minExtraJobs = 4)(run(10), run(20))
+    clustered {
+      assertFlat("kCore", minExtraJobs = 4)(kCorePath(10), kCorePath(20))
+    }
   }
 
   test("connected components frees every superseded generation (distributed loop)") {
@@ -196,33 +199,46 @@ class FixpointSpec extends AnyFunSuite {
     }
   }
 
-  test("small regime: SSSP and cellClusters run as one operator, whatever the hops, and pin nothing") {
-    // the loop's job count grows with the hops (see the clustered specs
-    // above); the small regime's must not, and it leaves no RDD pinned
-    for ((name, short, long) <- Seq(
-        ("shortestPathsIterative", () => chainCosts(8), () => chainCosts(16)),
-        ("shortestPathsIterativePaths", () => chainPaths(8), () => chainPaths(16)),
-        ("cellClusters", () => snakeClusters(2.0), () => snakeClusters(10.0)))) {
+  private def ranks(iters: Int): DataFrame = graft.graph.Ranks.pageRank(
+    path(30).toDF("src", "dst"), col("src"), col("dst"), iters)
+
+  private def labels(iters: Int): DataFrame = graft.graph.Communities.labelPropagation(
+    path(30).toDF("src", "dst"), col("src"), col("dst"), iters)
+
+  /** Each (name, short, long) pair runs in the small regime: the loop's
+    * job count grows with the rounds (see the clustered specs around);
+    * the one operator's must not, and it leaves no RDD pinned. */
+  private def assertOneOperator(cases: (String, () => DataFrame, () => DataFrame)*): Unit =
+    for ((name, short, long) <- cases) {
       val (pinShort, jobsShort) = pinsAndJobs(short())
       val (pinLong, jobsLong) = pinsAndJobs(long())
       assert(jobsShort == jobsLong, s"$name: $jobsShort jobs on the short input, $jobsLong on the long")
       assert(pinShort == 0 && pinLong == 0, s"$name: $pinShort and $pinLong RDDs left pinned")
     }
+
+  test("small regime: SSSP and cellClusters run as one operator, whatever the hops, and pin nothing") {
+    assertOneOperator(
+      ("shortestPathsIterative", () => chainCosts(8), () => chainCosts(16)),
+      ("shortestPathsIterativePaths", () => chainPaths(8), () => chainPaths(16)),
+      ("cellClusters", () => snakeClusters(2.0), () => snakeClusters(10.0)))
+  }
+
+  test("small regime: PageRank, label propagation and k-core run as one operator, whatever the rounds, and pin nothing") {
+    assertOneOperator(
+      ("pageRank", () => ranks(4), () => ranks(8)),
+      ("labelPropagation", () => labels(4), () => labels(8)),
+      ("kCore", () => kCorePath(10), () => kCorePath(20)))
   }
 
   test("PageRank frees every superseded generation in the clustered regime") {
     clustered {
-      def run(iters: Int) = graft.graph.Ranks.pageRank(path(30).toDF("src", "dst"),
-        col("src"), col("dst"), iters)
-      assertFlat("pageRank", minExtraJobs = 4)(run(4), run(8))
+      assertFlat("pageRank", minExtraJobs = 4)(ranks(4), ranks(8))
     }
   }
 
   test("label propagation frees every superseded generation in the clustered regime") {
     clustered {
-      def run(iters: Int) = graft.graph.Communities.labelPropagation(
-        path(30).toDF("src", "dst"), col("src"), col("dst"), iters)
-      assertFlat("labelPropagation", minExtraJobs = 4)(run(4), run(8))
+      assertFlat("labelPropagation", minExtraJobs = 4)(labels(4), labels(8))
     }
   }
 }
