@@ -2,12 +2,12 @@ package graft.df
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import graft.functions._
 import graft.h3.{H3Core, H3Traversal}
-import graft.pipeline.{CheckpointLayout, Dedup}
+import graft.pipeline.Dedup
 import graft.util.{Barriers, DriverRegime, Fixpoint}
 
 /**
@@ -143,36 +143,37 @@ object H3Clusters {
         // and re-execute the n-round join tree per action
         joinOnKeys(df, labels.localCheckpoint(eager = true))
       case None =>
-        // the count doubles as the key set's materialization, which the
-        // loop's first round would otherwise pay
+        // the measurement doubles as the key set's materialization, which
+        // the loop's first round would otherwise pay
         val (measuredKeys, freeKeys) = Barriers.statSafeFreeable(keys)
-        val labels =
-          if (CheckpointLayout.smallRegime(df.sparkSession, measuredKeys.count())) {
-            val l = driverLabels(measuredKeys, cellCol, valueCol)
-            freeKeys()
-            l
-          } else converge(measuredKeys.withColumn("cluster", col(cellCol)), freeKeys)
+        val labels = DriverRegime.collectIfSmall(measuredKeys, freeKeys) match {
+          case Some(rows) => driverLabels(df.sparkSession, rows, keys.schema, cellCol, valueCol)
+          case None => converge(measuredKeys.withColumn("cluster", col(cellCol)), freeKeys)
+        }
         joinOnKeys(df, labels)
     }
   }
 
   /** The small regime of [[cellClusters]]: the collected distinct keys
     * linked by a driver union-find over ring-1 neighbours, one per value
-    * group in the eq-value variant (Spark groups the values, so they
-    * compare as the loop's null-safe group keys do). Each cluster id is
-    * its minimum member cell; a NULL or invalid cell stays a singleton,
-    * and a NULL cell gets a NULL cluster id. */
-  private def driverLabels(keys: DataFrame, cellCol: String,
-      valueCol: Option[String]): DataFrame = {
-    val groups: Seq[(Seq[Any], Seq[Row])] = valueCol match {
-      case None => Seq((Nil, keys.collect().toSeq))
-      case Some(v) =>
-        keys.groupBy(col(v)).agg(collect_list(struct(col(cellCol))).as("__cells"))
-          .collect().toSeq.map(r => (Seq(r.get(0)), r.getSeq[Row](1)))
+    * group in the eq-value variant. The keys come from Spark's distinct,
+    * which normalizes floating-point values, so the groups compare as the
+    * loop's null-safe group keys do (binary values by content). Each
+    * cluster id is its minimum member cell; a NULL or invalid cell stays a
+    * singleton, and a NULL cell gets a NULL cluster id. */
+  private def driverLabels(spark: SparkSession, keys: Array[Row], schema: StructType,
+      cellCol: String, valueCol: Option[String]): DataFrame = {
+    def groupKey(v: Any): Any = v match {
+      case b: Array[Byte] => b.toSeq
+      case r: Row => r.toSeq.map(groupKey)
+      case s: scala.collection.Seq[_] => s.map(groupKey)
+      case o => o
     }
-    val rows = groups.flatMap { case (value, cellRows) =>
-      val (nulls, valid) = cellRows.partition(_.isNullAt(0))
-      val cells = valid.map(_.getLong(0))
+    val groups = valueCol.fold(Iterable(keys.toSeq))(v =>
+      keys.toSeq.groupBy(r => Option(r.getAs[Any](v)).map(groupKey)).values)
+    val rows = groups.flatMap { group =>
+      val (nulls, valid) = group.partition(_.getAs[Any](cellCol) == null)
+      val cells = valid.map(_.getAs[Long](cellCol))
       val present = mutable.LongMap(cells.map(_ -> ()): _*)
       val uf = new Dedup.MinRootUnionFind
       cells.foreach { c =>
@@ -180,11 +181,11 @@ object H3Clusters {
         if (H3Core.isValidCell(c))
           H3Traversal.gridRing(c, 1).foreach(n => if (present.contains(n)) uf.union(c, n))
       }
-      cells.map(c => Row.fromSeq(c +: value :+ uf.find(c))) ++
-        nulls.map(_ => Row.fromSeq(null +: value :+ null))
-    }
-    val schema = StructType(keys.schema.fields :+ StructField("cluster", LongType, nullable = true))
-    DriverRegime.frame(keys.sparkSession, rows, schema)
+      valid.map(r => Row.fromSeq(r.toSeq :+ uf.find(r.getAs[Long](cellCol)))) ++
+        nulls.map(r => Row.fromSeq(r.toSeq :+ null))
+    }.toSeq
+    DriverRegime.frame(spark, rows,
+      StructType(schema.fields :+ StructField("cluster", LongType, nullable = true)))
   }
 
   /** C8: aggregate bounding rect of all cells in a column — one row

@@ -48,8 +48,8 @@ object Communities {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     val (e0, freeE0) = Barriers.statSafeFreeable(Triangles.canonicalEdges(edges, src, dst))
     DriverRegime.collectIfSmall(e0, freeE0) match {
-      case Some(g) =>
-        DriverRegime.frame(edges.sparkSession, labelsLocal(g, iters), LabelSchema)
+      case Some(rows) => DriverRegime.frame(edges.sparkSession,
+        labelsLocal(DriverRegime.Edges(rows, "u", "v"), iters), LabelSchema)
       case None => labelLoop(e0, freeE0, iters, checkpointDir)
     }
   }
@@ -100,10 +100,7 @@ object Communities {
     * edge barrier `e0`. */
   private def labelLoop(e0: DataFrame, freeE0: () => Unit, iters: Int,
       checkpointDir: Option[String]): DataFrame = {
-    // Dual-regime layout (see CheckpointLayout.ClusterLayoutMinRows):
-    // graphs with few nodes keep the fully-adaptive statSafe loop (labels
-    // broadcast per round, adjacency streams). Past the bound, the
-    // adjacency is clustered ONCE by its JOIN side (b, the neighbor
+    // The adjacency is clustered ONCE by its JOIN side (b, the neighbor
     // carrying the label lookup) and round labels leave their arg-max
     // aggregate hash-partitioned by node and KEEP that layout — every
     // round's adj⋈labels join is then co-partitioned and streams both
@@ -111,40 +108,16 @@ object Communities {
     // map-side-combined aggregates (the celebrity contract in the
     // scaladoc is untouched: the first shuffle still carries
     // (node, label) partial counts, never raw neighbor rows).
-    val (adj0, freeAdj0) = Barriers.statSafeFreeable(
+    val (adj, freeAdj) = CheckpointLayout.statSafeRecluster(
       e0.select(col("u").as("a"), col("v").as("b"))
-        .unionAll(e0.select(col("v").as("a"), col("u").as("b"))))
-    // Gate on the SLIM side (one label row per node), not the adjacency —
-    // adjacency rows are 2x edges and over-trigger the clustered regime
-    // on dense graphs whose label frame still broadcasts fine. The
-    // distinct node frame IS the initial label frame, so the gate's
-    // aggregate is reused, not redundant; its count also materializes
-    // adj0, which round 1 needs anyway (and which no longer needs e0).
-    val (nodes0, freeNodes0) = Barriers.statSafeFreeable(
-      adj0.select(col("a").as("node")).distinct())
-    val nNodes = nodes0.count()
-    freeE0()
-    val (adj, freeAdj, cluster) = CheckpointLayout.statSafeReclusterIfOver(
-      adj0, freeAdj0, measured = nNodes, key = "b")
-    val (labels0, freeLabels0) =
-      if (cluster) {
-        val (l0, free0) = CheckpointLayout.statSafeClusteredBy(
-          nodes0, key = "node")
-        l0.queryExecution.toRdd.count() // materialize, then drop the source
-        freeNodes0()
-        (l0.select(col("node"), col("node").as("label")), free0)
-      } else
-        // nodes0 is already a stat-safe checkpoint; the label frame is a
-        // trivial projection over it — a second barrier would only pin
-        // one more session-lifetime RDD
-        (nodes0.select(col("node"), col("node").as("label")), () => ())
-    Fixpoint.fixedRounds(labels0, freeLabels0, iters, cluster, checkpointDir,
-        release = freeAdj) { labels =>
-      // slim-side hint (CheckpointLayout.slimHint): small regime = node
-      // count measured ≤ the cluster bound, so the label frame broadcasts
-      // by measurement and the adjacency never re-exchanges per round
-      adj.join(CheckpointLayout.slimHint(labels, cluster),
-          adj("b") === labels("node"))
+        .unionAll(e0.select(col("v").as("a"), col("u").as("b"))), freeE0, key = "b")
+    // the distinct nodes ride the clustering shuffle; the label frame is
+    // a projection over that checkpoint
+    val (nodes, freeNodes) = CheckpointLayout.statSafeRecluster(
+      adj.select(col("a").as("node")), () => (), key = "node", distinct = true)
+    Fixpoint.fixedRounds(nodes.select(col("node"), col("node").as("label")), freeNodes,
+        iters, checkpointDir, release = freeAdj) { labels =>
+      adj.join(labels, adj("b") === labels("node"))
         .select(adj("a").as("node"), col("label"))
         .groupBy(col("node"), col("label")).agg(count(lit(1)).as("c"))
         // arg-max by (count desc, label asc) == max of (c, ~label): the

@@ -54,7 +54,8 @@ object Cores {
     require(k >= 1 && rounds >= 1, s"need k >= 1 and rounds >= 1, got $k/$rounds")
     val (e0, freeE0) = Barriers.statSafeFreeable(Triangles.canonicalEdges(edges, src, dst))
     DriverRegime.collectIfSmall(e0, freeE0) match {
-      case Some(g) => DriverRegime.frame(edges.sparkSession, coreLocal(g, k, rounds), CoreSchema)
+      case Some(rows) => DriverRegime.frame(edges.sparkSession,
+        coreLocal(DriverRegime.Edges(rows, "u", "v"), k, rounds), CoreSchema)
       case None => coreLoop(e0, freeE0, k, rounds, checkpointDir)
     }
   }
@@ -96,21 +97,22 @@ object Cores {
         stop = Fixpoint.sameCount) { (e, prevRows) =>
       val (keep, freeKeep) = Barriers.statSafeFreeable(
         degrees(e).filter(col("deg") >= k).select(col("n")))
-      // slim-side hint (CheckpointLayout.slimHint): the loop starts with
-      // its edges over the cluster bound (under it the peel ran on the
-      // driver) and the edge frame only shrinks, so the previous round's
-      // measured row count stands in — round 0 runs unhinted, and from
-      // round 1 the keep set (≤ distinct nodes ≤ 2× the measured edges)
-      // broadcasts when the survivors are measured under the bound. A
-      // shrinking frame can only ENTER the hinted regime.
+      // slim-side hint: the loop starts with its edges over the bound
+      // (under it the peel ran on the driver) and the edge frame only
+      // shrinks, so the previous round's measured row count stands in —
+      // round 0 runs unhinted, and from round 1 the keep set (≤ distinct
+      // nodes ≤ 2× the measured edges) is broadcast when the survivors are
+      // measured under the bound. A shrinking frame can only ENTER the
+      // hinted regime.
       // ONE broadcast frame serves BOTH semi-joins: the u- and v-joins
       // reference the same subtree, so exchange reuse builds the keep
       // set's broadcast once per round (the former per-side `.as(c)`
       // aliases made the subtrees canonically distinct and the broadcast
       // was built twice).
-      val bound = CheckpointLayout.clusterMinRows(e.sparkSession)
-      val big = prevRows < 0 || bound <= 0 || prevRows > bound
-      val hintedKeep = CheckpointLayout.slimHint(keep, clustered = big)
+      val hintedKeep =
+        if (prevRows >= 0 && CheckpointLayout.smallRegime(e.sparkSession, prevRows))
+          broadcast(keep)
+        else keep
       Fixpoint.Round(
         e.join(hintedKeep, col("u") === col("n"), "leftsemi")
           .join(hintedKeep, col("v") === col("n"), "leftsemi")

@@ -242,16 +242,18 @@ object H3Graph {
       s"graph exceeds $maxEdges edges - beyond the broadcast-adjacency routing path. " +
         "Use shortestPathsIterative (distributed relaxation) for graphs this size, " +
         "or downsample() to a coarser resolution first")
-    adjacencyOf(rows)
+    adjacencyOf(rows, "origin", "destination", "weight")
   }
 
-  /** (origin, destination, weight) rows of longs and a double grouped by
-    * origin, neighbors in destination order; duplicate edges are kept. */
-  private def adjacencyOf(rows: Array[Row]): Map[Long, Array[(Long, Double)]] =
+  /** Rows with long fields `o` and `d` and a double field `w` as
+    * (origin -> [(destination, weight)...]), neighbors in destination
+    * order; duplicate edges are kept. */
+  private def adjacencyOf(rows: Array[Row], o: String, d: String,
+      w: String): Map[Long, Array[(Long, Double)]] =
     rows
-      .groupBy(_.getLong(0))
-      .map { case (o, rs) =>
-        o -> rs.map(r => (r.getLong(1), r.getDouble(2))).sortBy(_._1)
+      .groupBy(_.getAs[Long](o))
+      .map { case (origin, rs) =>
+        origin -> rs.map(r => (r.getAs[Long](d), r.getAs[Double](w))).sortBy(_._1)
       }
 
   /** A contracted fork-free chain (the reference's `LongEdge`,
@@ -547,26 +549,22 @@ object H3Graph {
     require(hopsPerRound >= 1, s"hopsPerRound must be >= 1, got $hopsPerRound")
     import spark.implicits._
     val (e0, freeE0) = Barriers.statSafeFreeable(
-      graph.select(col("origin").as("__eo"), col("destination").as("__ed"),
-        col("weight").cast("double").as("__ew"))
+      graph.select(col("origin").cast("long").as("__eo"),
+        col("destination").cast("long").as("__ed"), col("weight").cast("double").as("__ew"))
         .filter(col("__eo").isNotNull && col("__ed").isNotNull &&
           col("__ew").isNotNull))
-    val measuredEdges = e0.count()
-    if (CheckpointLayout.smallRegime(spark, measuredEdges)) {
-      val adj = adjacencyOf(e0.select(col("__eo").cast("long"), col("__ed").cast("long"),
-        col("__ew")).collect())
-      freeE0()
-      relaxLocal(spark, adj, origins, destinations, maxRounds, hopsPerRound, withPaths)
-    } else {
-      val (edges, freeEdges, _) = CheckpointLayout.statSafeReclusterIfOver(
-        e0, freeE0, measured = measuredEdges, key = "__eo")
-      val best = relaxIterative(spark, edges, freeEdges, origins, maxRounds,
-        checkpointDir, hopsPerRound, withPred = withPaths)
-      val dests = destinations.distinct.toDF("cell")
-      // the result's lineage reads only the final fold's checkpoint blocks
-      if (withPaths) walkPaths(best, dests, maxRounds, checkpointDir, hopsPerRound)
-      else best.frame.join(broadcast(dests), "cell")
-        .select(col("src").as("origin"), col("cell").as("destination"), col("cost"))
+    DriverRegime.collectIfSmall(e0, freeE0) match {
+      case Some(rows) => relaxLocal(spark, adjacencyOf(rows, "__eo", "__ed", "__ew"),
+        origins, destinations, maxRounds, hopsPerRound, withPaths)
+      case None =>
+        val (edges, freeEdges) = CheckpointLayout.statSafeRecluster(e0, freeE0, key = "__eo")
+        val best = relaxIterative(spark, edges, freeEdges, origins, maxRounds,
+          checkpointDir, hopsPerRound, withPred = withPaths)
+        val dests = destinations.distinct.toDF("cell")
+        // the result's lineage reads only the final fold's checkpoint blocks
+        if (withPaths) walkPaths(best, dests, maxRounds, checkpointDir, hopsPerRound)
+        else best.frame.join(broadcast(dests), "cell")
+          .select(col("src").as("origin"), col("cell").as("destination"), col("cost"))
     }
   }
 

@@ -69,9 +69,9 @@ object Ranks {
       (1000000000L / m, ((dampDen - dampNum) * 1000000000L) / (dampDen * m))
     }
     DriverRegime.collectIfSmall(e0, freeE0) match {
-      case Some(g) =>
-        DriverRegime.frame(edges.sparkSession, ranksLocal(g, iters, dampNum, dampDen,
-          seeds.map(_.toSet), lattice), RankSchema)
+      case Some(rows) =>
+        DriverRegime.frame(edges.sparkSession, ranksLocal(DriverRegime.Edges(rows, "src", "dst"),
+          iters, dampNum, dampDen, seeds.map(_.toSet), lattice), RankSchema)
       case None =>
         ranksLoop(e0, freeE0, iters, dampNum, dampDen, checkpointDir, lattice) { v =>
           seeds.fold(lit(v))(s => when(col("node").isin(s: _*), lit(v)).otherwise(lit(0L)))
@@ -116,18 +116,12 @@ object Ranks {
   private def ranksLoop(e0: DataFrame, freeE0: () => Unit, iters: Int, dampNum: Long,
       dampDen: Long, checkpointDir: Option[String], lattice: Long => (Long, Long))(
       targeted: Long => Column): DataFrame = {
-    // Dual-regime layout (the connectedComponents driverEdgeLimit
-    // pattern): below ClusterLayoutMinRows nodes, the rank frame
-    // broadcasts per round under AQE and the edge frame already streams —
-    // the loop stays fully adaptive with plain statSafe barriers. Past
-    // the bound nothing broadcasts and every round would re-shuffle the
-    // edge frame; the frames are then re-laid-out ONCE off their
-    // materialized checkpoints — edges clustered by src (the degree
-    // window rides it exchange-free), nodes by node — and round outputs
-    // keep their hash(node)+sorted layout through the barrier, making
-    // every round's two joins co-partitioned: the ONLY per-round exchange
-    // is the map-side-combined contribution sum. Stats are dropped at
-    // every barrier in both regimes (the statSafe contract).
+    // The edge frame is re-laid-out ONCE off its materialized checkpoint
+    // clustered by src (the degree window rides it exchange-free), the
+    // nodes by node, and round outputs keep their hash(node)+sorted layout
+    // through the barrier, making every round's two joins co-partitioned:
+    // the ONLY per-round exchange is the map-side-combined contribution
+    // sum. Stats are dropped at every barrier (the statSafe contract).
     val (nodes0, freeNodes0) = Barriers.statSafeFreeable(
       e0.select(col("src").as("node")).unionAll(e0.select(col("dst").as("node")))
         .distinct())
@@ -140,33 +134,20 @@ object Ranks {
       freeE0()
       return nodes0.select(col("node"), col("node").as("rank_e9"))
     }
-    val (e, freeE, cluster) = CheckpointLayout.statSafeReclusterIfOver(
-      e0, freeE0, measured = n, key = "src")
-    val (nodes, freeNodes, _) = CheckpointLayout.statSafeReclusterIfOver(
-      nodes0, freeNodes0, measured = n, key = "node")
-    val degFrame = e.withColumn("deg",
-      count(lit(1)).over(Window.partitionBy(col("src"))))
-    val (withDeg, freeWithDeg) =
-      if (cluster) CheckpointLayout.statSafeKeepingLayout(degFrame)
-      else (Barriers.statSafe(degFrame), () => ())
+    val (e, freeE) = CheckpointLayout.statSafeRecluster(e0, freeE0, key = "src")
+    val (nodes, freeNodes) = CheckpointLayout.statSafeRecluster(nodes0, freeNodes0, key = "node")
+    val (withDeg, freeWithDeg) = CheckpointLayout.statSafeKeepingLayout(
+      e.withColumn("deg", count(lit(1)).over(Window.partitionBy(col("src")))))
     val (init, tele) = lattice(n)
-    val initRanks = nodes.select(col("node"), targeted(init).as("r"))
-    val (ranks0, freeRanks0) =
-      if (cluster) CheckpointLayout.statSafeKeepingLayout(initRanks)
-      else (Barriers.statSafe(initRanks), () => ())
-    Fixpoint.fixedRounds(ranks0, freeRanks0, iters, cluster, checkpointDir,
+    val (ranks0, freeRanks0) = CheckpointLayout.statSafeKeepingLayout(
+      nodes.select(col("node"), targeted(init).as("r")))
+    Fixpoint.fixedRounds(ranks0, freeRanks0, iters, checkpointDir,
         release = () => { freeE(); freeNodes(); freeWithDeg() }) { ranks =>
-      // slim-side hints (CheckpointLayout.slimHint): in the small regime
-      // the rank frame (|nodes| rows, 2 longs) and the aggregated contrib
-      // frame are broadcast-safe by measurement — without the hint every
-      // round re-exchanges the EDGE frame for the contrib join (AQE only
-      // broadcasts after materializing the big side's shuffle stage)
-      val contrib = withDeg.join(CheckpointLayout.slimHint(ranks, cluster),
-          withDeg("src") === ranks("node"))
+      val contrib = withDeg.join(ranks, withDeg("src") === ranks("node"))
         .select(col("dst").as("node"),
           expr(s"(r * $dampNum) div ($dampDen * deg)").as("c"))
         .groupBy(col("node")).agg(sum(col("c")).as("s"))
-      nodes.join(CheckpointLayout.slimHint(contrib, cluster), Seq("node"), "left")
+      nodes.join(contrib, Seq("node"), "left")
         .select(col("node"), (targeted(tele) + coalesce(col("s"), lit(0L))).as("r"))
     }.select(col("node"), col("r").as("rank_e9"))
   }

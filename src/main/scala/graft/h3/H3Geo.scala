@@ -13,8 +13,8 @@ import java.lang.Math._
  * face centers, face axis azimuths, base-cell home positions) plus
  * everything else *derived* at class-init from that kernel by exact integer
  * hex-grid arithmetic and spherical trig. The derived tables are
- * cross-validated by [[H3GeoSelfCheck]] invariants (roundtrips, neighbor
- * reciprocity, ring sizes, 4-pi total area).
+ * cross-validated by the invariants of `H3GeoSpec` and `H3TablesSpec`
+ * (roundtrips, neighbor reciprocity, ring sizes, 4-pi total area).
  */
 object H3Geo {
 

@@ -50,48 +50,39 @@ import graft.util.Barriers.{freeAll, freeThunk}
   */
 object CheckpointLayout {
 
-  /** Rows of the loop's SLIM evolving side (labels, ranks — one row per
-    * node) above which an iterative loop's static frames are worth
-    * clustering. Below it the slim side fits AQE's runtime broadcast, so
-    * the big side already streams without exchanges and clustering would
-    * only ADD a build shuffle and cost the rounds their adaptive plans
-    * (measured: +40-70% on the sf0.1 graph-feature bench queries, whose
-    * graphs are thousands of nodes). Above it the slim side no longer
-    * broadcasts and every round starts re-shuffling the big frame — the
-    * regime the layout exists for. 1M rows ≈ 16-24 MB of (id, value)
-    * pairs, past the 10 MB default broadcast threshold with headroom;
-    * same spirit as connectedComponents' driverEdgeLimit bound. Loops
-    * whose slim-side size is unknowable upfront (SSSP's frontier, CC's
-    * label set) gate on their big-frame row count as a proxy and say so.
-    *
-    * The same bound also selects the one-operator small regime of the
-    * loops whose whole input fits the driver: iterative SSSP (measured
-    * edge rows) and `cellClusters(fixedRounds = None)` (measured distinct
-    * keys) collect their input once and replace the job-per-hop loop with
-    * one broadcast-adjacency job or a driver union-find; PageRank/PPR,
-    * label propagation and k-core (measured distinct edge rows) collect
-    * their edges once and replay their rounds on the driver (see
-    * [[smallRegime]] and `graft.util.DriverRegime`). Past the bound they
-    * run their `Fixpoint` loop — SSSP always clustered, PageRank and label
-    * propagation still gated on their node count as above, so their lazy
-    * unclustered chain serves only dense graphs.
+  /** The one bound on what an operator collects to the driver: measured
+    * rows at or under it run the one-operator small regime, rows past it
+    * the distributed loop ([[smallRegime]]; `graft.util.DriverRegime`
+    * collects). The measured frames: iterative SSSP's edge rows,
+    * `cellClusters(fixedRounds = None)`'s distinct keys, the distinct edge
+    * rows of PageRank/PPR, label propagation and k-core, and connected
+    * components' distinct bidirectional edge rows (integral ids only).
+    * 1M rows of two or three longs is 16-24 MB on the driver. Past the
+    * bound the loops run clustered (static frames laid out once by their
+    * join key, [[statSafeRecluster]]), except connected components,
+    * random walks and `TextOps.classifierTrain`, which still gate the
+    * layout on the size of their slim side (nodes or documents): below it
+    * that side fits AQE's runtime broadcast, and clustering would only add
+    * a build shuffle.
     *
     * Skew trade the clustered regime accepts: the co-partitioned round
     * join loses AQE's runtime skew-splitting, so a celebrity key's
     * partition becomes one long task instead of being split. The
     * per-round AGGREGATES still collapse hot keys map-side before their
     * shuffle (the LPA/PR contract), bounding the damage to the join's
-    * probe work; a workload where join skew outweighs the per-round
-    * shuffle savings sets the conf high to stay adaptive.
+    * probe work.
     */
   val ClusterLayoutMinRows = 1000000L
 
   /** [[ClusterLayoutMinRows]], overridable per session via the
-    * `graft.layout.clusterMinRows` conf (0 forces the clustered regime and
+    * `graft.layout.clusterMinRows` conf: a non-negative integer (0 forces
     * the loops — used by plan-shape and regime-equivalence specs; a huge
-    * value disables it). */
-  def clusterMinRows(spark: SparkSession): Long =
-    spark.conf.get("graft.layout.clusterMinRows", ClusterLayoutMinRows.toString).toLong
+    * value disables them). Any other value is rejected. */
+  def clusterMinRows(spark: SparkSession): Long = {
+    val v = spark.conf.get("graft.layout.clusterMinRows", ClusterLayoutMinRows.toString)
+    v.trim.toLongOption.filter(_ >= 0).getOrElse(throw new IllegalArgumentException(
+      s"graft.layout.clusterMinRows must be a non-negative integer, got '$v'"))
+  }
 
   /** Whether `measured` rows are in the small regime: at or under the
     * session's [[clusterMinRows]], which must be positive (0 forces the
@@ -197,41 +188,29 @@ object CheckpointLayout {
     (org.apache.spark.sql.graft.shims.dropOriginStats(out), freeAll(held))
   }
 
-  /** Regime-gated broadcast hint for a loop's SLIM evolving side (labels,
-    * ranks, keep-sets — the r16 SSSP frontier-hint generalized): in the
-    * small regime the loop's inputs are MEASURED at or under
-    * [[ClusterLayoutMinRows]] (≤ 1M rows of 2-3 longs ≈ tens of MB), so
-    * the slim side is broadcast-safe by measurement and the static hint
-    * removes the per-round big-side exchange AQE would otherwise
-    * materialize before its own runtime broadcast decision (measured on
-    * SSSP: the wall of a tiny-regime loop is stage scheduling, not task
-    * work). In the clustered regime the hint would broadcast an unbounded
-    * frame — identity keeps the co-partitioned streaming join. */
-  def slimHint(df: DataFrame, clustered: Boolean): DataFrame =
-    if (clustered) df else org.apache.spark.sql.functions.broadcast(df)
+  /** Re-lays the materialized stat-safe `frame0` out clustered by `key`
+    * off its blocks (one shuffle, no recompute), materializes the copy and
+    * frees the original. Returns the copy and its free thunk. */
+  def statSafeRecluster(frame0: DataFrame, free0: () => Unit, key: String,
+      distinct: Boolean = false): (DataFrame, () => Unit) = {
+    val (c, f) = statSafeClusteredBy(frame0, key, distinct)
+    materialize(c) // then free the original
+    free0()
+    (c, f)
+  }
 
-  /** The dual-regime step every loop shares: keep the already-measured
-    * statSafe frame when `measured` is at or under the session bound;
-    * past it, re-lay the frame out clustered by `key` off its
-    * materialized blocks (one shuffle, no recompute), materialize the
-    * copy, and free the original. Returns the frame to loop over, its
-    * free thunk, and whether the clustered regime is on (the caller
-    * keys its per-round barrier choice off it). `measured` should be
-    * the SLIM side's row count where the caller knows it (node count);
-    * big-frame counts are an accepted proxy where it does not (SSSP
-    * frontier, CC labels) — see [[ClusterLayoutMinRows]].
-    */
+  /** The node-count layout gate of connected components and random walks:
+    * keep the already-measured statSafe frame when `measured` (their node
+    * count) is at or under the session bound; past it,
+    * [[statSafeRecluster]]. Returns the frame to loop over, its free
+    * thunk, and whether the clustered layout is on. */
   def statSafeReclusterIfOver(frame0: DataFrame, free0: () => Unit,
-      measured: Long, key: String,
-      distinct: Boolean = false): (DataFrame, () => Unit, Boolean) = {
+      measured: Long, key: String): (DataFrame, () => Unit, Boolean) =
     if (smallRegime(frame0.sparkSession, measured)) (frame0, free0, false)
     else {
-      val (c, f) = statSafeClusteredBy(frame0, key, distinct)
-      materialize(c) // then free the original
-      free0()
+      val (c, f) = statSafeRecluster(frame0, free0, key)
       (c, f, true)
     }
-  }
 
   /** Shuffle-free eager materialization: `Dataset.count()` would add a
     * partial-count + SinglePartition exchange job on top of the scan —

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -629,23 +629,23 @@ object Dedup {
     * logged as a warning rather than silently returned.
     *
     * Small-graph regime: when the (deduplicated, bidirectional) edge list
-    * has at most `driverEdgeLimit` rows and integral ids, components are
-    * solved by a driver-side union-find over the collected edges — the
-    * same driver-held BOUNDED-frame contract as the bloom/centroid
-    * builders (1M edges = 16 MB; the limit, not the corpus, bounds driver
-    * memory). The iterative loop costs ~4 sequential shuffle waves PER
-    * ROUND regardless of data size — on the post-rep-collapse graphs the
-    * perceptual dedup family produces (edges scale with distinct CONTENT,
-    * not corpus size: 3.8k edges at sf0.1, and still well under the limit
-    * at the 30× probe), loop job overhead WAS most of the query (measured
-    * 7.0 s of p62's 7.8 s). Linking the larger root under the smaller
-    * makes each final root the component's minimum id, so the output is
-    * IDENTICAL to the distributed loop's min-label closure (spec-pinned
-    * on random graphs). Set `driverEdgeLimit = 0` to force the
-    * distributed path; graphs over the limit use it automatically. */
+    * has integral ids and at most the session's layout bound of rows
+    * (`CheckpointLayout.smallRegime`, measured and collected by
+    * `DriverRegime.collectIfSmall`), components are solved by a
+    * driver-side union-find over the collected edges (1M edges = 16 MB;
+    * the bound, not the corpus, bounds driver memory). The iterative loop
+    * costs ~4 sequential shuffle waves PER ROUND regardless of data size —
+    * on the post-rep-collapse graphs the perceptual dedup family produces
+    * (edges scale with distinct CONTENT, not corpus size: 3.8k edges at
+    * sf0.1, and still well under the bound at the 30× probe), loop job
+    * overhead WAS most of the query (measured 7.0 s of p62's 7.8 s).
+    * Linking the larger root under the smaller makes each final root the
+    * component's minimum id, so the output is IDENTICAL to the distributed
+    * loop's min-label closure (spec-pinned on random graphs).
+    * `graft.layout.clusterMinRows=0` forces the distributed path; graphs
+    * over the bound use it automatically. */
   def connectedComponents(pairs: DataFrame, maxRounds: Int = 30,
-      checkpointDir: Option[String] = None,
-      driverEdgeLimit: Long = 1000000L): DataFrame = {
+      checkpointDir: Option[String] = None): DataFrame = {
     // statSafe, not a bare localCheckpoint: the pairs subtree's size
     // ESTIMATE is untrustworthy (distinct over an exploded band join) and
     // a too-small estimate makes the static planner broadcast the edge
@@ -664,30 +664,23 @@ object Dedup {
     val idType = edges0.schema("__src").dataType
     val integral = idType == org.apache.spark.sql.types.LongType ||
       idType == org.apache.spark.sql.types.IntegerType
-    // the count doubles as the edge materialization the loop's first round
-    // would otherwise pay (edges is a lazy localCheckpoint)
-    val edgeCount = edges0.count()
-    if (integral && driverEdgeLimit > 0 && edgeCount <= driverEdgeLimit) {
-      // driverComponents collects the edges into a local result frame —
-      // nothing downstream reads the checkpoint blocks
-      val out = driverComponents(edges0, idType)
-      freeEdges0()
-      return out
-    }
-    // Distributed regime. Past ClusterLayoutMinRows the edge frame is
-    // re-laid-out ONCE clustered by __src off its materialized blocks: in
-    // the non-broadcast regime every relax round's edges⋈labels join then
-    // streams the edge frame in place (no per-round exchange OR sort of
-    // the big side) — each round shuffles only the slim label frame.
-    // Between driverEdgeLimit and the cluster bound, labels broadcast
-    // under AQE and the plain frame already streams.
+    // the measurement doubles as the edge materialization the loop's first
+    // round would otherwise pay (edges0 is a lazy checkpoint)
+    val small = if (integral) graft.util.DriverRegime.collectIfSmall(edges0, freeEdges0) else None
+    if (small.isDefined) return driverComponents(edges0.sparkSession, small.get, idType)
+    // Distributed regime. Past ClusterLayoutMinRows nodes the edge frame
+    // is re-laid-out ONCE clustered by __src off its materialized blocks:
+    // in the non-broadcast regime every relax round's edges⋈labels join
+    // then streams the edge frame in place (no per-round exchange OR sort
+    // of the big side) — each round shuffles only the slim label frame.
+    // Below it, labels broadcast under AQE and the plain frame already
+    // streams.
     // The regime gate keys on the LABEL frame's node count — what
     // broadcast viability actually depends on — not the edge count: a
     // dense graph (>1M edges, few distinct nodes) keeps AQE's runtime
     // broadcast + skew-split for its rounds. The distinct-node count is
-    // cheap here (one count over the already-materialized edge blocks)
-    // and doubles as labels0's materialization, which round 1 would
-    // otherwise pay.
+    // cheap here (one count over the edge blocks) and doubles as labels0's
+    // materialization, which round 1 would otherwise pay.
     val (labels0, freeLabels0) = graft.util.Barriers.statSafeFreeable(
       edges0.select(col("__src").as("id")).distinct()
         .withColumn("component", col("id")))
@@ -771,16 +764,13 @@ object Dedup {
     def ids: Array[Long] = parent.keysIterator.toArray.sorted
   }
 
-  /** Driver union-find over a bounded collected edge list (the
+  /** Driver union-find over the collected `(__src, __dst)` edge rows (the
     * [[connectedComponents]] small-graph regime). */
-  private def driverComponents(edges: DataFrame,
+  private def driverComponents(spark: SparkSession, edges: Array[Row],
       idType: org.apache.spark.sql.types.DataType): DataFrame = {
-    def asLong(r: Row, i: Int): Long = idType match {
-      case org.apache.spark.sql.types.IntegerType => r.getInt(i).toLong
-      case _ => r.getLong(i)
-    }
     val uf = new MinRootUnionFind
-    edges.collect().foreach(row => uf.union(asLong(row, 0), asLong(row, 1)))
+    edges.foreach(r => uf.union(r.getAs[Number]("__src").longValue,
+      r.getAs[Number]("__dst").longValue))
     def lit(v: Long): Any = idType match {
       case org.apache.spark.sql.types.IntegerType => v.toInt
       case _ => v
@@ -789,7 +779,7 @@ object Dedup {
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("id", idType, nullable = false),
       org.apache.spark.sql.types.StructField("component", idType, nullable = false)))
-    graft.util.DriverRegime.frame(edges.sparkSession, rows, schema)
+    graft.util.DriverRegime.frame(spark, rows, schema)
   }
 
   /** Near-dup GROUPS straight from a perceptual-hash column, with

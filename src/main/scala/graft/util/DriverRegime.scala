@@ -5,11 +5,12 @@ import org.apache.spark.sql.types.StructType
 
 import graft.pipeline.CheckpointLayout
 
-/** The one-operator small regime of the iterative loops: an input measured
-  * at or under the layout bound (`CheckpointLayout.smallRegime`) is
-  * collected once, the loop's rounds are replayed on the driver, and the
-  * result comes back as a parallelized frame — no job per round, and no
-  * checkpoint left pinned behind the result. */
+/** The one-operator small regime of the iterative loops and of connected
+  * components: an input measured at or under the layout bound
+  * (`CheckpointLayout.smallRegime`) is collected once, the operator runs
+  * on the driver, and the result comes back as a parallelized frame — no
+  * job per round, and no checkpoint left pinned behind the result.
+  * [[collectIfSmall]] is the one place that decides and collects. */
 object DriverRegime {
 
   /** `rows` as a frame of `schema`, parallelized over at most 32
@@ -26,22 +27,30 @@ object DriverRegime {
     def size: Int = src.length
   }
 
-  /** Measures `edges` — a lazy stat-safe barrier over two non-null long
-    * columns, which the count materializes (counting the executed plan's
-    * rows adds no aggregation exchange). In the small regime the edges are
-    * collected, `free` releases the barrier's blocks, and the edge list
-    * comes back indexed; past the bound the result is None and the
-    * barrier stays materialized for the loop. */
-  def collectIfSmall(edges: DataFrame, free: () => Unit): Option[Edges] =
-    if (!CheckpointLayout.smallRegime(edges.sparkSession,
-        edges.queryExecution.toRdd.count())) None
-    else {
-      val rows = edges.collect()
-      free()
-      val a = rows.map(_.getLong(0))
-      val b = rows.map(_.getLong(1))
+  object Edges {
+    /** The edges of collected `rows` whose long fields `src` and `dst`
+      * hold the endpoints. */
+    def apply(rows: Array[Row], src: String, dst: String): Edges = {
+      val a = rows.map(_.getAs[Long](src))
+      val b = rows.map(_.getAs[Long](dst))
       val ids = (a ++ b).distinct.sorted
       def index(v: Array[Long]) = v.map(java.util.Arrays.binarySearch(ids, _))
-      Some(new Edges(ids, index(a), index(b)))
+      new Edges(ids, index(a), index(b))
+    }
+  }
+
+  /** Measures `barrier` — a lazy stat-safe barrier, which the count
+    * materializes (counting the executed plan's rows adds no aggregation
+    * exchange). In the small regime its rows are collected, `free`
+    * releases the barrier's blocks, and the rows come back (read them by
+    * field name); past the bound the result is None and the barrier stays
+    * materialized for the loop. */
+  def collectIfSmall(barrier: DataFrame, free: () => Unit): Option[Array[Row]] =
+    if (!CheckpointLayout.smallRegime(barrier.sparkSession,
+        barrier.queryExecution.toRdd.count())) None
+    else {
+      val rows = barrier.collect()
+      free()
+      Some(rows)
     }
 }

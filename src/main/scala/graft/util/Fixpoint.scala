@@ -12,16 +12,15 @@ import graft.pipeline.CheckpointLayout
   * the round cap. A loop supplies only its step; broadcast hints and any
   * other plan choice stay inside the step.
   *
-  * Two disciplines:
-  *  - [[converge]]: every round is ONE eager job that materializes the
-  *    step's frame and counts its changed rows through an accumulator
+  * Two disciplines, both eager (one barrier job per round):
+  *  - [[converge]]: each round materializes the step's frame and counts
+  *    its changed rows through an accumulator
   *    (`Barriers.roundBarrierCountingFreeable`); the loop stops at its
   *    stop rule or at `maxRounds`.
-  *  - [[fixedRounds]]: a fixed number of rounds; a lazy stat-safe chain in
-  *    the small regime, an eager layout-keeping barrier per round in the
-  *    clustered one (`CheckpointLayout.roundBarrierKeepingLayout`).
+  *  - [[fixedRounds]]: a fixed number of layout-keeping round barriers
+  *    (`CheckpointLayout.roundBarrierKeepingLayout`).
   *
-  * Blocks held at any moment in an eager loop: the current generation
+  * Blocks held at any moment: the current generation
   * (plus the caller's static frames), not one generation per round. */
 object Fixpoint {
 
@@ -88,28 +87,24 @@ object Fixpoint {
     Result(state, free, rounds, converged)
   }
 
-  /** Run `rounds` rounds of `step` from `init`. Small regime: each round's
-    * frame is a lazy `Barriers.statSafe` barrier and the whole chain runs
-    * in the consumer's job; nothing is freed. Clustered regime: each round
-    * is an eager layout-keeping barrier (reliable every
-    * `Barriers.ReliableEvery`-th round under `checkpointDir`), the
-    * superseded generation (first `freeInit`) is freed, and `release`
-    * frees the caller's static frames after the last round. */
+  /** Run `rounds` rounds of `step` from `init`, each an eager
+    * layout-keeping barrier (reliable every `Barriers.ReliableEvery`-th
+    * round under `checkpointDir`). The superseded generation (first
+    * `freeInit`) is freed, and `release` frees the caller's static frames
+    * after the last round. */
   def fixedRounds(init: DataFrame, freeInit: () => Unit, rounds: Int,
-      clustered: Boolean, checkpointDir: Option[String],
+      checkpointDir: Option[String],
       release: () => Unit = () => ())(step: DataFrame => DataFrame): DataFrame = {
     var state = init
     var free = freeInit
     for (round <- 0 until rounds) {
-      if (clustered) {
-        val (next, freeNext) = CheckpointLayout.roundBarrierKeepingLayout(
-          step(state), round, checkpointDir)
-        free()
-        state = next
-        free = freeNext
-      } else state = Barriers.statSafe(step(state))
+      val (next, freeNext) = CheckpointLayout.roundBarrierKeepingLayout(
+        step(state), round, checkpointDir)
+      free()
+      state = next
+      free = freeNext
     }
-    if (clustered) release()
+    release()
     state
   }
 }

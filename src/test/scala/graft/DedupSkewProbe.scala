@@ -81,8 +81,8 @@ object DedupSkewProbe {
         .localCheckpoint(true)
     }
     val comps = timed("connectedComponents") {
-      val c = graft.pipeline.Dedup.connectedComponents(pairs, driverEdgeLimit = 0)
-        .localCheckpoint(true)
+      val c = graft.util.Regimes.clustered(spark)(
+        graft.pipeline.Dedup.connectedComponents(pairs).localCheckpoint(true))
       c.count(); c
     }
     val giant = comps.groupBy(col("component")).agg(count(lit(1)).as("n"))

@@ -63,10 +63,10 @@ object LayoutScaleProbe {
       if (loops("lpa")) timed(s"pass$pass lpa(5) $regime") {
         graft.graph.Communities.labelPropagation(edges, $"s", $"d", iters = 5).count()
       }
+      // CC always runs its distributed loop here (the bound at 0 forces it)
       if (loops("cc")) timed(s"pass$pass cc $regime") {
-        graft.pipeline.Dedup.connectedComponents(
-          edges.select(col("s").as("id_a"), col("d").as("id_b")),
-          driverEdgeLimit = 0).count()
+        graft.util.Regimes.clustered(spark)(graft.pipeline.Dedup.connectedComponents(
+          edges.select(col("s").as("id_a"), col("d").as("id_b"))).count())
       }
     }
     spark.conf.unset("graft.layout.clusterMinRows")

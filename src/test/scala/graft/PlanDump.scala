@@ -96,7 +96,8 @@ Audited shapes pinned here against regression:
   rep-collapsed component graph resolves in the bounded driver
   union-find regime (edges scale with distinct content), so the final
   plan shows the components result as a parallelized leaf, not loop
-  rounds — graphs past driverEdgeLimit run the distributed loop instead.
+  rounds — graphs past the layout bound (`graft.layout.clusterMinRows`)
+  run the distributed loop instead.
 - p65 (perplexity buckets): both Window nodes run over the aggregated
   (lang, score) CLASS frame (rowCount ≈ distinct lattice scores per
   language, not documents), and the bucket assignment joins back as a

@@ -52,6 +52,14 @@ class H3ClustersSpec extends AnyFunSuite {
       k(None, Some(1)) -> None, k(Some(12345L), Some(1)) -> Some(12345L),
       k(Some(far), Some(1)) -> Some(far), k(Some(far), Some(2)) -> Some(far))
     assert(got == expected)
+    // the same keys under binary values, which group by content
+    val binary = keys.toDF("cell", "value")
+      .withColumn("value", col("value").cast("string").cast("binary"))
+    def binaryClusters = H3Clusters.cellClusters(binary, "cell", Some("value")).collect()
+      .map(r => (Option(r.get(0)), Option(r.getAs[Array[Byte]](1)).map(_.toSeq)) -> Option(r.get(2)))
+    val small = binaryClusters
+    assert(small.length == keys.size && small.toMap == Regimes.clustered(spark)(binaryClusters).toMap)
+    assert(small.map(_._2).sortBy(_.toString).toSeq == got.values.toSeq.sortBy(_.toString))
   }
 
   test("regimes agree on the h3_23_clusters shape") {

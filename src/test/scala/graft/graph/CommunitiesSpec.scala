@@ -10,9 +10,8 @@ import graft.util.Regimes
   * seeded random graph, a planted-partition recovery check, and the
   * synchronous-update semantics pinned on an oscillating bipartite
   * pair (the case where async and sync LPA differ). Every case runs in
-  * all three regimes (one operator, the clustered loop, and the lazy
-  * chain where the graph has more edges than nodes) and the regimes must
-  * agree. */
+  * both regimes (one operator and the clustered loop) and the regimes
+  * must agree. */
 class CommunitiesSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
@@ -22,17 +21,13 @@ class CommunitiesSpec extends AnyFunSuite {
     edges.filter(e => e._1 != e._2)
       .map(e => (math.min(e._1, e._2), math.max(e._1, e._2))).toSet
 
-  /** `run`'s `(node, label)` rows in every regime of the graph `edges`. */
-  private def labels(edges: Seq[(Long, Long)])(run: => DataFrame): Map[Long, Long] = {
-    val und = undirected(edges)
-    val nodes = und.flatMap(e => Seq(e._1, e._2)).size.toLong
-    Regimes.allRegimes(spark, nodes, und.size.toLong)(run)
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-  }
+  /** `run`'s `(node, label)` rows in both regimes. */
+  private def labels(run: => DataFrame): Map[Long, Long] =
+    Regimes.bothRegimes(spark)(run).map(r => r.getLong(0) -> r.getLong(1)).toMap
 
   private def run(edges: Seq[(Long, Long)], iters: Int): Map[Long, Long] = {
     val df = edges.toDF("src", "dst").repartition(5)
-    labels(edges)(Communities.labelPropagation(df, col("src"), col("dst"), iters))
+    labels(Communities.labelPropagation(df, col("src"), col("dst"), iters))
   }
 
   private def brute(edges: Seq[(Long, Long)], iters: Int): Map[Long, Long] = {
@@ -55,6 +50,14 @@ class CommunitiesSpec extends AnyFunSuite {
     (1 to 3).foreach { it =>
       assert(run(edges, it) == brute(edges, it), s"round $it")
     }
+    // a dense graph (edges > nodes) with the bound at its node count runs
+    // the clustered loop
+    val und = undirected(edges)
+    val nodes = und.flatMap(e => Seq(e._1, e._2)).size.toLong
+    assert(nodes < und.size)
+    val dense = Regimes.bounded(spark, nodes)(Communities.labelPropagation(
+      edges.toDF("src", "dst"), col("src"), col("dst"), 3).collect())
+    assert(dense.map(r => r.getLong(0) -> r.getLong(1)).toMap == brute(edges, 3))
   }
 
   test("synchronous update: a lone edge swaps labels each round") {
@@ -105,7 +108,7 @@ class CommunitiesSpec extends AnyFunSuite {
     assert(!got3.contains(77L), "a self-loop alone makes no node")
     val nulls = edges.map { case (a, b) => (Option(a), Option(b)) } ++
       Seq((None, Some(3L)), (Some(4L), None), (None, None))
-    val got = labels(edges)(Communities.labelPropagation(nulls.toDF("src", "dst"),
+    val got = labels(Communities.labelPropagation(nulls.toDF("src", "dst"),
       col("src"), col("dst"), 3))
     assert(got == brute(edges, 3))
   }
@@ -113,11 +116,11 @@ class CommunitiesSpec extends AnyFunSuite {
   test("Int ids label as longs; an empty graph labels no node") {
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (10L, 11L))
     val ints = edges.map { case (a, b) => (a.toInt, b.toInt) }.toDF("src", "dst")
-    assert(labels(edges)(Communities.labelPropagation(ints, col("src"), col("dst"), 2)) ==
+    assert(labels(Communities.labelPropagation(ints, col("src"), col("dst"), 2)) ==
       brute(edges, 2))
     assert(Communities.labelPropagation(ints, col("src"), col("dst"), 2)
       .schema.map(_.dataType.simpleString) == Seq("bigint", "bigint"))
     val empty = Seq.empty[(Long, Long)].toDF("src", "dst")
-    assert(labels(Nil)(Communities.labelPropagation(empty, col("src"), col("dst"), 2)).isEmpty)
+    assert(labels(Communities.labelPropagation(empty, col("src"), col("dst"), 2)).isEmpty)
   }
 }

@@ -10,8 +10,7 @@ import graft.util.Regimes
   * random graph (exact — the recurrence has no floats), partitioning
   * invariance, and ranking laws (authority concentrates on the
   * high-indegree hub; mass never exceeds the initial lattice total).
-  * Every case runs in all three regimes (one operator, the clustered
-  * loop, and the lazy chain where the graph has more edges than nodes)
+  * Every case runs in both regimes (one operator and the clustered loop)
   * and the regimes must agree. */
 class RanksSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -25,13 +24,9 @@ class RanksSpec extends AnyFunSuite {
     (s, d)
   }.distinct
 
-  /** `run`'s `(node, rank_e9)` rows in every regime of a graph whose
-    * distinct non-null edges are `es`. */
-  private def ranks(es: Seq[(Long, Long)])(run: => DataFrame): Map[Long, Long] = {
-    val nodes = (es.map(_._1) ++ es.map(_._2)).distinct.size.toLong
-    Regimes.allRegimes(spark, nodes, es.distinct.size.toLong)(run)
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-  }
+  /** `run`'s `(node, rank_e9)` rows in both regimes. */
+  private def ranks(run: => DataFrame): Map[Long, Long] =
+    Regimes.bothRegimes(spark)(run).map(r => r.getLong(0) -> r.getLong(1)).toMap
 
   private def refPageRank(all: Seq[(Long, Long)], iters: Int): Map[Long, Long] = {
     val es = all.distinct
@@ -50,9 +45,15 @@ class RanksSpec extends AnyFunSuite {
 
   test("pageRank matches the sequential integer recurrence exactly") {
     val df = edges.toDF("s", "d").repartition(9)
-    val got = ranks(edges)(Ranks.pageRank(df, $"s", $"d", iters = 3))
+    val got = ranks(Ranks.pageRank(df, $"s", $"d", iters = 3))
     val want = refPageRank(edges, 3)
     assert(got == want)
+    // a dense graph (edges > nodes) with the bound at its node count runs
+    // the clustered loop
+    val nodes = (edges.map(_._1) ++ edges.map(_._2)).distinct.size.toLong
+    assert(nodes < edges.size)
+    val dense = Regimes.bounded(spark, nodes)(Ranks.pageRank(df, $"s", $"d", iters = 3).collect())
+    assert(dense.map(r => r.getLong(0) -> r.getLong(1)).toMap == want)
   }
 
   test("loop layout: one shuffle per extra iteration in the non-broadcast regime") {
@@ -114,8 +115,8 @@ class RanksSpec extends AnyFunSuite {
   }
 
   test("ranking laws: hub dominates; lattice mass bounded; partition-invariant") {
-    val a = ranks(edges)(Ranks.pageRank(edges.toDF("s", "d").repartition(1), $"s", $"d", 3))
-    val b = ranks(edges)(Ranks.pageRank(edges.toDF("s", "d").repartition(13), $"s", $"d", 3))
+    val a = ranks(Ranks.pageRank(edges.toDF("s", "d").repartition(1), $"s", $"d", 3))
+    val b = ranks(Ranks.pageRank(edges.toDF("s", "d").repartition(13), $"s", $"d", 3))
     assert(a == b) // integer arithmetic: no summation-order wiggle at all
     assert(a(7L) == a.values.max, "the hub carries the top rank")
     assert(a(7L) > 3L * (a.values.sum / a.size), "hub well above mean")
@@ -143,11 +144,11 @@ class RanksSpec extends AnyFunSuite {
   test("personalizedPageRank matches the sequential recurrence; mass localizes at seeds") {
     val seeds = Seq(3L, 11L)
     val df = edges.toDF("s", "d").repartition(9)
-    val got = ranks(edges)(Ranks.personalizedPageRank(df, $"s", $"d", seeds, iters = 3))
+    val got = ranks(Ranks.personalizedPageRank(df, $"s", $"d", seeds, iters = 3))
     assert(got == refPpr(edges, seeds, 3))
     // two components joined by NO path: mass never reaches the island
     val island = edges ++ Seq((100L, 101L), (101L, 102L), (102L, 100L))
-    val gotI = ranks(island)(
+    val gotI = ranks(
       Ranks.personalizedPageRank(island.toDF("s", "d"), $"s", $"d", seeds, 3))
     assert(Seq(100L, 101L, 102L).forall(n => gotI(n) == 0L))
     assert(gotI.filterKeys(_ < 100L).toMap == refPpr(island, seeds, 3).filterKeys(_ < 100L).toMap)
@@ -157,7 +158,7 @@ class RanksSpec extends AnyFunSuite {
     // seeds.length (4) splits the mass; 999 is no node, so its share and
     // teleport reach no one
     val seeds = Seq(3L, 3L, 11L, 999L)
-    val got = ranks(edges)(Ranks.personalizedPageRank(edges.toDF("s", "d"), $"s", $"d", seeds, 3))
+    val got = ranks(Ranks.personalizedPageRank(edges.toDF("s", "d"), $"s", $"d", seeds, 3))
     assert(got == refPpr(edges, seeds, 3))
     assert(!got.contains(999L))
   }
@@ -165,7 +166,7 @@ class RanksSpec extends AnyFunSuite {
   test("duplicate edges count once; self-loops are kept") {
     val loops = Seq((5L, 5L), (7L, 7L), (50L, 50L)) // 50 has only its self-loop
     val es = edges ++ edges.take(60) ++ loops ++ loops
-    val got = ranks(es)(Ranks.pageRank(es.toDF("s", "d").repartition(4), $"s", $"d", 3))
+    val got = ranks(Ranks.pageRank(es.toDF("s", "d").repartition(4), $"s", $"d", 3))
     assert(got == refPageRank(es, 3))
     assert(got.contains(50L))
   }
@@ -173,10 +174,10 @@ class RanksSpec extends AnyFunSuite {
   test("rows with a null endpoint are dropped; Int ids rank as longs") {
     val nulls = edges.map { case (s, d) => (Option(s), Option(d)) } ++
       Seq((None, Some(3L)), (Some(4L), None), (None, None))
-    val gotNulls = ranks(edges)(Ranks.pageRank(nulls.toDF("s", "d"), $"s", $"d", 3))
+    val gotNulls = ranks(Ranks.pageRank(nulls.toDF("s", "d"), $"s", $"d", 3))
     assert(gotNulls == refPageRank(edges, 3))
     val ints = edges.map { case (s, d) => (s.toInt, d.toInt) }.toDF("s", "d")
-    val gotInts = ranks(edges)(Ranks.pageRank(ints, $"s", $"d", 3))
+    val gotInts = ranks(Ranks.pageRank(ints, $"s", $"d", 3))
     assert(gotInts == refPageRank(edges, 3))
     assert(Ranks.pageRank(ints, $"s", $"d", 3).schema.map(_.dataType.simpleString) ==
       Seq("bigint", "bigint"))
@@ -184,8 +185,8 @@ class RanksSpec extends AnyFunSuite {
 
   test("an empty graph ranks no node") {
     val empty = Seq.empty[(Long, Long)].toDF("s", "d")
-    assert(ranks(Nil)(Ranks.pageRank(empty, $"s", $"d", 3)).isEmpty)
-    assert(ranks(Nil)(Ranks.personalizedPageRank(empty, $"s", $"d", Seq(1L), 3)).isEmpty)
+    assert(ranks(Ranks.pageRank(empty, $"s", $"d", 3)).isEmpty)
+    assert(ranks(Ranks.personalizedPageRank(empty, $"s", $"d", Seq(1L), 3)).isEmpty)
     assert(Ranks.pageRank(empty, $"s", $"d", 3).columns.toSeq == Seq("node", "rank_e9"))
   }
 }

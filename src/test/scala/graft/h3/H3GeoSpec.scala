@@ -4,8 +4,9 @@ import org.scalatest.funsuite.AnyFunSuite
 import java.lang.Math._
 
 /**
- * Geometry + traversal invariants (the full battery lives in
- * [[H3GeoSelfCheck]]; this spec pins the critical subset in CI).
+ * Geometry + traversal invariants: the derived icosahedron and base-cell
+ * tables, coordinate roundtrips, areas, boundaries and edge lengths
+ * against the published H3 tables, and the grid traversal laws.
  */
 class H3GeoSpec extends AnyFunSuite {
   import H3Geo._
@@ -43,8 +44,47 @@ class H3GeoSpec extends AnyFunSuite {
   }
 
   test("res-0 cells tile the sphere to exactly 4 pi") {
-    val total = H3Core.res0Cells().map(cellAreaRads2).sum
-    assert(abs(total - 4 * PI) < 1e-9)
+    for (res <- 0 to 1) {
+      val total = H3Core.res0Cells().flatMap(H3Core.cellToChildren(_, res)).map(cellAreaRads2).sum
+      assert(abs(total - 4 * PI) < 1e-9, s"res $res")
+    }
+  }
+
+  test("icosahedron: unit face centers at the dodecahedral pairwise angles; axis azimuths in [0, 2 pi)") {
+    val pts = faceCenterPoint
+    assert(pts.length == 20)
+    pts.foreach(p => assert(abs(p(0) * p(0) + p(1) * p(1) + p(2) * p(2) - 1.0) < 1e-12))
+    // the 20 face centers are the vertices of a dodecahedron: each has 3
+    // neighbours at cos = sqrt(5)/3, 6 at 1/3, 6 at -1/3, 3 at -sqrt(5)/3
+    // and its antipode at -1 — 190 pairs in five classes
+    val classes = Seq(sqrt(5) / 3 -> 30, 1.0 / 3 -> 60, -1.0 / 3 -> 60, -sqrt(5) / 3 -> 30, -1.0 -> 10)
+    val dots = for (a <- 0 until 20; b <- a + 1 until 20)
+      yield pts(a)(0) * pts(b)(0) + pts(a)(1) * pts(b)(1) + pts(a)(2) * pts(b)(2)
+    for ((cos, n) <- classes) assert(dots.count(d => abs(d - cos) < 1e-9) == n, s"cos $cos")
+    assert(faceAxesAz0.length == 20 && faceAxesAz0.forall(a => a >= 0.0 && a < 2 * PI))
+  }
+
+  test("faceIjkBaseCells covers all 122 base cells; home positions resolve to themselves with rotation 0") {
+    val seen = for (f <- 0 until 20; i <- 0 to 2; j <- 0 to 2; k <- 0 to 2)
+      yield faceIjkBaseCells(f)(i)(j)(k)(0)
+    assert(seen.toSet == (0 until 122).toSet)
+    for (bc <- 0 until 122) {
+      val d = baseCellData(bc)
+      val e = faceIjkBaseCells(d(0))(d(1))(d(2))(d(3))
+      assert(e(0) == bc && e(1) == 0, s"base cell $bc resolves to ${e(0)} rotation ${e(1)}")
+    }
+  }
+
+  test("boundaries at res 4 and 5 for every base cell: all vertices, no far vertex") {
+    for (bc <- 0 until 122; res <- 4 to 5) {
+      var h = H3Core.res0Cells()(bc)
+      for (r <- 1 to res) h = H3Core.withDigit(H3Core.withRes(h, r), r, 0)
+      val c = cellToLatLngRads(h)
+      val verts = cellToBoundaryRads(h)
+      assert(verts.length >= (if (H3Core.isPentagon(h)) 5 else 6), s"bc $bc res $res")
+      val dists = verts.map(greatCircleDistanceRads(c, _))
+      assert(dists.max <= 3 * dists.min, s"bc $bc res $res: vertex distance ratio")
+    }
   }
 
   test("average res-0 hexagon area matches the published H3 table") {
@@ -63,6 +103,13 @@ class H3GeoSpec extends AnyFunSuite {
         assert(latLngToCell(g.lat, g.lng, H3Core.getResolution(m)) == m)
       }
     }
+  }
+
+  test("sampled res-8 average edge length matches the published 0.461 km") {
+    val cells = sampleCells(8).filterNot(H3Core.isPentagon).take(40)
+    val lens = cells.flatMap(c => H3Core.originToDirectedEdges(c).map(edgeLengthKm))
+    val avg = lens.sum / lens.length
+    assert(avg > 0.40 && avg < 0.53, s"average $avg km")
   }
 
   test("pentagon disk k=1 has 5 neighbors") {

@@ -38,6 +38,25 @@ class CheckpointLayoutSpec extends AnyFunSuite {
       s"expected the captured layout to satisfy the groupBy in:\n$fin")
   }
 
+  test("graft.layout.clusterMinRows: a non-integer or negative value is rejected by name") {
+    val key = "graft.layout.clusterMinRows"
+    val pairs = Seq((1L, 2L)).toDF("id_a", "id_b")
+    try {
+      for (bad <- Seq("1e6", "-5", "many")) {
+        spark.conf.set(key, bad)
+        val e = intercept[IllegalArgumentException](CheckpointLayout.clusterMinRows(spark))
+        assert(e.getMessage.contains(key) && e.getMessage.contains(s"'$bad'"), e.getMessage)
+        // an operator deciding its regime fails the same way
+        intercept[IllegalArgumentException](Dedup.connectedComponents(pairs))
+      }
+      for ((ok, want) <- Seq("0" -> 0L, "7" -> 7L, Long.MaxValue.toString -> Long.MaxValue)) {
+        spark.conf.set(key, ok)
+        assert(CheckpointLayout.clusterMinRows(spark) == want)
+      }
+    } finally spark.conf.unset(key)
+    assert(CheckpointLayout.clusterMinRows(spark) == CheckpointLayout.ClusterLayoutMinRows)
+  }
+
   test("direct path: expression-derived key survives the checkpoint") {
     val df = spark.range(200).select((col("id") % 17).as("k"), col("id").as("v"))
     val ck = CheckpointLayout.clusteredBy(df, "k")
@@ -119,10 +138,10 @@ class CheckpointLayoutSpec extends AnyFunSuite {
   }
 
   test("clustered regime is value-identical to the default regime across the loops") {
-    // Every dual-regime loop (CC, LPA, walks, SSSP) must return the exact
-    // same rows whether its static frames are clustered or not — the
+    // Every dual-regime operator (CC, LPA, walks, SSSP) must return the
+    // exact same rows in its default regime and its clustered loop — the
     // layout is a physical property only. Forced via the session conf the
-    // loops read their bound from.
+    // operators read their bound from.
     val rnd = new scala.util.Random(7)
     val es = (0 until 150).map { _ =>
       (rnd.nextInt(50).toLong, rnd.nextInt(50).toLong)
@@ -130,9 +149,9 @@ class CheckpointLayoutSpec extends AnyFunSuite {
     val pairDf = es.toDF("id_a", "id_b")
     val graphDf = es.toDF("origin", "destination")
       .withColumn("weight", (pmod(col("origin") * 31 + col("destination"), lit(7)) + 1).cast("double"))
+    def ccRows(): Set[String] = Dedup.connectedComponents(pairDf).collect().map(_.toString).toSet
     def runAll(): Seq[Set[String]] = {
-      val cc = Dedup.connectedComponents(pairDf, driverEdgeLimit = 0)
-        .collect().map(_.toString).toSet
+      val cc = ccRows()
       val lpa = graft.graph.Communities.labelPropagation(pairDf, $"id_a", $"id_b", 3)
         .collect().map(_.toString).toSet
       val wk = graft.graph.Walks.walks(pairDf, $"id_a", $"id_b", 3)
@@ -149,6 +168,9 @@ class CheckpointLayoutSpec extends AnyFunSuite {
       default.zip(clustered).zipWithIndex.foreach { case ((d, c), i) =>
         assert(d == c, s"loop $i differs between regimes")
       }
+      // CC's unclustered loop: its edges past the bound, its nodes under it
+      spark.conf.set("graft.layout.clusterMinRows", "50")
+      assert(ccRows() == default.head, "CC's unclustered loop differs")
     } finally spark.conf.unset("graft.layout.clusterMinRows")
   }
 

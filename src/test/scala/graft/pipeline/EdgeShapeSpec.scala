@@ -67,7 +67,7 @@ class EdgeShapeSpec extends AnyFunSuite {
     emptyVecs, $"id", $"v", threshold = 0.9))
   emptyOut("connectedComponents")(Dedup.connectedComponents(emptyEdges))
   emptyOut("connectedComponents distributed")(
-    Dedup.connectedComponents(emptyEdges, driverEdgeLimit = 0))
+    graft.util.Regimes.clustered(spark)(Dedup.connectedComponents(emptyEdges)))
   emptyOut("incrementalDedup")(Dedup.incrementalDedup(
     emptyDocs, emptyDocs, TextOps.fingerprint($"text"), TextOps.fingerprint($"text")))
   emptyOut("substringDedup")(Dedup.substringDedup(emptyDocs, $"doc_id", $"text"))

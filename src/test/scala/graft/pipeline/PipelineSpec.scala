@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.expr.SparkTestSession
+import graft.util.Regimes
 
 class PipelineSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -399,16 +400,16 @@ class PipelineSpec extends AnyFunSuite {
     // pointer halving converges in ~log2(diameter) rounds, so a chain
     // long enough to force at least one reliable-checkpoint round
     // (ReliableEvery = 5) needs diameter >> 2^5
-    // driverEdgeLimit = 0 pins the DISTRIBUTED regime — reliable
+    // Regimes.clustered pins the DISTRIBUTED regime — reliable
     // checkpointing only exists there (the driver union-find path has no
     // lineage to protect)
     val pairs = (0L until 400L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val plain = Dedup.connectedComponents(pairs, driverEdgeLimit = 0)
-      .as[(Long, Long)].collect().toSet
     val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
-    val ckpt = Dedup.connectedComponents(pairs, checkpointDir = Some(dir),
-        driverEdgeLimit = 0)
-      .as[(Long, Long)].collect().toSet
+    val (plain, ckpt) = Regimes.clustered(spark) {
+      (Dedup.connectedComponents(pairs).as[(Long, Long)].collect().toSet,
+        Dedup.connectedComponents(pairs, checkpointDir = Some(dir))
+          .as[(Long, Long)].collect().toSet)
+    }
     assert(ckpt == plain)
     assert(plain.forall(_._2 == 0L), "one chain = one component labeled by min id")
     val wrote = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
@@ -1563,12 +1564,8 @@ class PipelineSpec extends AnyFunSuite {
         val a = ids(rnd.nextInt(ids.size)); val b = ids(rnd.nextInt(ids.size))
         (math.min(a, b), math.max(a, b))
       }.filter(p => p._1 != p._2).distinct
-      val df = pairs.toDF("id_a", "id_b")
-      val fast = Dedup.connectedComponents(df)
-        .as[(Long, Long)].collect().toMap
-      val slow = Dedup.connectedComponents(df, driverEdgeLimit = 0)
-        .as[(Long, Long)].collect().toMap
-      assert(fast == slow, s"trial $trial")
+      val fast = Regimes.bothRegimes(spark)(Dedup.connectedComponents(pairs.toDF("id_a", "id_b")))
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
       // component labels are the component minimum
       assert(fast.values.toSet.subsetOf(fast.keySet))
       fast.foreach { case (id, c) => assert(c <= id) }

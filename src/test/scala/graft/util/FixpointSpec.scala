@@ -11,8 +11,8 @@ import graft.expr.SparkTestSession
 import graft.h3.{H3Geo, H3Traversal}
 import org.apache.spark.graft.TestBusShims
 
-/** The loop combinator: name-resolved convergence, both stop rules, both
-  * fixed-round regimes, and — for every loop built on it — block
+/** The loop combinator: name-resolved convergence, both stop rules, fixed
+  * rounds, and — for every loop built on it — block
   * accounting that does not grow with the number of rounds run. */
 class FixpointSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -76,26 +76,21 @@ class FixpointSpec extends AnyFunSuite {
     assert(res.frame.as[Long].collect().sorted.toSeq == (0L until 5L))
   }
 
-  test("fixedRounds: the small and clustered regimes agree, and only the clustered one frees") {
+  test("fixedRounds: runs every round and keeps only the final generation") {
     val sc = spark.sparkContext
     val init = (0L until 20L).toDF("v").repartition(col("v"))
-    def run(clustered: Boolean, rounds: Int): (Seq[Long], Int) = {
+    def run(rounds: Int): (Seq[Long], Int) = {
       val before = sc.getPersistentRDDs.keySet
-      val out = Fixpoint.fixedRounds(init, () => (), rounds, clustered, None) { df =>
+      val out = Fixpoint.fixedRounds(init, () => (), rounds, None) { df =>
         df.select((col("v") * 3 + 1).as("v"))
       }
       val vs = out.as[Long].collect().sorted.toSeq
       (vs, (sc.getPersistentRDDs.keySet -- before).size)
     }
-    val (small, smallPins) = run(clustered = false, rounds = 4)
-    val (clustered, clusteredPins) = run(clustered = true, rounds = 4)
-    assert(small == clustered)
-    assert(small == (0L until 20L).map(v => (1 to 4).foldLeft(v)((x, _) => x * 3 + 1)).sorted)
-    // the lazy chain pins one generation per round; the eager one keeps
-    // only the final generation
-    assert(smallPins == 4)
-    assert(clusteredPins == 1)
-    assert(run(clustered = true, rounds = 8)._2 == 1)
+    val (vs, pins) = run(rounds = 4)
+    assert(vs == (0L until 20L).map(v => (1 to 4).foldLeft(v)((x, _) => x * 3 + 1)).sorted)
+    assert(pins == 1)
+    assert(run(rounds = 8)._2 == 1)
   }
 
   /** RDDs left pinned once the result is collected, and the jobs run.
@@ -151,9 +146,10 @@ class FixpointSpec extends AnyFunSuite {
 
   test("connected components frees every superseded generation (distributed loop)") {
     // pointer halving: rounds grow with log(diameter)
-    def run(n: Int) = graft.pipeline.Dedup.connectedComponents(
-      path(n).toDF("id_a", "id_b"), driverEdgeLimit = 0)
-    assertFlat("connectedComponents", minExtraJobs = 3)(run(8), run(128))
+    def run(n: Int) = graft.pipeline.Dedup.connectedComponents(path(n).toDF("id_a", "id_b"))
+    clustered {
+      assertFlat("connectedComponents", minExtraJobs = 3)(run(8), run(128))
+    }
   }
 
   /** Runs `body` with the clustered regime and the loops forced. */

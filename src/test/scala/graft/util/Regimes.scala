@@ -6,10 +6,10 @@ import org.apache.logging.log4j.core.appender.AbstractAppender
 import org.apache.logging.log4j.core.config.Property
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
-/** Spec helpers for the loops with two regimes: the default one (a small
-  * input runs as one operator) and the `Fixpoint` loop, which
-  * `graft.layout.clusterMinRows=0` forces (clustered, for the loops that
-  * have a layout). */
+/** Spec helpers for the operators with two regimes: the default one (a
+  * small input runs as one operator on the driver) and the distributed
+  * loop, which `graft.layout.clusterMinRows=0` forces — for connected
+  * components too. */
 object Regimes {
 
   /** Runs `body` with the layout bound at `rows`. */
@@ -36,22 +36,6 @@ object Regimes {
     assert(sorted(smallRows) == sorted(loopRows),
       s"rows differ:\n small ${sorted(smallRows)}\n loop  ${sorted(loopRows)}")
     smallRows
-  }
-
-  /** [[bothRegimes]] for a fixed-round loop (PageRank, label
-    * propagation) whose graph has `nodes` nodes and `edges` measured edge
-    * rows; when `nodes < edges` also its third regime, the lazy chain of a
-    * dense graph: with the bound at `nodes` the edges are over it, so the
-    * loop runs, but the node count keeps the loop unclustered. All
-    * regimes must return the same rows. Returns the rows. */
-  def allRegimes(spark: SparkSession, nodes: Long, edges: Long)(run: => DataFrame): Array[Row] = {
-    val rows = bothRegimes(spark)(run)
-    if (nodes < edges) {
-      val chain = bounded(spark, nodes)(run.collect())
-      assert(sorted(chain) == sorted(rows),
-        s"rows differ:\n small ${sorted(rows)}\n chain ${sorted(chain)}")
-    }
-    rows
   }
 
   /** `body`'s result and the WARN messages the logger of `owner` logged
