@@ -42,8 +42,9 @@ object H3Clusters {
     * `fixedRounds = None` measures the distinct keys first. At or under
     * the small-regime bound (`CheckpointLayout.smallRegime`) it collects
     * them and runs a driver union-find over ring-1 neighbours
-    * ([[driverLabels]]) — the loop's per-round jobs, not its data, were
-    * its cost there; past the bound it loops to convergence through
+    * ([[driverLabels]]), whose labels are a local relation the key join
+    * reads — the loop's per-round jobs, not its data, were its cost
+    * there; past the bound it loops to convergence through
     * `graft.util.Fixpoint.converge`, materializing each round and stopping
     * when no label changes. The small regime always returns the converged
     * components, whatever `maxIterations`. */

@@ -29,9 +29,25 @@ case class SortedLongArrayIntersectSize(left: Expression, right: Expression)
   override def nullable: Boolean = true
   override def nullIntolerant: Boolean = true
 
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]
-    val b = r.asInstanceOf[ArrayData]
+  override def nullSafeEval(l: Any, r: Any): Any =
+    NgramHashKernel.intersectSize(l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"${ev.value} = graft.expr.NgramHashKernel.intersectSize($a, $b);")
+
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
+    copy(left = l, right = r)
+}
+
+object NgramHashKernel {
+  /** xxhash64 seed used by Spark's `xxhash64` function. */
+  final val Seed = 42L
+
+  /** The merge walk of [[SortedLongArrayIntersectSize]]: the number of
+    * values two ascending, duplicate-free long arrays share. Its eval, its
+    * codegen and the near-dup verifier's driver regime all call this. */
+  def intersectSize(a: ArrayData, b: ArrayData): Long = {
     var i = 0; var j = 0; var n = 0L
     val na = a.numElements(); val nb = b.numElements()
     while (i < na && j < nb) {
@@ -42,33 +58,6 @@ case class SortedLongArrayIntersectSize(left: Expression, right: Expression)
     }
     n
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i"); val j = ctx.freshName("j"); val n = ctx.freshName("n")
-      val na = ctx.freshName("na"); val nb = ctx.freshName("nb")
-      val x = ctx.freshName("x"); val y = ctx.freshName("y")
-      s"""
-         |int $i = 0; int $j = 0; long $n = 0L;
-         |final int $na = $a.numElements();
-         |final int $nb = $b.numElements();
-         |while ($i < $na && $j < $nb) {
-         |  final long $x = $a.getLong($i);
-         |  final long $y = $b.getLong($j);
-         |  if ($x == $y) { $n++; $i++; $j++; }
-         |  else if ($x < $y) { $i++; } else { $j++; }
-         |}
-         |${ev.value} = $n;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
-}
-
-object NgramHashKernel {
-  /** xxhash64 seed used by Spark's `xxhash64` function. */
-  final val Seed = 42L
 
   /** Sorted distinct xxhash64 values of all length-`n` character
     * substrings of `t` — bit-equal to

@@ -27,7 +27,8 @@ import graft.util.{Barriers, DriverRegime, Fixpoint}
  * Scale shape: the canonical edge frame is measured first. At or under
  * the layout bound (`CheckpointLayout.smallRegime`) it is collected once
  * and the rounds are replayed on the driver over primitive arrays — no
- * job per round, the result a parallelized frame. Past it, per round:
+ * job per round, the result a local relation that collects without a
+ * job. Past it, per round:
  * one equi-join of the label frame onto the (node-keyed) adjacency, then
  * TWO map-side-combinable aggregates — count by (node, neighbor-label),
  * then struct-max by node for the arg-max — no window over raw

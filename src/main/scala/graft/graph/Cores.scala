@@ -26,7 +26,8 @@ import graft.util.{Barriers, DriverRegime, Fixpoint}
  * Scale shape: the canonical edge frame is measured first. At or under
  * the layout bound (`CheckpointLayout.smallRegime`) it is collected once
  * and the peel is replayed on the driver over primitive arrays — no job
- * per round, the result a parallelized frame. Past it, per round: one
+ * per round, the result a local relation that collects without a job.
+ * Past it, per round: one
  * degree aggregate (map-side combinable) and two semi-joins of the edge
  * frame against the slim survivor set, all hash-partitioned on node ids;
  * the edge frame only ever SHRINKS.

@@ -428,7 +428,7 @@ object H3Graph {
       val destL = bDest.value
       val targets = destL.values.toSet
       rows.flatMap { r =>
-        val rawOrigin = r.getLong(0)
+        val rawOrigin = r.getAs[Long]("origin")
         snapToNode(rawOrigin, nodesL, maxSnapK).iterator.flatMap { source =>
           val settled = dijkstra(adjL, bLong.value, source, targets, Double.MaxValue)
           destL.iterator.flatMap { case (rawDest, snappedDest) =>
@@ -473,7 +473,7 @@ object H3Graph {
     originsToDF(spark, origins).mapPartitions { rows =>
       val adjL = bAdj.value
       rows.flatMap { r =>
-        val rawOrigin = r.getLong(0)
+        val rawOrigin = r.getAs[Long]("origin")
         snapToNode(rawOrigin, bNodes.value, maxSnapK).iterator.flatMap { source =>
           // no shortcuts: the flood must settle every interior chain cell
           // (the reference's threshold dijkstra likewise skips longedges,
@@ -646,8 +646,8 @@ object H3Graph {
     * one job, so the round-cap warning and the walk's `require` fire at
     * call time, as the loop's do. The rows are bounded by the
     * origins × destinations pair set the loop's walk table already
-    * broadcast; the result is a parallelized frame, so nothing stays
-    * pinned. */
+    * broadcast; the result is a local relation, so nothing stays pinned
+    * and collecting it runs no job. */
   private def relaxLocal(spark: SparkSession, adj: Map[Long, Array[(Long, Double)]],
       origins: Seq[Long], destinations: Seq[Long], maxRounds: Int, hopsPerRound: Int,
       withPaths: Boolean): DataFrame = {

@@ -26,7 +26,8 @@ import graft.util.{Barriers, DriverRegime, Fixpoint}
  * Scale shape: the distinct edge frame is measured first. At or under
  * the layout bound (`CheckpointLayout.smallRegime`) it is collected once
  * and the rounds are replayed on the driver over primitive arrays — no
- * job per round, the result a parallelized frame. Past it, per
+ * job per round, the result a local relation that collects without a
+ * job. Past it, per
  * iteration: one equi-join of ranks onto the (src-keyed,
  * checkpointed-once) edge+outdeg frame, one map-side-combined sum by
  * dst, one left join back to the node set — all hash-partitioned by node

@@ -55,9 +55,13 @@ object CheckpointLayout {
     * the distributed loop ([[smallRegime]]; `graft.util.DriverRegime`
     * collects). The measured frames: iterative SSSP's edge rows,
     * `cellClusters(fixedRounds = None)`'s distinct keys, the distinct edge
-    * rows of PageRank/PPR, label propagation and k-core, and connected
-    * components' distinct bidirectional edge rows (integral ids only).
-    * 1M rows of two or three longs is 16-24 MB on the driver. Past the
+    * rows of PageRank/PPR, label propagation and k-core, connected
+    * components' distinct bidirectional edge rows, or the pair rows of a
+    * local pairs frame, and the near-dup pipeline's LSH band rows (one per
+    * document and band; the pairs they enumerate are held to the bound
+    * too) and `ngramJaccardVerify`'s candidate pair rows — the last four
+    * for integral ids only. 1M rows of two or three longs is 16-24 MB on
+    * the driver. Past the
     * bound the loops run clustered (static frames laid out once by their
     * join key, [[statSafeRecluster]]), except connected components,
     * random walks and `TextOps.classifierTrain`, which still gate the

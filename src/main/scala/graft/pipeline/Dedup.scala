@@ -1,10 +1,16 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{InSet, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.shims
+import org.apache.spark.sql.types.{DataType, DoubleType, StructField, StructType}
 
+import graft.expr.NgramHashKernel
 import graft.util.Barriers.freeAll
+import graft.util.DriverRegime
 
 /**
  * Deduplication operators for training-data pipelines: exact, MinHash+LSH,
@@ -102,13 +108,24 @@ object Dedup {
     * self-join would evaluate the whole MinHash subtree twice (aliased
     * branches defeat exchange reuse). Near-dup buckets are tiny by
     * construction; a pathological hot bucket is truncated at
-    * [[MaxLshBucket]] so it degrades recall instead of killing the job. */
+    * [[MaxLshBucket]] so it degrades recall instead of killing the job.
+    *
+    * Small regime (integral ids): the measured frame is the band rows, one
+    * per (document, band), computed in one scan job by the same
+    * signature and band expressions. At or under
+    * `graft.layout.clusterMinRows` they are collected and bucketed on the
+    * driver with the same semantics (the `maxBucket` smallest distinct
+    * ids per bucket, plus the overflow stars), and the distinct pairs come
+    * back as a local relation — unless the enumeration would pass the
+    * bound too, in which case the distributed path runs over the band
+    * rows already materialized. */
   def lshCandidatePairs(df: DataFrame, id: Column, text: Column, k: Int = 8,
       rowsPerBand: Int = 2, ngram: Int = 2, maxBucket: Int = MaxLshBucket): DataFrame =
     lshCandidatePairsFreeable(df, id, text, k, rowsPerBand, ngram, maxBucket)._1
 
   /** [[lshCandidatePairs]] plus the release thunk for the band checkpoint
-    * the capped path pins (no-op when uncapped). Same contract as
+    * the distributed path pins when capped or past the bound (a no-op
+    * otherwise, and in the small regime). Same contract as
     * `Barriers.freeThunk`: invoke only after every consumer of the
     * returned frame has materialized — the blocks ARE the frame's lineage.
     * The thunk-less overload above leaves the blocks pinned for the
@@ -118,13 +135,24 @@ object Dedup {
   def lshCandidatePairsFreeable(df: DataFrame, id: Column, text: Column, k: Int = 8,
       rowsPerBand: Int = 2, ngram: Int = 2,
       maxBucket: Int = MaxLshBucket): (DataFrame, () => Unit) = {
+    require(maxBucket >= 1, s"maxBucket must be >= 1, got $maxBucket")
     val bands0 = lshBands(minHashSignatures(df, id, text, k, ngram), k, rowsPerBand)
-    // the star branch below reads the band frame a second time; checkpoint
-    // the slim (id, band_idx, band_val) rows so the whole signature
-    // pipeline does not re-run per consumer (uncapped callers — the p06
-    // oracle contract — keep the single-pass plan, no checkpoint)
+    val idType = bands0.schema("__id").dataType
+    val integral = DriverRegime.integral(idType)
+    // the star branch below reads the band frame a second time, and the
+    // small regime measures it; checkpoint the slim (id, band_idx,
+    // band_val) rows so the whole signature pipeline does not re-run per
+    // consumer (uncapped callers with other ids — the p06 oracle contract
+    // is uncapped — keep the single-pass plan, no checkpoint)
     val capped = maxBucket < Int.MaxValue
-    val bands = if (capped) bands0.localCheckpoint(false) else bands0
+    val (bands, freeBands) =
+      if (capped || integral) { val b = bands0.localCheckpoint(false); (b, freeAll(Seq(b))) }
+      else (bands0, NoopFree)
+    if (integral) {
+      val local = DriverRegime.collectIfSmall(bands, NoopFree)
+        .flatMap(lshPairsLocal(df.sparkSession, _, maxBucket, idType))
+      if (local.isDefined) { freeBands(); return (local.get, NoopFree) }
+    }
     val pairwise = bands
       .groupBy(col("band_idx"), col("band_val"))
       // bounded min-k aggregate == slice(sort_array(collect_set), 1, cap)
@@ -141,7 +169,7 @@ object Dedup {
       .select(col("ids"), posexplode(col("ids")).as(Seq("__i", "id_a")))
       .select(col("id_a"),
         explode(slice(col("ids"), col("__i") + lit(2), size(col("ids")))).as("id_b"))
-    if (!capped) return (pairwise.distinct(), NoopFree)
+    if (!capped) return (pairwise.distinct(), freeBands)
     // OVERFLOW STARS: truncation alone leaves every beyond-cap member of a
     // mega-dup bucket in NO candidate pair — a 10k-member duplicate group
     // would keep ~6k near-identical survivors (measured by DedupSkewProbe).
@@ -167,11 +195,47 @@ object Dedup {
     val stars = bands.join(overflow, Seq("band_idx", "band_val"))
       .filter(col("__id") =!= col("__min"))
       .select(col("__min").as("id_a"), col("__id").as("id_b"))
-    (pairwise.unionByName(stars).distinct(), freeAll(Seq(bands)))
+    (pairwise.unionByName(stars).distinct(), freeBands)
   }
 
   /** no-op release thunk (uncapped paths create no checkpoint). */
   private val NoopFree: () => Unit = () => ()
+
+  /** The small regime of [[lshCandidatePairsFreeable]] over the collected
+    * `(__id, band_idx, band_val)` rows: per bucket, the distinct ids
+    * ascending cut to the `maxBucket` smallest (`collect_min_k`) give their
+    * ordered pairs, and a bucket of more distinct ids also gives the star
+    * (bucket minimum, member) for every other member. Null ids drop out,
+    * as they do from the aggregates. The distinct pairs as a local
+    * relation, or None when enumerating them would pass the layout bound. */
+  private def lshPairsLocal(spark: SparkSession, bands: Array[Row], maxBucket: Int,
+      idType: DataType): Option[DataFrame] = {
+    val buckets = bands.filter(_.getAs[Any]("__id") != null)
+      .groupBy(r => (r.getAs[Int]("band_idx"), r.getAs[Long]("band_val")))
+      .values.map(_.map(_.getAs[Number]("__id").longValue).distinct.sorted)
+    // an upper bound on the pairs before the distinct: the pairs of the
+    // kept ids plus one star per other member
+    val enumerated = buckets.iterator.map { ids =>
+      val kept = math.min(ids.length, maxBucket).toLong
+      kept * (kept - 1) / 2 + (if (ids.length > maxBucket) ids.length - 1 else 0)
+    }.sum
+    if (!CheckpointLayout.smallRegime(spark, enumerated)) None
+    else {
+      val pairs = scala.collection.mutable.LinkedHashSet.empty[(Long, Long)]
+      buckets.foreach { ids =>
+        val kept = math.min(ids.length, maxBucket)
+        for (i <- 0 until kept; j <- i + 1 until kept) pairs += ((ids(i), ids(j)))
+        if (ids.length > maxBucket) ids.iterator.drop(1).foreach(x => pairs += ((ids(0), x)))
+      }
+      def v(x: Long) = DriverRegime.idValue(idType, x)
+      Some(DriverRegime.frame(spark, pairs.toSeq.map { case (a, b) => Row(v(a), v(b)) },
+        StructType(idPairFields(idType))))
+    }
+  }
+
+  /** The `(id_a, id_b)` fields of a small-regime pair frame. */
+  private def idPairFields(idType: DataType): Seq[StructField] =
+    Seq(StructField("id_a", idType, nullable = false), StructField("id_b", idType, nullable = false))
 
   /** Exact n-gram Jaccard similarity over the whole input: distinct
     * character `n`-gram sets, every pair whose e4-quantized similarity
@@ -328,7 +392,17 @@ object Dedup {
     * gram sets ONLY for documents that appear in a candidate pair (the
     * scale-critical restriction: verification cost scales with candidates,
     * not the corpus). Output: (id_a, id_b, jaccard) for pairs at or above
-    * `threshold`. */
+    * `threshold`.
+    *
+    * Small regime (pair and corpus ids of one integral type): the measured
+    * frame is the candidate pairs, read without a job when they are a
+    * local relation (a small-regime [[lshCandidatePairs]]). At or under
+    * `graft.layout.clusterMinRows` one scan job collects, for candidate
+    * ids only, the text hash, the gram count and the sorted gram hashes by
+    * the same expressions; the driver then runs the same identical-text
+    * fast path, intersection kernel and quantized Jaccard, keeps the
+    * joins' row multiplicity for repeated corpus ids, and returns a local
+    * relation. */
   def ngramJaccardVerify(df: DataFrame, id: Column, text: Column, n: Int,
       threshold: Double, pairs0: DataFrame): DataFrame =
     ngramJaccardVerifyFreeable(df, id, text, n, threshold, pairs0)._1
@@ -339,6 +413,11 @@ object Dedup {
     * of the returned frame has materialized. */
   def ngramJaccardVerifyFreeable(df: DataFrame, id: Column, text: Column, n: Int,
       threshold: Double, pairs0: DataFrame): (DataFrame, () => Unit) = {
+    val idType = df.select(id).schema.head.dataType
+    val integral = DriverRegime.integral(idType) &&
+      Seq("id_a", "id_b").forall(pairs0.schema(_).dataType == idType)
+    val local = if (integral) DriverRegime.localRows(pairs0) else None
+    if (local.isDefined) return (verifyLocal(df, id, text, n, threshold, local.get, idType), NoopFree)
     // pairs feeds three consumers and grams three more; without a
     // materialization barrier Spark re-evaluates the full upstream pipeline
     // (the MinHash subtree for pairs, the md5 gram explode) once per
@@ -356,6 +435,10 @@ object Dedup {
     // shorter than the gram size. Gram sets are then built ONLY for docs
     // appearing in some differing-text pair.
     val pairs = pairs0.localCheckpoint(false)
+    val collected =
+      if (integral) DriverRegime.collectIfSmall(pairs, freeAll(Seq(pairs))) else None
+    if (collected.isDefined)
+      return (verifyLocal(df, id, text, n, threshold, collected.get, idType), NoopFree)
     val candIds = pairs.select(col("id_a").as("__id"))
       .unionByName(pairs.select(col("id_b").as("__id"))).distinct()
     val textInfo = df.select(id.as("__id"), xxhash64(text).as("__th"),
@@ -412,6 +495,60 @@ object Dedup {
       .filter(col("jaccard") >= threshold)
       .select(col("id_a"), col("id_b"), col("jaccard"))
     (identical.unionByName(verified), freeAll(Seq(pairs, textInfo, pairsH, inter)))
+  }
+
+  /** The small regime of [[ngramJaccardVerifyFreeable]] over the collected
+    * candidate `pairs`. Like the distributed joins, a pair meets every
+    * corpus row of each of its ids: each combination of byte-identical
+    * texts with grams gives a 1.0 row, and each combination of differing
+    * texts gives one copy of the Jaccard rows over all combinations. */
+  private def verifyLocal(df: DataFrame, id: Column, text: Column, n: Int,
+      threshold: Double, pairs: Array[Row], idType: DataType): DataFrame = {
+    val spark = df.sparkSession
+    final class Doc(val hash: Long, val gramCount: Long, val gramSet: ArrayData)
+    val ids = pairs.iterator.flatMap(r => Iterator(r.getAs[Any]("id_a"), r.getAs[Any]("id_b")))
+      .filter(_ != null).toSet
+    val t = lower(trim(text))
+    val docs = df.select(id.as("__id"), xxhash64(text).as("__th"),
+        greatest(length(t) - (n - 1), lit(0)).as("__gn"),
+        graft.functions.sorted_distinct_ngram_hashes(t, n).as("__gs"))
+      .filter(shims.column(InSet(shims.expression(col("__id")), ids)))
+      .collect()
+      .groupBy(_.getAs[Any]("__id"))
+      .map { case (k, rs) => k -> rs.map { r =>
+        new Doc(r.getAs[Long]("__th"), r.getAs[Int]("__gn").toLong,
+          Option(r.getAs[scala.collection.Seq[Long]]("__gs"))
+            .map(g => UnsafeArrayData.fromPrimitiveArray(g.toArray)).orNull)
+      } }
+    val out = Seq.newBuilder[Row]
+    pairs.foreach { p =>
+      val (a, b) = (p.getAs[Any]("id_a"), p.getAs[Any]("id_b"))
+      val (da, db) = (docs.getOrElse(a, Array.empty[Doc]), docs.getOrElse(b, Array.empty[Doc]))
+      var differing = 0
+      for (x <- da; y <- db) {
+        if (x.hash != y.hash) differing += 1
+        else if (x.gramCount > 0 && 1.0 >= threshold) out += Row(a, b, 1.0)
+      }
+      if (differing > 0) {
+        val verified = for (x <- da; y <- db if x.gramSet != null && y.gramSet != null;
+            j = jaccardE4(NgramHashKernel.intersectSize(x.gramSet, y.gramSet),
+              x.gramSet.numElements(), y.gramSet.numElements()) if j >= threshold)
+          yield Row(a, b, j)
+        for (_ <- 1 to differing) out ++= verified
+      }
+    }
+    DriverRegime.frame(spark, out.result(),
+      StructType(idPairFields(idType) :+ StructField("jaccard", DoubleType, nullable = false)))
+  }
+
+  /** The verifier's floor-quantized Jaccard of two gram sets of sizes `na`
+    * and `nb` sharing `inter`, evaluated as its Spark expression is; a
+    * pair of two empty sets divides by zero there too. */
+  private def jaccardE4(inter: Long, na: Long, nb: Long): Double = {
+    val union = na + nb - inter
+    if (union == 0) throw new ArithmeticException(
+      "[DIVIDE_BY_ZERO] Jaccard of two texts shorter than the gram size")
+    math.floor(inter.toDouble / union.toDouble * 10000.0 + 0.5).toLong.toDouble / 10000.0
   }
 
   /** End-to-end near-duplicate removal: LSH candidate generation, exact
@@ -633,7 +770,11 @@ object Dedup {
     * (`CheckpointLayout.smallRegime`, measured and collected by
     * `DriverRegime.collectIfSmall`), components are solved by a
     * driver-side union-find over the collected edges (1M edges = 16 MB;
-    * the bound, not the corpus, bounds driver memory). The iterative loop
+    * the bound, not the corpus, bounds driver memory). A `pairs` frame
+    * that is a local relation (another driver regime's result, such as a
+    * small-regime [[ngramJaccardVerify]]) is measured in pair rows and
+    * read without a job: the union-find needs neither the dedup nor both
+    * directions. The result is a local relation. The iterative loop
     * costs ~4 sequential shuffle waves PER ROUND regardless of data size —
     * on the post-rep-collapse graphs the perceptual dedup family produces
     * (edges scale with distinct CONTENT, not corpus size: 3.8k edges at
@@ -646,6 +787,14 @@ object Dedup {
     * over the bound use it automatically. */
   def connectedComponents(pairs: DataFrame, maxRounds: Int = 30,
       checkpointDir: Option[String] = None): DataFrame = {
+    val spark = pairs.sparkSession
+    val directed = pairs.select(col("id_a").as("__src"), col("id_b").as("__dst"))
+    val bidirectional = directed
+      .unionByName(pairs.select(col("id_b").as("__src"), col("id_a").as("__dst")))
+    val idType = bidirectional.schema("__src").dataType
+    val integral = DriverRegime.integral(idType)
+    val local = if (integral) DriverRegime.localRows(directed) else None
+    if (local.isDefined) return driverComponents(spark, local.get, idType)
     // statSafe, not a bare localCheckpoint: the pairs subtree's size
     // ESTIMATE is untrustworthy (distinct over an exploded band join) and
     // a too-small estimate makes the static planner broadcast the edge
@@ -654,20 +803,13 @@ object Dedup {
     // AQE still broadcasts the genuinely-small side (labels) from exact
     // runtime sizes.
     val (edges0, freeEdges0) = graft.util.Barriers.statSafeFreeable(
-      pairs.select(col("id_a").as("__src"), col("id_b").as("__dst"))
-        .unionByName(pairs.select(col("id_b").as("__src"), col("id_a").as("__dst")))
-        // a NULL endpoint is not an edge: without this the driver
-        // union-find threw reading the id, and the distributed loop would
-        // propagate a phantom null node
-        .filter(col("__src").isNotNull && col("__dst").isNotNull)
-        .distinct())
-    val idType = edges0.schema("__src").dataType
-    val integral = idType == org.apache.spark.sql.types.LongType ||
-      idType == org.apache.spark.sql.types.IntegerType
+      // a NULL endpoint is not an edge: without this the distributed loop
+      // would propagate a phantom null node
+      bidirectional.filter(col("__src").isNotNull && col("__dst").isNotNull).distinct())
     // the measurement doubles as the edge materialization the loop's first
     // round would otherwise pay (edges0 is a lazy checkpoint)
-    val small = if (integral) graft.util.DriverRegime.collectIfSmall(edges0, freeEdges0) else None
-    if (small.isDefined) return driverComponents(edges0.sparkSession, small.get, idType)
+    val small = if (integral) DriverRegime.collectIfSmall(edges0, freeEdges0) else None
+    if (small.isDefined) return driverComponents(spark, small.get, idType)
     // Distributed regime. Past ClusterLayoutMinRows nodes the edge frame
     // is re-laid-out ONCE clustered by __src off its materialized blocks:
     // in the non-broadcast regime every relax round's edges⋈labels join
@@ -765,21 +907,20 @@ object Dedup {
   }
 
   /** Driver union-find over the collected `(__src, __dst)` edge rows (the
-    * [[connectedComponents]] small-graph regime). */
+    * [[connectedComponents]] small-graph regime); a row with a null
+    * endpoint is not an edge. */
   private def driverComponents(spark: SparkSession, edges: Array[Row],
-      idType: org.apache.spark.sql.types.DataType): DataFrame = {
+      idType: DataType): DataFrame = {
     val uf = new MinRootUnionFind
-    edges.foreach(r => uf.union(r.getAs[Number]("__src").longValue,
-      r.getAs[Number]("__dst").longValue))
-    def lit(v: Long): Any = idType match {
-      case org.apache.spark.sql.types.IntegerType => v.toInt
-      case _ => v
+    edges.foreach { r =>
+      val (a, b) = (r.getAs[Number]("__src"), r.getAs[Number]("__dst"))
+      if (a != null && b != null) uf.union(a.longValue, b.longValue)
     }
+    def lit(v: Long): Any = DriverRegime.idValue(idType, v)
     val rows: Seq[Row] = uf.ids.toSeq.map(id => Row(lit(id), lit(uf.find(id))))
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("id", idType, nullable = false),
-      org.apache.spark.sql.types.StructField("component", idType, nullable = false)))
-    graft.util.DriverRegime.frame(spark, rows, schema)
+    DriverRegime.frame(spark, rows, StructType(Seq(
+      StructField("id", idType, nullable = false),
+      StructField("component", idType, nullable = false))))
   }
 
   /** Near-dup GROUPS straight from a perceptual-hash column, with
@@ -832,12 +973,30 @@ object Dedup {
     * connected component in the verified near-dup graph; documents with no
     * near-dup are their own group. Group-based retention (keep min per
     * group) is the production corpus-dedup semantics: pair-based dropping
-    * can keep two documents that are only transitively similar. */
+    * can keep two documents that are only transitively similar.
+    *
+    * Small regime: [[connectedComponents]] reads a local `verified` frame
+    * (a small-regime [[ngramJaccardVerify]]) without a job, and its local
+    * components reach the corpus as a broadcast lookup rather than a
+    * broadcast join, whose build side would cost a job of its own: the
+    * groups then take the one scan job that consumes them. */
   def nearDupGroups(df: DataFrame, id: Column, verified: DataFrame): DataFrame = {
     val comps = connectedComponents(verified.select(col("id_a"), col("id_b")))
-    df.select(id.as("doc_id"))
-      .join(comps.select(col("id").as("doc_id"), col("component")), Seq("doc_id"), "left")
-      .select(col("doc_id"), coalesce(col("component"), col("doc_id")).as("group_id"))
+    val docs = df.select(id.as("doc_id"))
+    val idType = docs.schema("doc_id").dataType
+    val local = if (comps.schema("id").dataType == idType)
+      DriverRegime.localRows(comps) else None
+    local match {
+      case Some(rows) =>
+        val lookup = df.sparkSession.sparkContext.broadcast(scala.collection.mutable.LongMap(
+          rows.toSeq.map(r => r.getAs[Number]("id").longValue ->
+            r.getAs[Number]("component").longValue): _*))
+        val group = udf((d: Long) => lookup.value.getOrElse(d, d))
+        docs.select(col("doc_id"), group(col("doc_id").cast("long")).cast(idType).as("group_id"))
+      case None =>
+        docs.join(comps.select(col("id").as("doc_id"), col("component")), Seq("doc_id"), "left")
+          .select(col("doc_id"), coalesce(col("component"), col("doc_id")).as("group_id"))
+    }
   }
 
   /** Group-aware retention: keep exactly ONE document per near-dup group —

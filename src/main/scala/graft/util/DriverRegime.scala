@@ -1,23 +1,46 @@
 package graft.util
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StructType}
 
 import graft.pipeline.CheckpointLayout
 
-/** The one-operator small regime of the iterative loops and of connected
-  * components: an input measured at or under the layout bound
-  * (`CheckpointLayout.smallRegime`) is collected once, the operator runs
-  * on the driver, and the result comes back as a parallelized frame — no
-  * job per round, and no checkpoint left pinned behind the result.
-  * [[collectIfSmall]] is the one place that decides and collects. */
+/** The one-operator small regime of the iterative loops, of connected
+  * components and of the near-dup pipeline: an input measured at or under
+  * the layout bound (`CheckpointLayout.smallRegime`) is collected once,
+  * the operator runs on the driver, and the result comes back as a local
+  * relation — no job per round, no checkpoint left pinned behind the
+  * result, and no job to collect it. [[collectIfSmall]] is the one place
+  * that decides and collects; [[localRows]] reads an input that already
+  * is such a result. */
 object DriverRegime {
 
-  /** `rows` as a frame of `schema`, parallelized over at most 32
-    * partitions. */
+  /** `rows` as a local relation of `schema`: collecting it, or a
+    * projection or filter of it, runs no job, and [[localRows]] reads it
+    * back without one. */
   def frame(spark: SparkSession, rows: Seq[Row], schema: StructType): DataFrame =
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(rows, math.max(1, math.min(rows.size, 32))), schema)
+    spark.createDataFrame(rows.asJava, schema)
+
+  /** The rows of `df` when its optimized plan is a local relation (a
+    * [[frame]], or a projection or filter Spark folds into one), read
+    * without a job, and their count is in the small regime
+    * (`CheckpointLayout.smallRegime`, so a zero bound still forces the
+    * distributed path); None otherwise. */
+  def localRows(df: DataFrame): Option[Array[Row]] =
+    df.queryExecution.optimizedPlan match {
+      case _: LocalRelation => Some(df.collect())
+        .filter(rows => CheckpointLayout.smallRegime(df.sparkSession, rows.length))
+      case _ => None
+    }
+
+  /** Whether ids of `t` can run a driver regime keyed by long ids. */
+  def integral(t: DataType): Boolean = t == LongType || t == IntegerType
+
+  /** `v` as a value of the integral id type `t`. */
+  def idValue(t: DataType, v: Long): Any = if (t == IntegerType) v.toInt else v
 
   /** A collected edge list over dense node indices: `ids` holds the
     * distinct endpoints ascending, and edge `i` runs from `ids(src(i))` to

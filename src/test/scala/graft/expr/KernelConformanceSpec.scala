@@ -6,8 +6,9 @@ import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 import graft.pipeline.TextOps
 
-/** The fused kernels (MinHashSignature, WordNgramMd5Hashes, SimHash60)
-  * replaced composed Column forms in main code; this spec keeps the
+/** The fused kernels (MinHashSignature, WordNgramMd5Hashes, SimHash60,
+  * SortedDistinctNgramHashes, SortedLongArrayIntersectSize) replaced
+  * composed Column forms in main code; this spec keeps the
   * composed forms alive AS TEST ORACLES and pins kernel == composed on
   * randomized token arrays — multi-byte UTF-8, empty strings and
   * single-token docs included — so the "bit-equal to the md5 lattice"
@@ -91,6 +92,54 @@ class KernelConformanceSpec extends AnyFunSuite {
       }.reduce(_ + _)
       val want = df.select($"id", assembled).as[(Long, Long)].collect().toMap
       assert(got == want, s"iter $i")
+    }
+  }
+
+  // texts stress the character walk: multi-byte UTF-8, repeats (so grams
+  // repeat), padding that trim removes, and texts shorter than the gram
+  private val genTexts: Gen[List[String]] = for {
+    n <- Gen.chooseNum(1, 25)
+    ts <- Gen.listOfN(n, for {
+      len <- Gen.chooseNum(0, 10)
+      ws <- Gen.listOfN(len, Gen.oneOf(pool))
+      pad <- Gen.oneOf("", " ", "  ")
+    } yield pad + ws.mkString(" ") + pad)
+  } yield ts
+
+  test("sorted_distinct_ngram_hashes equals the sorted distinct xxhash64 of the character n-grams") {
+    var sizes = Set.empty[Int]
+    for (i <- 0 until 4) {
+      val df = sample(genTexts, 40 + i).zipWithIndex.map { case (t, id) => (id.toLong, t) }
+        .toDF("id", "text")
+      for (n <- Seq(1, 3, 8)) {
+        val got = df.select($"id",
+            graft.functions.sorted_distinct_ngram_hashes(lower(trim($"text")), n))
+          .as[(Long, Seq[Long])].collect().toMap
+        val want = df.select($"id",
+            sort_array(array_distinct(transform(TextOps.charNgrams($"text", n), g => xxhash64(g)))))
+          .as[(Long, Seq[Long])].collect().toMap
+        assert(got == want, s"iter $i n=$n")
+        sizes ++= got.values.map(_.size)
+      }
+    }
+    assert(sizes(0) && sizes.max > 3, s"gram-set sizes $sizes")
+  }
+
+  test("sorted_long_array_intersect_size equals size(array_intersect) on sorted distinct arrays") {
+    val genSet: Gen[Seq[Long]] = for {
+      span <- Gen.oneOf(8L, 64L, Long.MaxValue)
+      xs <- Gen.listOf(Gen.chooseNum(-span, span))
+    } yield xs.distinct.sorted
+    val genPairs = Gen.listOfN(60, Gen.zip(genSet, genSet))
+    for (i <- 0 until 4) {
+      val df = sample(genPairs, 50 + i).zipWithIndex.map { case ((a, b), id) => (id.toLong, a, b) }
+        .toDF("id", "a", "b")
+      val got = df.select($"id", graft.functions.sorted_long_array_intersect_size($"a", $"b"))
+        .as[(Long, Long)].collect().toMap
+      val want = df.select($"id", size(array_intersect($"a", $"b")).cast("long"))
+        .as[(Long, Long)].collect().toMap
+      assert(got == want, s"iter $i")
+      assert(want.values.exists(_ > 0) && want.values.exists(_ == 0), s"iter $i")
     }
   }
 }

@@ -89,12 +89,31 @@ class TrianglesSpec extends AnyFunSuite {
     } yield (u, v) -> ((common.size.toLong, common.toSeq.map(aaTerm).sum))).toMap
 
     val got = Triangles.commonNeighborScores(
-        edges.toDF("src", "dst").repartition(5), col("src"), col("dst"), minCommon = 3)
+        edges.toDF("src", "dst").repartition(5), col("src"), col("dst"), minCommon = 3,
+        maxDegree = Long.MaxValue)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> ((r.getLong(2), r.getLong(3)))).toMap
     assert(got == want)
     assert(want.nonEmpty)
     // no predicted pair is an existing edge
     assert(got.keys.forall(p => !und(p)))
+  }
+
+  test("commonNeighborScores: by default a hub of degree over 1000 is not a wedge middle") {
+    // leaves 1..1001 all link to hub 0; leaves 1..3 also link to the
+    // small middles 5000 and 5001, so 0, 5000 and 5001 pair through them
+    val hub = (1L to 1001L).map(v => (0L, v))
+    val small = for (m <- Seq(5000L, 5001L); v <- 1L to 3L) yield (m, v)
+    val edges = (hub ++ small).toDF("src", "dst")
+    def scores(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getAs[Long]("u"), r.getAs[Long]("v")) -> r.getAs[Long]("n_common")).toMap
+    val throughLeaves = Map((0L, 5000L) -> 3L, (0L, 5001L) -> 3L, (5000L, 5001L) -> 3L)
+    val capped = Triangles.commonNeighborScores(edges, col("src"), col("dst"), minCommon = 1)
+    assert(scores(capped) ==
+      throughLeaves ++ Map((1L, 2L) -> 2L, (1L, 3L) -> 2L, (2L, 3L) -> 2L))
+    val uncapped = Triangles.commonNeighborScores(edges, col("src"), col("dst"), minCommon = 3,
+      maxDegree = Long.MaxValue)
+    assert(scores(uncapped) ==
+      throughLeaves ++ Map((1L, 2L) -> 3L, (1L, 3L) -> 3L, (2L, 3L) -> 3L))
   }
 
   test("globalTriangles counts each triangle once") {

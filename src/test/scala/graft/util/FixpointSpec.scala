@@ -1,15 +1,11 @@
 package graft.util
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.expr.SparkTestSession
 import graft.h3.{H3Geo, H3Traversal}
-import org.apache.spark.graft.TestBusShims
 
 /** The loop combinator: name-resolved convergence, both stop rules, fixed
   * rounds, and — for every loop built on it — block
@@ -93,32 +89,8 @@ class FixpointSpec extends AnyFunSuite {
     assert(run(rounds = 8)._2 == 1)
   }
 
-  /** RDDs left pinned once the result is collected, and the jobs run.
-    * Every RDD persisted during the run is held strongly from the
-    * listener, so a leaked generation cannot be hidden by the context
-    * cleaner unpersisting it after a GC. */
-  private def pinsAndJobs(build: => DataFrame): (Int, Int) = {
-    val sc = spark.sparkContext
-    TestBusShims.drainListenerBus(sc)
-    val before = sc.getPersistentRDDs.keySet
-    val held = java.util.concurrent.ConcurrentHashMap.newKeySet[AnyRef]()
-    val jobs = new AtomicInteger
-    def hold(): Unit = sc.getPersistentRDDs.valuesIterator.foreach(held.add)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); hold() }
-      override def onJobEnd(e: SparkListenerJobEnd): Unit = hold()
-    }
-    sc.addSparkListener(listener)
-    try {
-      val out = build
-      out.collect()
-      TestBusShims.drainListenerBus(sc)
-      ((sc.getPersistentRDDs.keySet -- before).size, jobs.get)
-    } finally {
-      sc.removeSparkListener(listener)
-      held.clear()
-    }
-  }
+  private def pinsAndJobs(build: => DataFrame): (Int, Int) =
+    Regimes.pinsAndJobs(spark)(build.collect())
 
   /** `long` needs about twice the rounds of `short`; the RDDs pinned
     * after collecting must not grow with them. */
@@ -201,29 +173,31 @@ class FixpointSpec extends AnyFunSuite {
   private def labels(iters: Int): DataFrame = graft.graph.Communities.labelPropagation(
     path(30).toDF("src", "dst"), col("src"), col("dst"), iters)
 
-  /** Each (name, short, long) pair runs in the small regime: the loop's
-    * job count grows with the rounds (see the clustered specs around);
-    * the one operator's must not, and it leaves no RDD pinned. */
-  private def assertOneOperator(cases: (String, () => DataFrame, () => DataFrame)*): Unit =
-    for ((name, short, long) <- cases) {
+  /** Each (name, short, long, jobs) case runs in the small regime: the
+    * loop's job count grows with the rounds (see the clustered specs
+    * around); the one operator's must not, it runs at most `jobs` jobs
+    * (its result collects without one), and it leaves no RDD pinned. */
+  private def assertOneOperator(cases: (String, () => DataFrame, () => DataFrame, Int)*): Unit =
+    for ((name, short, long, maxJobs) <- cases) {
       val (pinShort, jobsShort) = pinsAndJobs(short())
       val (pinLong, jobsLong) = pinsAndJobs(long())
       assert(jobsShort == jobsLong, s"$name: $jobsShort jobs on the short input, $jobsLong on the long")
+      assert(jobsShort <= maxJobs, s"$name: $jobsShort jobs, at most $maxJobs expected")
       assert(pinShort == 0 && pinLong == 0, s"$name: $pinShort and $pinLong RDDs left pinned")
     }
 
   test("small regime: SSSP and cellClusters run as one operator, whatever the hops, and pin nothing") {
     assertOneOperator(
-      ("shortestPathsIterative", () => chainCosts(8), () => chainCosts(16)),
-      ("shortestPathsIterativePaths", () => chainPaths(8), () => chainPaths(16)),
-      ("cellClusters", () => snakeClusters(2.0), () => snakeClusters(10.0)))
+      ("shortestPathsIterative", () => chainCosts(8), () => chainCosts(16), 3),
+      ("shortestPathsIterativePaths", () => chainPaths(8), () => chainPaths(16), 3),
+      ("cellClusters", () => snakeClusters(2.0), () => snakeClusters(10.0), 5))
   }
 
   test("small regime: PageRank, label propagation and k-core run as one operator, whatever the rounds, and pin nothing") {
     assertOneOperator(
-      ("pageRank", () => ranks(4), () => ranks(8)),
-      ("labelPropagation", () => labels(4), () => labels(8)),
-      ("kCore", () => kCorePath(10), () => kCorePath(20)))
+      ("pageRank", () => ranks(4), () => ranks(8), 3),
+      ("labelPropagation", () => labels(4), () => labels(8), 3),
+      ("kCore", () => kCorePath(10), () => kCorePath(20), 3))
   }
 
   test("PageRank frees every superseded generation in the clustered regime") {

@@ -1,9 +1,13 @@
 package graft.util
 
+import java.util.concurrent.atomic.AtomicInteger
+
 import org.apache.logging.log4j.LogManager
 import org.apache.logging.log4j.core.{LogEvent, Logger}
 import org.apache.logging.log4j.core.appender.AbstractAppender
 import org.apache.logging.log4j.core.config.Property
+import org.apache.spark.graft.TestBusShims
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
 /** Spec helpers for the operators with two regimes: the default one (a
@@ -36,6 +40,32 @@ object Regimes {
     assert(sorted(smallRows) == sorted(loopRows),
       s"rows differ:\n small ${sorted(smallRows)}\n loop  ${sorted(loopRows)}")
     smallRows
+  }
+
+  /** RDDs left pinned once `run` (which builds and consumes a result) has
+    * returned, and the jobs it ran. Every RDD persisted during the run is
+    * held strongly from the listener, so a leaked generation cannot be
+    * hidden by the context cleaner unpersisting it after a GC. */
+  def pinsAndJobs(spark: SparkSession)(run: => Unit): (Int, Int) = {
+    val sc = spark.sparkContext
+    TestBusShims.drainListenerBus(sc)
+    val before = sc.getPersistentRDDs.keySet
+    val held = java.util.concurrent.ConcurrentHashMap.newKeySet[AnyRef]()
+    val jobs = new AtomicInteger
+    def hold(): Unit = sc.getPersistentRDDs.valuesIterator.foreach(held.add)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); hold() }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = hold()
+    }
+    sc.addSparkListener(listener)
+    try {
+      run
+      TestBusShims.drainListenerBus(sc)
+      ((sc.getPersistentRDDs.keySet -- before).size, jobs.get)
+    } finally {
+      sc.removeSparkListener(listener)
+      held.clear()
+    }
   }
 
   /** `body`'s result and the WARN messages the logger of `owner` logged
