@@ -7,8 +7,9 @@ import org.apache.spark.sql.SparkSession
   * to Catalyst's pruning: row-preserving tails (pure projections, left
   * joins on aggregated-unique keys) legitimately collapse, exactly as
   * they would under a user's own `count()`. Full-materialization timing
-  * (every output column demanded, the noop sink) lives in
-  * [[ScaleProbe]] — use that for scaling claims, this for trend. */
+  * (every output column demanded, the noop sink) lives in the test-scope
+  * `ScaleProbe` (`Test/runMain graft.ScaleProbe`) — use that for scaling
+  * claims, this for trend. */
 object Bench {
   /** Unpersist every RDD still registered with the block manager — the
     * localCheckpoint generations a finished query left behind. Blocking
@@ -74,22 +75,24 @@ object Bench {
     (runs.head, runs.sorted.apply(1))
   }
 
+  /** The SF dir a warm pass runs at: the smallest sibling SF (sf0.001) of
+    * `sfDir` when present — warming must not silently no-op on non-default
+    * layouts — else `sfDir` itself. */
+  private[graft] def warmDir(sfDir: String): String = {
+    val sibling = new java.io.File(new java.io.File(sfDir).getParentFile, "sf0.001")
+    if (sibling.isDirectory) sibling.getPath else sfDir
+  }
+
+  /** `v` with `decimals` decimals. Locale.ROOT: the f-interpolator honors
+    * the JVM default locale, and a comma-decimal locale would turn every
+    * number into invalid JSON — exactly the parsed:null this formatting
+    * exists to prevent. */
+  private[graft] def num(v: Double, decimals: Int): String =
+    String.format(java.util.Locale.ROOT, s"%.${decimals}f", Double.box(v))
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // the warm-up pass below compiles every query's generated code; the
-      // default 100-entry codegen class cache evicts the early queries'
-      // classes before the timed pass reaches them, so heavy queries would
-      // re-pay janino+JIT compilation inside their timed window (measured:
-      // 4.1 s first run vs 0.6 s warm for the domain-mix plan)
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     // host-drift calibration, leg 1: BEFORE the warm pass — a 157-query
     // warm pass leaves JVM state (old-gen occupancy, streaming state-store
     // maintenance) that inflated a post-warm calibration ~2x on a quiet
@@ -106,16 +109,13 @@ object Bench {
       import org.apache.spark.sql.functions._
       spark.range(100000).select(count(lit(1))).collect()
       if (!sys.env.contains("SPARK_GRAFT_NO_WARM")) {
-        // smallest sibling SF of the target dir when present (warming must
-        // not silently no-op on non-default layouts), else the target dir
-        val sibling = new java.io.File(new java.io.File(sfDir).getParentFile, "sf0.001")
-        val warmDir = if (sibling.isDirectory) sibling.getPath else sfDir
+        val warm = warmDir(sfDir)
         var failed = 0
         SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (_, fn) =>
-          try fn(spark, warmDir).count() catch { case _: Throwable => failed += 1 }
+          try fn(spark, warm).count() catch { case _: Throwable => failed += 1 }
           dropLeakedBlocks(spark)
         }
-        if (failed > 0) System.err.println(s"[bench] WARN: $failed warm-up queries failed ($warmDir)")
+        if (failed > 0) System.err.println(s"[bench] WARN: $failed warm-up queries failed ($warm)")
       }
     } catch { case _: Throwable => }
     // returns (elapsed sec, succeeded) — failures still record elapsed
@@ -235,11 +235,6 @@ object Bench {
     // the reference's three published macro shapes (BASELINE.md §bench):
     // many-to-many routing, two-stage spatial filter, raster value-group +
     // compact — surfaced under their own names for direct diffing
-    // Locale.ROOT: the f-interpolator honors the JVM default locale, and a
-    // comma-decimal locale would turn every number into invalid JSON —
-    // exactly the parsed:null this formatting exists to prevent
-    def num(v: Double, decimals: Int): String =
-      String.format(java.util.Locale.ROOT, s"%.${decimals}f", Double.box(v))
     val macros = Seq(
       "routing_many_to_many" -> "h3_26_routing_bench",
       // the reference's route_many_to_many bench on its OWN Germany
@@ -274,7 +269,7 @@ object Bench {
     // under the NOOP SINK and carry them as a second column in the full
     // artifact. The count() protocol stays the round-over-round yardstick,
     // but it lets Catalyst collapse row-preserving plans to a bare parquet
-    // count (ScaleProbe's documented trap: a rehearsal's "0.15 s at sf1.0"
+    // count (the documented trap of ScaleProbe, run by Test/runMain: a rehearsal's "0.15 s at sf1.0"
     // for a full gram pipeline is a collapsed plan, not scale evidence) —
     // the noop column is what a scaling claim may cite.
     // defensive parse: a malformed value must not throw AFTER the timed

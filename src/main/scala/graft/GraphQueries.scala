@@ -71,8 +71,8 @@ object GraphQueries {
     H3Graph.graphFromEdgeList(fwd.unionByName(bwd), "origin", "destination", "weight")
   }
 
-  /** The p116 query body with a sweepable hopsPerRound (P116Probe's
-    * residual decomposition runs {4, 8, 16}; the catalog entry pins 8 —
+  /** The p116 query body with a sweepable hopsPerRound (the r16 residual
+    * decomposition swept {4, 8, 16}; the catalog entry pins 8 —
     * ~12 relax + ~18 walk barriers collapse to ~4 + ~5, this query's cost
     * was pure round-barrier scheduling floor, 18% of the whole r13 bench
     * wall). Output and fixpoint are hop-count-invariant (spec-pinned). */

@@ -35,8 +35,8 @@ object StreamingQueries {
     * a streaming query is the STATE STORE partition count, fixed at query
     * start and beyond AQE's reach — is derived from the measured input
     * size instead of inherited from the batch session. Measured (r16
-    * StreamProbe, sf0.1): per-micro-batch state store commits dominate the
-    * gates' wall — e.g. s03's micro-batches spend 26-54 s of SUMMED
+    * micro-batch progress, sf0.1): per-micro-batch state store commits
+    * dominate the gates' wall — e.g. s03's micro-batches spend 26-54 s of SUMMED
     * commitTimeMs across 32 partitions on a 0.6 MB input, each partition
     * paying file create + rename + fsync per batch for KBs of state. The
     * derivation (one ~64 MB-of-input state partition, floored at 1, capped
@@ -88,8 +88,6 @@ object StreamingQueries {
     val q = out.writeStream.format("memory").queryName(name)
       .outputMode(mode).start()
     try q.processAllAvailable() finally q.stop()
-    if (ss.conf.get("graft.stream.probe", "false") == "true")
-      q.recentProgress.foreach(p => println(s"[streamprobe] $name ${p.json}"))
     ss.table(name)
   }
 

@@ -487,11 +487,13 @@ object Dedup {
         col("__n").as("__nb"))), Seq("id_b"))
       .select(col("id_a"), col("id_b"), interCol.as("__inter"), col("__na"), col("__nb"))
       .localCheckpoint(false)
+    // two gram sets empty (texts shorter than n) leave a NULL jaccard,
+    // which the threshold filter drops: the NULL-drop semantics of 0/0
+    val union = col("__na") + col("__nb") - col("__inter")
     val verified = inter
-      .withColumn("jaccard",
-        floor(col("__inter").cast("double") /
-          (col("__na") + col("__nb") - col("__inter")).cast("double") * 10000.0 + 0.5)
-          .cast("double") / 10000.0)
+      .withColumn("jaccard", when(union > 0,
+        floor(col("__inter").cast("double") / union.cast("double") * 10000.0 + 0.5)
+          .cast("double") / 10000.0))
       .filter(col("jaccard") >= threshold)
       .select(col("id_a"), col("id_b"), col("jaccard"))
     (identical.unionByName(verified), freeAll(Seq(pairs, textInfo, pairsH, inter)))
@@ -531,7 +533,7 @@ object Dedup {
       }
       if (differing > 0) {
         val verified = for (x <- da; y <- db if x.gramSet != null && y.gramSet != null;
-            j = jaccardE4(NgramHashKernel.intersectSize(x.gramSet, y.gramSet),
+            j <- jaccardE4(NgramHashKernel.intersectSize(x.gramSet, y.gramSet),
               x.gramSet.numElements(), y.gramSet.numElements()) if j >= threshold)
           yield Row(a, b, j)
         for (_ <- 1 to differing) out ++= verified
@@ -542,13 +544,12 @@ object Dedup {
   }
 
   /** The verifier's floor-quantized Jaccard of two gram sets of sizes `na`
-    * and `nb` sharing `inter`, evaluated as its Spark expression is; a
-    * pair of two empty sets divides by zero there too. */
-  private def jaccardE4(inter: Long, na: Long, nb: Long): Double = {
+    * and `nb` sharing `inter`, evaluated as its Spark expression is; none
+    * for two empty sets, which that expression leaves NULL. */
+  private def jaccardE4(inter: Long, na: Long, nb: Long): Option[Double] = {
     val union = na + nb - inter
-    if (union == 0) throw new ArithmeticException(
-      "[DIVIDE_BY_ZERO] Jaccard of two texts shorter than the gram size")
-    math.floor(inter.toDouble / union.toDouble * 10000.0 + 0.5).toLong.toDouble / 10000.0
+    Option.when(union > 0)(
+      math.floor(inter.toDouble / union.toDouble * 10000.0 + 0.5).toLong.toDouble / 10000.0)
   }
 
   /** End-to-end near-duplicate removal: LSH candidate generation, exact

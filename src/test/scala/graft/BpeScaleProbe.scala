@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale probe for the over-bound BPE regime
@@ -13,11 +12,7 @@ import org.apache.spark.sql.functions._
   * Run: `Test/runMain graft.BpeScaleProbe`. */
 object BpeScaleProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     import graft.pipeline.Bpe
 
     // deterministic synthetic vocab: the word is id's base-7 digit string

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Skew probe for the dedup chain (round-15 verdict item): the graph loops
@@ -29,11 +28,7 @@ object DedupSkewProbe {
   def main(args: Array[String]): Unit = {
     val nClones = args.headOption.map(_.toInt).getOrElse(10000)
     val corpusDir = args.drop(1).headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
 
     val docs = spark.read.parquet(s"$corpusDir/documents.parquet")
       .select(col("doc_id"), col("text"))

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** A/B probe for the CheckpointLayout clustered regime above the
@@ -16,11 +15,7 @@ import org.apache.spark.sql.functions._
 object LayoutScaleProbe {
   def main(args: Array[String]): Unit = {
     val nEdges = args.headOption.map(_.toLong).getOrElse(3000000L)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     import spark.implicits._
 
     // ~nEdges edges over ~nEdges/2 nodes; mild hub skew via the modulus.

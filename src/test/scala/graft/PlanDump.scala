@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Regenerates PLANS.md: formatted physical plans for a representative
   * query set at sf0.01. Run: `Test/runMain graft.PlanDump`. */
 object PlanDump {
@@ -35,11 +33,7 @@ object PlanDump {
 
   def main(args: Array[String]): Unit = {
     val dir = "/root/testdata/sf0.01"
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = LocalSession(4)
     spark.sparkContext.setLogLevel("ERROR")
     val sb = new StringBuilder
     sb.append("# PLANS — physical plan evidence (generated at sf0.01 by PlanDump)\n\n")

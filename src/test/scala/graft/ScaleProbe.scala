@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** 10× scale probe for the heavy query family: the driver's testdata stops
@@ -13,7 +12,7 @@ import org.apache.spark.sql.functions._
   * lengths) that the curation filters key on. Vocabulary grows with the
   * corpus, which is how real corpora grow.
   *
-  * Usage: runMain graft.ScaleProbe [sfDir] [query...] — prints one JSON
+  * Usage: Test/runMain graft.ScaleProbe [sfDir] [query...] — prints one JSON
   * line per query with 1× and N× seconds (post-warm-up) and the scaling
   * factor. The multiplier N defaults to 10; set SPARK_GRAFT_SCALE to probe
   * another octave (the r9 convention is 30 for the capped-band + CC
@@ -47,15 +46,7 @@ object ScaleProbe {
     val picked = if (args.length > 1) Heavy.filter(args.drop(1).contains(_)) else Heavy
     val mult = sys.env.getOrElse("SPARK_GRAFT_SCALE", "10").toInt
     val out = s"/tmp/graft-scale${mult}x"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
 
     val d = spark.read.parquet(s"$base/documents.parquet")
     // replica ids stride by 1e9 so they stay clear of the +1e7/+2e7

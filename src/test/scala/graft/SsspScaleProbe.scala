@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale probe for the distributed routing regime
@@ -17,11 +16,7 @@ import org.apache.spark.sql.functions._
   * exists for. */
 object SsspScaleProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     import graft.graph.H3Graph
 
     def expanderGraph(nNodes: Int) = {

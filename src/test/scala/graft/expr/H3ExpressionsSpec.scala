@@ -9,22 +9,14 @@ import graft.df.H3DataFrameOps._
 
 object SparkTestSession {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.parquet stores TIMESTAMP(NANOS); read as raw int64 nanos
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // bucketed-table specs (PreparedSpec) write through the catalog;
-      // keep the warehouse out of the repo tree
-      .config("spark.sql.warehouse.dir", "/tmp/graft-warehouse")
-      // surface codegen compile failures as test failures instead of a
-      // silent interpreted fallback (temporarily toggled when hunting)
-      .config("spark.sql.codegen.fallback", sys.props.getOrElse("graft.test.codegen.strict", "") != "true")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
+    // bucketed-table specs (PreparedSpec) write through the catalog; keep
+    // the warehouse out of the repo tree. -Dgraft.test.codegen.strict=true
+    // surfaces codegen compile failures as test failures instead of a
+    // silent interpreted fallback.
+    val s = graft.LocalSession(4, Seq(
+      "spark.sql.warehouse.dir" -> "/tmp/graft-warehouse",
+      "spark.sql.codegen.fallback" ->
+        (sys.props.getOrElse("graft.test.codegen.strict", "") != "true").toString))
     H3Registry.register(s)
     s
   }

@@ -101,13 +101,18 @@ class NearDupRegimeSpec extends AnyFunSuite {
     }
   }
 
-  test("ngramJaccardVerify: two different texts shorter than the gram size divide by zero in both regimes") {
+  test("ngramJaccardVerify: two different texts shorter than the gram size give no row in both regimes") {
     val docs = longDf(Seq(1L -> "abc", 2L -> "xyz"))
-    def run() = Dedup.ngramJaccardVerify(docs, col("doc_id"), col("text"), 8, 0.5,
-      Seq((1L, 2L)).toDF("id_a", "id_b")).collect()
-    val small = intercept[Exception](run())
-    val loop = intercept[Exception](Regimes.clustered(spark)(run()))
-    assert(small.getMessage.contains("DIVIDE_BY_ZERO") && loop.getMessage.contains("DIVIDE_BY_ZERO"))
+    assert(both(Dedup.ngramJaccardVerify(docs, col("doc_id"), col("text"), 8, 0.5,
+      Seq((1L, 2L)).toDF("id_a", "id_b"))).isEmpty)
+  }
+
+  test("nearDedup: short case variants are an LSH pair without a Jaccard and both survive") {
+    // LSH lower-cases tokens, so the two texts share every band; both are
+    // shorter than the 8-gram, so neither has a gram to compare
+    val docs = longDf(Seq(1L -> "ab cd", 2L -> "AB CD"))
+    assert(both(pairs(docs, Int.MaxValue)).length == 1)
+    assert(both(Dedup.nearDedup(docs, col("doc_id"), col("text"))).length == 2)
   }
 
   test("nearDupGroups and nearDedup: both regimes agree") {

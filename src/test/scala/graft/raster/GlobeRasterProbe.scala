@@ -1,6 +1,5 @@
 package graft.raster
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Whole-globe raster conversion probe at PRODUCTION resolution:
@@ -17,11 +16,7 @@ import org.apache.spark.sql.functions._
   */
 object GlobeRasterProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession()
     val path = "/root/reference/data/land_shallow_topo_1024.tif"
     require(new java.io.File(path).isFile, s"$path not present")
 
