@@ -43,7 +43,7 @@ object Cores {
     * its successor is materialized (a lazy chain pins every generation —
     * `rounds` × edge-frame memory, the LayoutScaleProbe lesson). The row
     * count rides
-    * the materializing job's accumulator for free and doubles as a
+    * the materializing job's observation for free and doubles as a
     * FIXPOINT exit: `e` only ever shrinks under the semi-joins, so an
     * unchanged count means an unchanged set and every remaining round is
     * a no-op — results are identical to running the full budget

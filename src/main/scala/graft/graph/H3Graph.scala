@@ -684,9 +684,9 @@ object H3Graph {
     * `src` to `cell` (plus, with `withPred`, the argmin predecessor) and
     * the pre-fold best `__old`. The best table and the improved frontier
     * are both projections of it, and the convergence count (improved
-    * rows) rides its materializing job. Each round joins the frontier
-    * against the edge table and keeps per-(cell, src) minima with a
-    * map-side partial min. Returns the final generation projected to the
+    * rows, by the frontier's own filter) rides its materializing job.
+    * Each round joins the frontier against the edge table and keeps
+    * per-(cell, src) minima with a map-side partial min. Returns the final generation projected to the
     * best table. Stats stay dropped. */
   private def relaxIterative(spark: SparkSession, edges: DataFrame, freeEdges: () => Unit,
       origins: Seq[Long], maxRounds: Int, checkpointDir: Option[String], hopsPerRound: Int,
@@ -736,12 +736,10 @@ object H3Graph {
       else lanes.agg(min(col("cost")).as("cost"), old)
     }
     def bestOf(f: DataFrame): DataFrame = f.select(stateCols.map(col): _*)
-    def improvedOf(f: DataFrame): DataFrame =
-      bestOf(f.filter(col("__old").isNull || col("cost") < col("__old")))
-    val improved: Fixpoint.Changed = { schema =>
-      val (cost, old) = (schema.fieldIndex("cost"), schema.fieldIndex("__old"))
-      r => r.isNullAt(old) || cheaper(r.getDouble(cost), r.getDouble(old))
-    }
+    // one expression is both the frontier filter and the round's change
+    // count (SQL `<` orders NaN above every cost, like `cheaper`)
+    val improved: Fixpoint.Changed = col("__old").isNull || col("cost") < col("__old")
+    def improvedOf(f: DataFrame): DataFrame = bestOf(f.filter(improved))
     val res = Fixpoint.converge(best0, () => (), maxRounds, checkpointDir,
         release = freeEdges) { (state, _) =>
       // hopsPerRound relaxation hops per materialized round: the per-round

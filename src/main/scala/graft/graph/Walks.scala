@@ -70,21 +70,14 @@ object Walks {
     // `checkpointDir` set, the clustered regime writes them as RELIABLE
     // file checkpoints (roundBarrierKeepingLayout with the cadence
     // position pinned to the reliable slot) instead of local blocks, the
-    // same cadence contract the loops expose.
+    // same cadence contract the loops expose. Either way the barrier is
+    // eager: adj/deg live in the result's lineage (every step reads
+    // them), and once they are materialized the clustered und copy can be
+    // freed below.
     def barrier(df: DataFrame): DataFrame =
-      if (cluster) {
-        if (checkpointDir.isDefined) {
-          val (ck, _) = graft.pipeline.CheckpointLayout.roundBarrierKeepingLayout(
-            df, Barriers.ReliableEvery - 1, checkpointDir)
-          ck
-        } else {
-          // adj/deg live in the result's lineage (every step reads them);
-          // materialize now so the clustered und copy can be freed below
-          val (ck, _) = graft.pipeline.CheckpointLayout.statSafeKeepingLayout(df)
-          ck.queryExecution.toRdd.count()
-          ck
-        }
-      } else Barriers.statSafe(df)
+      if (cluster) graft.pipeline.CheckpointLayout.roundBarrierKeepingLayout(
+        df, Barriers.ReliableEvery - 1, checkpointDir)._1
+      else Barriers.statSafe(df)
     val adj = barrier(
       und.select(col("a"), col("b"),
         (row_number().over(org.apache.spark.sql.expressions.Window
@@ -98,8 +91,8 @@ object Walks {
         // releasable; once w0 is materialized the now-dead source copies
         // can go too: nodes0, and (adj/deg being materialized above) the
         // clustered und copy
-        // nodes0 is already stat-safe (statSafeFreeable re-wrap), so the
-        // plain held variant suffices here
+        // nodes0 is already stat-safe (statSafeFreeable dropped its
+        // origin stats), so the plain held variant suffices here
         val (w0c, w0Held) = graft.pipeline.CheckpointLayout.clusteredByHeld(
           nodes0, key = "walk_id")
         val w0 =

@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.AttributeSet
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions.col
 
-import graft.util.Barriers.{freeAll, freeThunk}
+import graft.util.Barriers
 
 /** Checkpoint a frame so that a `HashPartitioning(key)` + in-partition
   * sort survives into every downstream consumer — the layout a frame
@@ -189,7 +189,7 @@ object CheckpointLayout {
   def statSafeClusteredBy(df: DataFrame, key: String,
       distinct: Boolean = false): (DataFrame, () => Unit) = {
     val (out, held) = clusteredByImpl(df, key, distinct)
-    (org.apache.spark.sql.graft.shims.dropOriginStats(out), freeAll(held))
+    (org.apache.spark.sql.graft.shims.dropOriginStats(out), Barriers.freeAll(held))
   }
 
   /** Re-lays the materialized stat-safe `frame0` out clustered by `key`
@@ -230,8 +230,8 @@ object CheckpointLayout {
     * frame already has — no repartition of its own. For frames whose
     * build is already exchange-free over clustered inputs (a window over
     * a [[statSafeClusteredBy]] frame, an iterative round's co-partitioned
-    * join output): a plain `Barriers.statSafe` would discard the layout
-    * through its RDD re-wrap, and [[statSafeClusteredBy]] would insert a
+    * join output): a plain `Barriers.statSafe` would lose the layout to
+    * AQE's unknown partitioning, and [[statSafeClusteredBy]] would insert a
     * pointless same-key re-shuffle. Same tag/rename exprId shield and
     * AQE-suspended (planning-only) capture as [[clusteredBy]]; no
     * usability probe — if the child has no layout the capture is
@@ -254,8 +254,7 @@ object CheckpointLayout {
     val (ck, _) = captureAqeOff(spark, tagged) { t =>
       val c = t.localCheckpoint(false); (c, Seq(c))
     }
-    val out = ck.select(names.map(n => col(tag(n)).as(n)): _*)
-    (org.apache.spark.sql.graft.shims.dropOriginStats(out), freeThunk(ck))
+    Barriers.statSafeOf(ck.select(names.map(n => col(tag(n)).as(n)): _*))
   }
 
   /** EAGER layout-keeping round barrier for the clustered regime of an
@@ -270,7 +269,10 @@ object CheckpointLayout {
     * never executes inside the window; eager-by-count so the PREVIOUS
     * generation's blocks can be freed as soon as this returns. Returns
     * the frame plus that unpersist thunk (no-op effect on reliable
-    * rounds — their data lives in files).
+    * rounds — their data lives in files). An eager checkpoint taken
+    * inside the capture would run the round's job on the AQE-off clone:
+    * the same tasks of the clustered PageRank/LPA rounds measured about
+    * twice the task time there.
     */
   def roundBarrierKeepingLayout(df: DataFrame, round: Int,
       checkpointDir: Option[String]): (DataFrame, () => Unit) = {
@@ -278,11 +280,11 @@ object CheckpointLayout {
     val names = df.columns.toSeq
     val tagged = df.select(names.map(n => col(n).as(tag(n))): _*)
     val reliable = checkpointDir.isDefined &&
-      round % graft.util.Barriers.ReliableEvery == graft.util.Barriers.ReliableEvery - 1
+      round % Barriers.ReliableEvery == Barriers.ReliableEvery - 1
     val (ck, _) = captureAqeOff(spark, tagged) { t =>
       val c =
         if (reliable) {
-          graft.util.Barriers.ensureCheckpointDir(spark.sparkContext, checkpointDir.get)
+          Barriers.ensureCheckpointDir(spark.sparkContext, checkpointDir.get)
           t.checkpoint(false)
         } else t.localCheckpoint(false)
       (c, Seq(c))
@@ -290,10 +292,9 @@ object CheckpointLayout {
     if (reliable) {
       // RDD.doCheckpoint re-RUNS the checkpoint-marked RDD after the
       // materializing action to write its files — without a persist the
-      // round's full lineage executes twice (the
-      // Barriers.roundBarrierCountingFreeable lesson). Cache the marked
-      // RDD for the window between the two jobs, then drop the blocks:
-      // reads afterwards come off the checkpoint files.
+      // round's full lineage executes twice. Cache the marked RDD for the
+      // window between the two jobs, then drop the blocks: reads
+      // afterwards come off the checkpoint files.
       val marked = ck.queryExecution.analyzed.collect {
         case lr: LogicalRDD => lr.rdd
       }
@@ -301,8 +302,7 @@ object CheckpointLayout {
       materialize(ck) // outside the window (the plan is already captured)
       marked.foreach(_.unpersist(blocking = false))
     } else materialize(ck)
-    val out = ck.select(names.map(n => col(tag(n)).as(n)): _*)
-    (org.apache.spark.sql.graft.shims.dropOriginStats(out), freeThunk(ck))
+    Barriers.statSafeOf(ck.select(names.map(n => col(tag(n)).as(n)): _*))
   }
 
   /** The double-materialization fallback shape, exposed for the spec: an

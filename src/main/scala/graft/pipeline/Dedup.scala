@@ -578,7 +578,7 @@ object Dedup {
       threshold: Double = 0.5,
       maxBucket: Int = MaxLshBucket): (DataFrame, () => Unit) = {
     // four consumers read the corpus (signatures, fingerprints, gram sets,
-    // the final anti-join); one materialization replaces four scans of the
+    // the final drop); one materialization replaces four scans of the
     // upstream plan (source union/filters re-run per consumer otherwise)
     val dfc = df.localCheckpoint(false)
     val (pairs, freePairs) =
@@ -597,10 +597,20 @@ object Dedup {
     Similarity.quantize4(Similarity.dot(va, vb) / (na * nb))
 
   /** near-dedup retention policy: drop the higher id of every verified
-    * pair, keeping the canonical minimum representative. */
+    * pair, keeping the canonical minimum representative. The small
+    * regime's verified pairs are a local relation: their ids filter the
+    * corpus in place (a join would broadcast them through a job of its
+    * own); NULL ids stay, as under the anti-join. */
   private def dropVerified(df: DataFrame, id: Column, verified: DataFrame): DataFrame =
-    df.join(verified.select(col("id_b").as("__drop")).distinct(),
-      id === col("__drop"), "left_anti")
+    (if (DriverRegime.integral(verified.schema("id_b").dataType))
+      DriverRegime.localRows(verified) else None) match {
+      case Some(rows) =>
+        val drop = rows.iterator.map(_.getAs[Any]("id_b")).filter(_ != null).toSet
+        df.filter(id.isNull || !shims.column(InSet(shims.expression(id), drop)))
+      case None =>
+        df.join(verified.select(col("id_b").as("__drop")).distinct(),
+          id === col("__drop"), "left_anti")
+    }
 
   /** Exact embedding near-duplicate pairs: all (id_a < id_b) pairs with
     * quantized cosine similarity >= `threshold`. Brute-force N^2 — the

@@ -878,17 +878,15 @@ object TextOps {
     // shuffle is cheap — clustering would only add a build shuffle and
     // cost the iterations their adaptive plans (measured +40-70% when
     // clustered too early). Past it, bake the layout in once.
-    val clusterBound = CheckpointLayout.clusterMinRows(spark)
     val feats =
-      if (clusterBound > 0 && nDocs <= clusterBound) collapsed
+      if (CheckpointLayout.smallRegime(spark, nDocs)) collapsed
       else {
         val (f, featsHeld) = CheckpointLayout.clusteredByHeld(collapsed, key = "doc_id")
         CheckpointLayout.materialize(f)
         // f materialized: the plain inner checkpoint and any fallback
         // boundary (featsHeld tail) are dead; f itself (featsHeld head)
         // lives in the returned result's lineage
-        graft.util.Barriers.freeThunk(collapsed)()
-        featsHeld.drop(1).foreach(h => graft.util.Barriers.freeThunk(h)())
+        graft.util.Barriers.freeAll(collapsed +: featsHeld.drop(1))()
         f
       }
 

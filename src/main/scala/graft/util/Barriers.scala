@@ -1,6 +1,7 @@
 package graft.util
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.graft.shims
 
 /** Lineage barriers for iterative DataFrame loops (distributed connected
   * components, label propagation, SSSP relaxation). Each round must cut
@@ -14,7 +15,10 @@ import org.apache.spark.sql.{DataFrame, Row}
   * exactly this long-lineage iterative case); intermediate rounds stay on
   * the cheap local path, bounding re-computation after a failure to at
   * most [[ReliableEvery]] rounds. Without a directory every round uses
-  * `localCheckpoint` — the fast single-box default. */
+  * `localCheckpoint` — the fast single-box default. Every barrier is a
+  * Dataset checkpoint with its origin statistics dropped
+  * ([[statSafeOf]]), so a loop keeps Catalyst's internal rows end to
+  * end. */
 object Barriers {
   /** Cadence of reliable checkpoints within an iterative loop. */
   val ReliableEvery = 5
@@ -64,31 +68,30 @@ object Barriers {
   private[graft] def freeAll(held: Seq[DataFrame]): () => Unit =
     () => held.foreach(f => freeThunk(f)())
 
-  /** Stat-safe lazy barrier: `localCheckpoint(eager = false)` + re-wrap
-    * from the RDD. A plain lazy localCheckpoint KEEPS the origin plan's
-    * estimated statistics — and a pairs/edges subtree (distinct over an
-    * exploded band join) routinely estimates far SMALLER than it runs,
-    * which lets the static planner elect a BroadcastHashJoin whose build
-    * side is actually tens of millions of rows: measured as a
-    * rebuilt-every-round 10M-row broadcast inside connected components
-    * (248 s of p61's 30× probe) and an outright
-    * `notEnoughMemoryToBuildAndBroadcastTable` failure on p62 at 30×. The
-    * RDD re-wrap resets the leaf to `spark.sql.defaultSizeInBytes` (huge),
-    * so only AQE's RUNTIME sizes — which are exact — can still choose a
-    * broadcast. Use for any frame whose size estimate is untrustworthy
-    * and that feeds a join. */
+  /** Stat-safe lazy barrier: `localCheckpoint(eager = false)` with the
+    * checkpoint's origin statistics dropped (`shims.dropOriginStats`). A
+    * plain lazy localCheckpoint KEEPS the origin plan's estimated
+    * statistics — and a pairs/edges subtree (distinct over an exploded
+    * band join) routinely estimates far SMALLER than it runs, which lets
+    * the static planner elect a BroadcastHashJoin whose build side is
+    * actually tens of millions of rows: measured as a rebuilt-every-round
+    * 10M-row broadcast inside connected components (248 s of p61's 30×
+    * probe) and an outright `notEnoughMemoryToBuildAndBroadcastTable`
+    * failure on p62 at 30×. With no origin stats the leaf reports
+    * `spark.sql.defaultSizeInBytes` (huge), so only AQE's RUNTIME sizes —
+    * which are exact — can still choose a broadcast. Use for any frame
+    * whose size estimate is untrustworthy and that feeds a join. The leaf
+    * keeps the source's column exprIds; joins against frames derived from
+    * the same source resolve as for any checkpoint. */
   def statSafe(df: DataFrame): DataFrame = statSafeFreeable(df)._1
 
   /** [[statSafe]] that also returns an unpersist thunk, for intra-round
     * intermediates that are dead once the round's action has run — same
     * call-after-every-consumer-materialized contract as [[freeThunk]]. */
-  def statSafeFreeable(df: DataFrame): (DataFrame, () => Unit) = {
-    val cp = df.localCheckpoint(eager = false)
-    val out = cp.sparkSession.createDataFrame(cp.rdd, cp.schema)
-    (out, freeThunk(cp))
-  }
+  def statSafeFreeable(df: DataFrame): (DataFrame, () => Unit) =
+    statSafeOf(df.localCheckpoint(eager = false))
 
-  /** EAGER [[statSafe]] whose blocks can be FREED: returns the re-wrapped
+  /** EAGER [[statSafe]] whose blocks can be FREED: returns the stat-safe
     * frame plus a thunk that unpersists the generation's checkpoint
     * blocks. For foreachBatch loops that supersede a cumulative frame
     * every epoch (streaming triangle counting's accumulated graph) —
@@ -98,61 +101,24 @@ object Barriers {
     * thunk only once every consumer of the frame has been materialized —
     * the lineage behind the blocks is truncated, so a recompute after
     * unpersist fails loudly rather than silently rescanning. */
-  def generation(df: DataFrame): (DataFrame, () => Unit) = {
-    val cp = df.localCheckpoint(eager = true)
-    val out = cp.sparkSession.createDataFrame(cp.rdd, cp.schema)
-    (out, freeThunk(cp))
+  def generation(df: DataFrame): (DataFrame, () => Unit) =
+    statSafeOf(df.localCheckpoint(eager = true))
+
+  /** The eager checkpoint of loop round `round` (0-based): a reliable
+    * `checkpoint` every [[ReliableEvery]]-th round under `checkpointDir`,
+    * a `localCheckpoint` otherwise. Either runs the lineage once, in one
+    * job, before it returns; a reliable round's data lives in files and
+    * pins no block. */
+  private[graft] def roundCheckpoint(df: DataFrame, round: Int,
+      checkpointDir: Option[String]): DataFrame = checkpointDir match {
+    case Some(dir) if round % ReliableEvery == ReliableEvery - 1 =>
+      ensureCheckpointDir(df.sparkSession.sparkContext, dir)
+      df.checkpoint(eager = true)
+    case _ => df.localCheckpoint(eager = true)
   }
 
-  /** Round barrier for iteration `round` (0-based) that ALSO counts rows
-    * matching `changed` — in the SAME job that materializes the
-    * checkpoint, via an accumulator threaded through the row stream. An
-    * iterative loop's convergence check then costs zero extra actions per
-    * round (previously: one materializing action + one count action; the
-    * count scan is cheap but on slim label frames per-round job overhead
-    * IS the loop cost — measured 5.6 s of p62's 7.4 s at sf0.1). Every
-    * [[ReliableEvery]]-th round under `checkpointDir` writes a reliable
-    * checkpoint; other rounds use `localCheckpoint`.
-    *
-    * Accumulator semantics under task retries are at-least-once, so the
-    * count may OVER-state on a retried task — which only keeps the loop
-    * iterating (safe); it can never under-state, and `0` is exact, so
-    * convergence (`changed == 0`) is never declared early. The reliable-
-    * checkpoint cadence pays its usual second job every
-    * [[ReliableEvery]]-th round (RDD `checkpoint` re-runs lineage after
-    * the action); intermediate rounds are exactly one job.
-    *
-    * The frame is re-wrapped from its RDD, which resets its plan
-    * statistics to `spark.sql.defaultSizeInBytes`: checkpoint leaves
-    * otherwise inherit the origin plan's estimate, and size-only
-    * estimation multiplies it through every join, compounding round over
-    * round into BigInts Catalyst spends minutes multiplying.
-    *
-    * Returns the re-wrapped frame, the count, and the generation's
-    * unpersist thunk (call only once every consumer of the frame has been
-    * materialized — for a loop, after its successor's barrier); reliable
-    * rounds already read off files, so their thunk is a no-op. Loops reach
-    * this through [[Fixpoint.converge]]. */
-  def roundBarrierCountingFreeable(df: DataFrame, round: Int,
-      checkpointDir: Option[String])(changed: Row => Boolean): (DataFrame, Long, () => Unit) = {
-    val spark = df.sparkSession
-    val acc = spark.sparkContext.longAccumulator(s"graft.changed.r$round")
-    val marked = df.rdd.map { r => if (changed(r)) acc.add(1L); r }
-    checkpointDir match {
-      case Some(dir) if round % ReliableEvery == ReliableEvery - 1 =>
-        ensureCheckpointDir(spark.sparkContext, dir)
-        // cache first so the post-action reliable-checkpoint job re-reads
-        // blocks instead of re-running lineage (and double-counting acc)
-        marked.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        marked.checkpoint()
-        marked.count()
-        marked.unpersist(blocking = false) // reads now come off checkpoint files
-        (spark.createDataFrame(marked, df.schema), acc.value, () => ())
-      case _ =>
-        marked.localCheckpoint()
-        marked.count()
-        (spark.createDataFrame(marked, df.schema), acc.value,
-          () => { marked.unpersist(blocking = false); () })
-    }
-  }
+  /** The checkpoint `cp` with its origin statistics dropped, and the
+    * thunk that frees its blocks: every barrier of the loops ends here. */
+  private[graft] def statSafeOf(cp: DataFrame): (DataFrame, () => Unit) =
+    (shims.dropOriginStats(cp), freeThunk(cp))
 }

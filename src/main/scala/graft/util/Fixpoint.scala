@@ -1,7 +1,7 @@
 package graft.util
 
-import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.{Column, DataFrame, Observation}
+import org.apache.spark.sql.functions.{col, count_if, lit}
 
 import graft.pipeline.CheckpointLayout
 
@@ -13,10 +13,10 @@ import graft.pipeline.CheckpointLayout
   * other plan choice stay inside the step.
   *
   * Two disciplines, both eager (one barrier job per round):
-  *  - [[converge]]: each round materializes the step's frame and counts
-  *    its changed rows through an accumulator
-  *    (`Barriers.roundBarrierCountingFreeable`); the loop stops at its
-  *    stop rule or at `maxRounds`.
+  *  - [[converge]]: each round's frame is observed with the count of its
+  *    changed rows and materialized by an eager Dataset checkpoint
+  *    (`Barriers.roundCheckpoint`), so the count rides the barrier's job;
+  *    the loop stops at its stop rule or at `maxRounds`.
   *  - [[fixedRounds]]: a fixed number of layout-keeping round barriers
   *    (`CheckpointLayout.roundBarrierKeepingLayout`).
   *
@@ -24,18 +24,16 @@ import graft.pipeline.CheckpointLayout
   * (plus the caller's static frames), not one generation per round. */
 object Fixpoint {
 
-  /** A per-row change test bound BY NAME to the schema of the frame being
-    * barriered, so a step may emit its columns in any order. */
-  type Changed = StructType => Row => Boolean
+  /** A round's change test: a boolean Column over the barriered frame,
+    * resolved BY NAME, so a step may emit its columns in any order. */
+  type Changed = Column
 
-  /** Rows whose columns `a` and `b` hold different values. */
-  def differs(a: String, b: String): Changed = { schema =>
-    val (i, j) = (schema.fieldIndex(a), schema.fieldIndex(b))
-    r => r.get(i) != r.get(j)
-  }
+  /** Rows whose columns `a` and `b` hold different values (null-safe: a
+    * null differs from any value, two nulls do not). */
+  def differs(a: String, b: String): Changed = !(col(a) <=> col(b))
 
   /** Every row counts: the round's count is its row count. */
-  val everyRow: Changed = _ => _ => true
+  val everyRow: Changed = lit(true)
 
   /** Stop rules over (this round's count, the previous round's count; -1
     * before the first round). */
@@ -73,10 +71,13 @@ object Fixpoint {
     var converged = false
     while (!converged && rounds < maxRounds) {
       val r = step(state, prev)
-      val (next, n, freeNext) = Barriers.roundBarrierCountingFreeable(
-        r.frame, rounds, checkpointDir)(r.changed(r.frame.schema))
+      val obs = new Observation()
+      val cp = Barriers.roundCheckpoint(
+        r.frame.observe(obs, count_if(r.changed).as("n")), rounds, checkpointDir)
+      val n = obs.get("n").asInstanceOf[Long]
       r.intermediates.foreach(_())
       free()
+      val (next, freeNext) = Barriers.statSafeOf(cp)
       state = next
       free = freeNext
       converged = stop(n, prev)

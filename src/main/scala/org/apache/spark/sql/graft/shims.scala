@@ -39,11 +39,12 @@ object shims {
 
   /** Drop the origin statistics (and constraints) carried by every
     * LogicalRDD in `df`'s plan while KEEPING the captured
-    * outputPartitioning/outputOrdering — the stats-reset every iterative
-    * loop needs (`Barriers.statSafe` semantics: with no origin stats the
+    * outputPartitioning/outputOrdering — the one stats reset of every
+    * barrier (`Barriers.statSafe` semantics: with no origin stats the
     * leaf reports `spark.sql.defaultSizeInBytes`, so only AQE's exact
-    * runtime sizes can elect a broadcast), without the public
-    * `createDataFrame(rdd, schema)` re-wrap that discards the layout.
+    * runtime sizes can elect a broadcast). Unlike a public
+    * `createDataFrame(rdd, schema)` re-wrap it keeps the layout, and the
+    * rows stay Catalyst's internal rows.
     * Needs this namespace for `Dataset.ofRows` (private[sql]). */
   def dropOriginStats(df: DataFrame): DataFrame = {
     val session = df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]

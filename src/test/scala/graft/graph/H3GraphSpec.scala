@@ -171,10 +171,10 @@ class H3GraphSpec extends AnyFunSuite {
   /** Runs only as the loop: the small regime takes no checkpoints. */
   private def reliableCadence(): Unit = {
     // hopsPerRound=1 forces one round per chain hop, so a chain longer
-    // than 2*ReliableEvery guarantees the reliable persist->checkpoint->
-    // count->unpersist branch (Barriers.scala) runs MID-loop, not just at
-    // the edges; the accumulator must not double-count across the cache +
-    // post-action checkpoint jobs or convergence would mis-detect
+    // than 2*ReliableEvery guarantees the reliable round
+    // (`Barriers.roundCheckpoint`) runs MID-loop, not just at the edges;
+    // its observed change count must match a local round's or
+    // convergence would mis-detect
     val dir = java.nio.file.Files.createTempDirectory("sssp_ck").toString
     // a longer grid path than the shared fixture: > 2*ReliableEvery hops
     val longChain: Array[Long] = {

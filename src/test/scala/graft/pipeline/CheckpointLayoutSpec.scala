@@ -258,10 +258,10 @@ class CheckpointLayoutSpec extends AnyFunSuite {
   }
 
   test("reliable clustered round executes its lineage once (persist bridges count and file write)") {
-    // RDD.doCheckpoint re-runs the checkpoint-marked RDD after the
-    // materializing action to write its files; without the persist bridge
-    // the round's plan executes twice. An accumulator over the source rows
-    // counts evaluations: exactly one pass.
+    // A reliable checkpoint marked lazily and materialized by a later
+    // action re-runs its lineage to write the files; the eager checkpoint
+    // writes them in the materializing pass. An accumulator over the
+    // source rows counts evaluations: exactly one pass.
     val dir = java.nio.file.Files.createTempDirectory("graft-ckl-once").toString
     val acc = spark.sparkContext.longAccumulator("graft.spec.evals")
     val rdd = spark.sparkContext.parallelize(0L until 400L, 4).map { i =>

@@ -123,6 +123,18 @@ class NearDupRegimeSpec extends AnyFunSuite {
     }
   }
 
+  test("nearDedup: both regimes keep the same rows; the small regime drops the verified ids without a join job") {
+    val df = longDf(corpus(10, 300)).cache()
+    def dedup(): DataFrame = Dedup.nearDedup(df, col("doc_id"), col("text"))
+    try {
+      assert(both(dedup()).length < df.count(), "no near-duplicate was dropped")
+      // `both` warmed the operator; a join against the local verified
+      // pairs would add two jobs (AQE broadcasts the local relation)
+      val (_, jobs) = Regimes.pinsAndJobs(spark)(dedup().collect())
+      assert(jobs <= 4, s"$jobs jobs")
+    } finally df.unpersist(blocking = true)
+  }
+
   test("lshCandidatePairs: a bucket whose pairs pass the bound runs the distributed path") {
     // 30 identical documents: 120 band rows in 4 buckets of 435 pairs
     val df = longDf((0L until 30L).map(_ -> "the same words in the same order every time"))

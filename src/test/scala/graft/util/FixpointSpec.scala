@@ -1,25 +1,26 @@
 package graft.util
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.expr.SparkTestSession
 import graft.h3.{H3Geo, H3Traversal}
 
 /** The loop combinator: name-resolved convergence, both stop rules, fixed
-  * rounds, and — for every loop built on it — block
-  * accounting that does not grow with the number of rounds run. */
+  * rounds, the reliable round, the stat-safe barriers, and — for every
+  * loop built on it — block accounting that does not grow with the number
+  * of rounds run. */
 class FixpointSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
   /** Min-label propagation over `edges`, its step emitting the compared
-    * columns in the order (`__prev`, `id`, `label`): a positional change
-    * test at the old connected-components indices (1 vs 2) would compare
-    * `id` with `label` and never reach zero on a component of 2+ nodes. */
-  private def minLabels(edges: Seq[(Long, Long)], maxRounds: Int,
-      changed: Fixpoint.Changed = Fixpoint.differs("label", "__prev")): Fixpoint.Result = {
+    * columns in the order (`__prev`, `id`, `label`): the change test must
+    * resolve `label` and `__prev` by name. */
+  private def minLabels(edges: Seq[(Long, Long)], maxRounds: Int): Fixpoint.Result = {
     val e = (edges ++ edges.map(_.swap)).toDF("a", "b")
     val init = e.select(col("a").as("id")).distinct().withColumn("label", col("id"))
     Fixpoint.converge(init, () => (), maxRounds, None) { (state, _) =>
@@ -29,7 +30,7 @@ class FixpointSpec extends AnyFunSuite {
       Fixpoint.Round(
         next.join(labels.select(col("id"), col("label").as("__prev")), "id")
           .select(col("__prev"), col("id"), col("label")),
-        changed)
+        Fixpoint.differs("label", "__prev"))
     }
   }
 
@@ -44,9 +45,6 @@ class FixpointSpec extends AnyFunSuite {
     val got = res.frame.select($"id", $"label").as[(Long, Long)].collect().toMap
     assert(got == (0L to 5L).map(_ -> 0L).toMap ++ (10L to 12L).map(_ -> 10L).toMap)
     assert(res.frame.columns.toSeq == Seq("__prev", "id", "label"))
-    // the same step under the old hard-coded indices never converges
-    val positional = minLabels(edges, maxRounds = 20, _ => r => r.get(1) != r.get(2))
-    assert(!positional.converged && positional.rounds == 20)
   }
 
   test("converge: the round cap stops an unconverged loop and says so") {
@@ -70,6 +68,60 @@ class FixpointSpec extends AnyFunSuite {
     assert(res.converged && res.rounds == 6)
     assert(seen.toSeq == Seq(-1L, 9L, 8L, 7L, 6L, 5L))
     assert(res.frame.as[Long].collect().sorted.toSeq == (0L until 5L))
+  }
+
+  test("converge: a reliable round runs its lineage once, counts exactly, writes its files and pins nothing") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-fixpoint-reliable")
+    val evals = spark.sparkContext.longAccumulator("graft.spec.evals")
+    val source = spark.createDataFrame(
+      spark.sparkContext.parallelize(0L until 400L, 4).map { i => evals.add(1L); Row(i) },
+      StructType(Seq(StructField("v", LongType))))
+    // rounds 0 until `reliable` are local and carry the start frame; the
+    // reliable round barriers the counted source
+    val reliable = Barriers.ReliableEvery - 1
+    val counts = scala.collection.mutable.ArrayBuffer.empty[Long]
+    var res: Fixpoint.Result = null
+    val (pins, jobs) = Regimes.pinsAndJobs(spark) {
+      res = Fixpoint.converge(spark.range(3).toDF("v"), () => (), reliable + 1,
+          Some(dir.toString), stop = (n, _) => { counts += n; false }) { (state, _) =>
+        if (counts.size < reliable) Fixpoint.Round(state, lit(false))
+        else Fixpoint.Round(source, col("v") % 3 === 0)
+      }
+    }
+    assert(evals.value == 400L,
+      s"the reliable round evaluated its lineage ${evals.value / 400.0} times, expected once")
+    assert(counts.toSeq == Seq.fill(reliable)(0L) :+ 134L)
+    assert(jobs == reliable + 1, s"$jobs jobs for ${reliable + 1} rounds")
+    assert(java.nio.file.Files.walk(dir).anyMatch(_.getFileName.toString.startsWith("part-")),
+      s"no checkpoint file under $dir")
+    assert(pins == 0, s"$pins RDDs left pinned")
+    assert(res.frame.count() == 400L && evals.value == 400L) // read off the files
+    res.free()
+  }
+
+  test("barriers: a plain checkpoint keeps a tiny estimate; every stat-safe barrier reports the default size") {
+    // the p61/p62 lesson in `Barriers.statSafe`: a frame estimated tiny
+    // must never elect a static broadcast, however large it runs. The
+    // source is a 10-row aggregate, estimated at a few hundred bytes.
+    def tiny = spark.range(100).groupBy((col("id") % 10).as("k")).agg(count(lit(1)).as("n"))
+    def leaf(df: DataFrame): Option[BigInt] =
+      df.queryExecution.optimizedPlan.collectFirst { case l: LogicalRDD => l.stats.sizeInBytes }
+    val default = BigInt(spark.sessionState.conf.defaultSizeInBytes)
+    assert(leaf(tiny.localCheckpoint(eager = false)).exists(_ < default),
+      "the source's estimate is not tiny: the checks below would be vacuous")
+    val converged = Fixpoint.converge(tiny, () => (), 3, None) { (state, _) =>
+      Fixpoint.Round(state.select(col("k"), col("n")), Fixpoint.differs("n", "n"))
+    }
+    assert(converged.converged && converged.rounds == 1)
+    for ((what, (df, free)) <- Seq(
+        "statSafe" -> { val f = Barriers.statSafe(tiny); (f, Barriers.freeThunk(f)) },
+        "statSafeFreeable" -> Barriers.statSafeFreeable(tiny),
+        "generation" -> Barriers.generation(tiny),
+        "converge" -> (converged.frame, converged.free))) {
+      assert(leaf(df).exists(_ >= default), s"$what: the leaf reports ${leaf(df)}")
+      assert(df.count() == 10L, what)
+      free()
+    }
   }
 
   test("fixedRounds: runs every round and keeps only the final generation") {
