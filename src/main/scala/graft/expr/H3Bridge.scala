@@ -1,7 +1,8 @@
 package graft.expr
 
 import graft.h3.H3Core
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.unsafe.types.UTF8String
 
 /**
@@ -16,6 +17,11 @@ import org.apache.spark.unsafe.types.UTF8String
  */
 object H3Bridge {
   import H3Core._
+
+  /** A cell array as an unsafe array: one block copy, no boxing (where
+    * `GenericArrayData` boxes every element), and the projection writes it
+    * out as one block. */
+  private[expr] def longs(cells: Array[Long]): ArrayData = UnsafeArrayData.fromPrimitiveArray(cells)
 
   def isValidCell(h: Long): Boolean = H3Core.isValidCell(h)
   def isValidEdge(h: Long): Boolean = H3Core.isValidDirectedEdge(h)
@@ -41,7 +47,7 @@ object H3Bridge {
 
   def cellToChildren(h: Long, res: Int): ArrayData = {
     if (!H3Core.isValidCell(h) || res < getResolution(h) || res > MaxRes) null
-    else new GenericArrayData(H3Core.cellToChildren(h, res))
+    else longs(H3Core.cellToChildren(h, res))
   }
 
   def cellToChildrenSize(h: Long, res: Int): java.lang.Long = {
@@ -55,7 +61,7 @@ object H3Bridge {
   def uncompactCell(h: Long, res: Int): ArrayData = {
     if (!H3Core.isValidCell(h) || res < 0 || res > MaxRes) null
     else if (getResolution(h) > res) null
-    else new GenericArrayData(H3Core.uncompactCell(h, res))
+    else longs(H3Core.uncompactCell(h, res))
   }
 
   def cellToString(h: Long): UTF8String =
@@ -110,7 +116,7 @@ object H3Bridge {
 
   def originToDirectedEdges(cell: Long): ArrayData = {
     if (!H3Core.isValidCell(cell)) null
-    else new GenericArrayData(H3Core.originToDirectedEdges(cell))
+    else longs(H3Core.originToDirectedEdges(cell))
   }
 
   def maxGridDiskSize(k: Int): java.lang.Long = {
@@ -118,5 +124,5 @@ object H3Bridge {
     if (n < 0) null else java.lang.Long.valueOf(n)
   }
 
-  def res0Cells(): ArrayData = new GenericArrayData(H3Core.res0Cells())
+  def res0Cells(): ArrayData = longs(H3Core.res0Cells())
 }

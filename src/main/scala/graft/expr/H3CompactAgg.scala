@@ -4,7 +4,6 @@ import graft.h3.H3Core
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 
 import scala.collection.mutable
@@ -51,7 +50,7 @@ case class H3CompactAgg(
   }
 
   override def eval(buf: mutable.HashSet[Long]): Any =
-    new GenericArrayData(H3Core.compactCells(buf.toArray))
+    H3Bridge.longs(H3Core.compactCells(buf.toArray))
 
   override def serialize(buf: mutable.HashSet[Long]): Array[Byte] = {
     val bb = java.nio.ByteBuffer.allocate(4 + buf.size * 8)

@@ -8,7 +8,8 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /**
  * Static bridge for the geometry/traversal expression catalog (same
- * conventions as [[H3Bridge]]: boxed returns, `null` = invalid input).
+ * conventions as [[H3Bridge]]: boxed returns, `null` = invalid input, cell
+ * arrays as unsafe long arrays).
  */
 object H3GeoBridge {
 
@@ -76,11 +77,11 @@ object H3GeoBridge {
 
   def gridDisk(h: Long, k: Int): ArrayData =
     if (!H3Core.isValidCell(h) || k < 0) null
-    else new GenericArrayData(H3Traversal.gridDisk(h, k))
+    else H3Bridge.longs(H3Traversal.gridDisk(h, k))
 
   def gridRing(h: Long, k: Int): ArrayData =
     if (!H3Core.isValidCell(h) || k < 0) null
-    else new GenericArrayData(H3Traversal.gridRing(h, k))
+    else H3Bridge.longs(H3Traversal.gridRing(h, k))
 
   /** array of struct (cell, k). */
   def gridDiskDistances(h: Long, k: Int): ArrayData = {
@@ -93,7 +94,7 @@ object H3GeoBridge {
 
   def gridDiskSpiral(h: Long, k: Int): ArrayData =
     if (!H3Core.isValidCell(h) || k < 0) null
-    else new GenericArrayData(H3Traversal.gridDiskSpiral(h, k))
+    else H3Bridge.longs(H3Traversal.gridDiskSpiral(h, k))
 
   /** array of struct (cell, k) in spiral traversal order. */
   def gridDiskSpiralDistances(h: Long, k: Int): ArrayData = {
@@ -113,7 +114,7 @@ object H3GeoBridge {
   def gridPath(a: Long, b: Long): ArrayData = {
     if (!H3Core.isValidCell(a) || !H3Core.isValidCell(b)) return null
     val p = H3Traversal.gridPathCells(a, b)
-    if (p.isEmpty) null else new GenericArrayData(p)
+    if (p.isEmpty) null else H3Bridge.longs(p)
   }
 
   def areNeighborCells(a: Long, b: Long): Boolean = H3Traversal.areNeighborCells(a, b)
@@ -187,25 +188,25 @@ object H3GeoBridge {
   def polygonToCells(wkt: UTF8String, res: Int): ArrayData = {
     if (wkt == null || res < 0 || res > 15) return null
     val cells = H3Polygon.polygonToCells(wkt.toString, res)
-    new GenericArrayData(cells)
+    H3Bridge.longs(cells)
   }
 
   def polygonToCellsIntersecting(wkt: UTF8String, res: Int): ArrayData = {
     if (wkt == null || res < 0 || res > 15) return null
     val cells = H3Polygon.polygonToCellsIntersecting(wkt.toString, res)
-    new GenericArrayData(cells)
+    H3Bridge.longs(cells)
   }
 
   def lineStringToCells(wkt: UTF8String, res: Int): ArrayData = {
     if (wkt == null || res < 0 || res > 15) return null
     val cells = H3Polygon.lineStringToCells(wkt.toString, res)
-    new GenericArrayData(cells)
+    H3Bridge.longs(cells)
   }
 
   def geometryToCells(wkt: UTF8String, res: Int): ArrayData = {
     if (wkt == null || res < 0 || res > 15) return null
     val cells = H3Polygon.geometryToCells(wkt.toString, res)
-    new GenericArrayData(cells)
+    H3Bridge.longs(cells)
   }
 
   def cellIntersectsPolygon(h: Long, wkt: UTF8String): java.lang.Boolean = {
@@ -237,7 +238,7 @@ object H3GeoBridge {
   /** C3 as a projection kernel: compact an array of cells. */
   def compactCells(cells: ArrayData): ArrayData = {
     if (cells == null) return null
-    new GenericArrayData(H3Core.compactCells(cells.toLongArray()))
+    H3Bridge.longs(H3Core.compactCells(cells.toLongArray()))
   }
 
   /** G8 dissolve: array of cells -> merged WKT MULTIPOLYGON. */
@@ -282,7 +283,6 @@ object H3GeoBridge {
     val pts = new Array[(Double, Double)](n)
     var i = 0
     while (i < n) { pts(i) = (lons.getDouble(i), lats.getDouble(i)); i += 1 }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      graft.h3.H3Polygon.lineStringToCells(pts, res))
+    H3Bridge.longs(H3Polygon.lineStringToCells(pts, res))
   }
 }

@@ -15,6 +15,15 @@ import java.lang.Math._
  * hex-grid arithmetic and spherical trig. The derived tables are
  * cross-validated by the invariants of `H3GeoSpec` and `H3TablesSpec`
  * (roundtrips, neighbor reciprocity, ring sizes, 4-pi total area).
+ *
+ * Inverse trig goes through [[FdLibm]], a plain-JVM port of fdlibm that is
+ * bit-identical to `StrictMath`. JDK 17's `Math.asin`/`acos`/`atan`/`atan2`
+ * reach `StrictMath`'s native fdlibm through JNI: up to 410-560 ns a call
+ * for `asin`/`acos` and 25-50 ns for `atan`/`atan2` (JDK 17.0.20, 4-core
+ * x86 VM). Every boundary vertex and centroid pays one `asin`, two `atan2`
+ * and one `atan` ([[hex2dToGeo]], [[geoAzDistanceRads]]); every
+ * `latLngToCell` one `acos` and one `atan2` ([[geoToHex2d]]).
+ * `GeometryPinSpec` pins the kernels' output bits.
  */
 object H3Geo {
 
@@ -324,7 +333,7 @@ object H3Geo {
 
   /** azimuth from p1 to p2, H3 convention. */
   def geoAzimuthRads(p1: LatLng, p2: LatLng): Double =
-    atan2(
+    FdLibm.atan2(
       cos(p2.lat) * sin(p2.lng - p1.lng),
       cos(p1.lat) * sin(p2.lat) - sin(p1.lat) * cos(p2.lat) * cos(p2.lng - p1.lng))
 
@@ -342,7 +351,7 @@ object H3Geo {
       var sinlat = sin(p1.lat) * cos(distance) + cos(p1.lat) * sin(distance) * cos(az)
       if (sinlat > 1.0) sinlat = 1.0
       if (sinlat < -1.0) sinlat = -1.0
-      val lat = asin(sinlat)
+      val lat = FdLibm.asin(sinlat)
       if (abs(lat - PI / 2.0) < Epsilon) LatLng(PI / 2.0, 0.0)
       else if (abs(lat + PI / 2.0) < Epsilon) LatLng(-PI / 2.0, 0.0)
       else {
@@ -352,7 +361,7 @@ object H3Geo {
         if (sinlng < -1.0) sinlng = -1.0
         if (coslng > 1.0) coslng = 1.0
         if (coslng < -1.0) coslng = -1.0
-        LatLng(lat, constrainLng(p1.lng + atan2(sinlng, coslng)))
+        LatLng(lat, constrainLng(p1.lng + FdLibm.atan2(sinlng, coslng)))
       }
     }
   }
@@ -362,7 +371,7 @@ object H3Geo {
     val sinLat = sin((b.lat - a.lat) / 2.0)
     val sinLng = sin((b.lng - a.lng) / 2.0)
     val h = sinLat * sinLat + cos(a.lat) * cos(b.lat) * sinLng * sinLng
-    2.0 * atan2(sqrt(h), sqrt(1.0 - h))
+    2.0 * FdLibm.atan2(sqrt(h), sqrt(1.0 - h))
   }
 
   def greatCircleDistanceKm(a: LatLng, b: LatLng): Double =
@@ -556,7 +565,7 @@ object H3Geo {
    * arc of a unit icosahedron: acos(sqrt((5 + 2*sqrt(5)) / 15)).
    */
   private lazy val derivedIcosa: (Array[LatLng], Array[Double]) = {
-    val thetaV = acos(sqrt((5.0 + 2.0 * sqrt(5.0)) / 15.0))
+    val thetaV = FdLibm.acos(sqrt((5.0 + 2.0 * sqrt(5.0)) / 15.0))
     val twoPi3 = 2.0 * PI / 3.0
     def norm3(v: Array[Double]): Array[Double] = {
       val m = sqrt(v(0) * v(0) + v(1) * v(1) + v(2) * v(2))
@@ -565,7 +574,7 @@ object H3Geo {
     def cross3(a: Array[Double], b: Array[Double]): Array[Double] =
       Array(a(1) * b(2) - a(2) * b(1), a(2) * b(0) - a(0) * b(2), a(0) * b(1) - a(1) * b(0))
     def dot3(a: Array[Double], b: Array[Double]): Double = a(0) * b(0) + a(1) * b(1) + a(2) * b(2)
-    def vec3ToGeo(v: Array[Double]): LatLng = LatLng(asin(max(-1.0, min(1.0, v(2)))), atan2(v(1), v(0)))
+    def vec3ToGeo(v: Array[Double]): LatLng = LatLng(FdLibm.asin(max(-1.0, min(1.0, v(2)))), FdLibm.atan2(v(1), v(0)))
     def angDiff(x: Double, y: Double): Double = { val d = posAngle(x - y); min(d, 2 * PI - d) }
 
     val centers3 = new Array[Array[Double]](NumIcosaFaces)
@@ -679,7 +688,7 @@ object H3Geo {
       if (d < sqd) { face = f; sqd = d }
       f += 1
     }
-    var r = acos(1.0 - sqd / 2.0)
+    var r = FdLibm.acos(1.0 - sqd / 2.0)
     if (r < Epsilon) return (face, 0.0, 0.0)
     var theta = posAngle(faceAxesAz0(face) - posAngle(geoAzimuthRads(faceCenterGeo(face), g)))
     if (isResClassIII(res)) theta = posAngle(theta - Ap7RotRads)
@@ -694,7 +703,7 @@ object H3Geo {
   def hex2dToGeo(x: Double, y: Double, face: Int, res: Int, substrate: Boolean): LatLng = {
     var r = sqrt(x * x + y * y)
     if (r < Epsilon) return faceCenterGeo(face)
-    var theta = atan2(y, x)
+    var theta = FdLibm.atan2(y, x)
     var i = 0
     while (i < res) { r /= Sqrt7; i += 1 }
     if (substrate) {
@@ -702,7 +711,7 @@ object H3Geo {
       if (isResClassIII(res)) r /= Sqrt7
     }
     r *= Res0UGnomonic
-    r = atan(r)
+    r = FdLibm.atan(r)
     if (!substrate && isResClassIII(res)) theta = posAngle(theta + Ap7RotRads)
     theta = posAngle(faceAxesAz0(face) - theta)
     geoAzDistanceRads(faceCenterGeo(face), theta, r)
@@ -1279,7 +1288,7 @@ object H3Geo {
     val b = (s - b0) / 2.0
     val c = (s - c0) / 2.0
     s = s / 2.0
-    4.0 * atan(sqrt(tan(s) * tan(a) * tan(b) * tan(c)))
+    4.0 * FdLibm.atan(sqrt(tan(s) * tan(a) * tan(b) * tan(c)))
   }
 
   def triangleAreaRads2(a: LatLng, b: LatLng, c: LatLng): Double =

@@ -414,8 +414,8 @@ object H3Traversal {
       val py = my + (my - ctr(1)) * 0.3
       val pz = mz + (mz - ctr(2)) * 0.3
       val norm = math.sqrt(px * px + py * py + pz * pz)
-      val lat = math.toDegrees(math.asin(pz / norm))
-      val lng = math.toDegrees(math.atan2(py, px))
+      val lat = math.toDegrees(FdLibm.asin(pz / norm))
+      val lng = math.toDegrees(FdLibm.atan2(py, px))
       val n = H3Geo.latLngToCell(lat, lng, res)
       if (n != origin && n != H3Core.H3Null) out += n
       i += 1
@@ -475,8 +475,21 @@ object H3Traversal {
     dist
   }
 
+  /** k = 1 without the BFS: the origin's neighbors (distinct, never the
+    * origin itself), ascending, plus the origin for the disk. The BFS's
+    * cells for k = 1, pentagons included (H3GeoSpec compares the two). */
+  private def firstRing(origin: Long, withOrigin: Boolean): Array[Long] = {
+    if (!H3Core.isValidCell(origin)) return Array.emptyLongArray
+    val ns = neighbors(origin)
+    val out = if (withOrigin) java.util.Arrays.copyOf(ns, ns.length + 1) else ns
+    if (withOrigin) out(ns.length) = origin
+    java.util.Arrays.sort(out)
+    out
+  }
+
   /** all cells within k steps, ascending cell id (deterministic). */
   def gridDisk(origin: Long, k: Int): Array[Long] = {
+    if (k == 1) return firstRing(origin, withOrigin = true)
     val m = gridDiskDistancesMap(origin, k)
     val out = m.keys.toArray
     java.util.Arrays.sort(out)
@@ -491,6 +504,7 @@ object H3Traversal {
 
   /** cells at exactly distance k, ascending cell id. */
   def gridRing(origin: Long, k: Int): Array[Long] = {
+    if (k == 1) return firstRing(origin, withOrigin = false)
     val m = gridDiskDistancesMap(origin, k)
     val out = m.iterator.collect { case (c, d) if d == k => c }.toArray
     java.util.Arrays.sort(out)

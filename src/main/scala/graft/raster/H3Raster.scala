@@ -131,22 +131,28 @@ object H3Raster {
    * polyfill the tile's geo window (with one pixel of margin), sample the
    * pixel under each cell centroid via the inverse transform, skip nodata
    * and out-of-window cells. Mirrors array.rs:303-347
-   * `convert_array_window`.
+   * `convert_array_window`. Tile fields are read by name (any column
+   * order), their indices resolved once from the schema.
    */
   def rasterToCells(tiles: DataFrame, res: Int): DataFrame = {
     implicit val enc = RowEncoder.encoderFor(cellValueSchema)
+    val schema = tiles.schema
+    val iX0 = schema.fieldIndex("x0"); val iY0 = schema.fieldIndex("y0")
+    val iW = schema.fieldIndex("width"); val iH = schema.fieldIndex("height")
+    val iTransform = schema.fieldIndex("transform"); val iValues = schema.fieldIndex("values")
+    val iNodata = schema.fieldIndex("nodata")
     tiles.filter(col("has_data")).mapPartitions { rows =>
       rows.flatMap { r =>
-        val x0 = r.getInt(1); val y0 = r.getInt(2)
-        val w = r.getInt(3); val h = r.getInt(4)
-        val t = Transform.fromArray(r.getSeq[Double](5))
-        val values = r.getSeq[Double](6)
+        val x0 = r.getInt(iX0); val y0 = r.getInt(iY0)
+        val w = r.getInt(iW); val h = r.getInt(iH)
+        val t = Transform.fromArray(r.getSeq[Double](iTransform))
+        val values = r.getSeq[Double](iValues)
         // NaN is a pixel VALUE like any other unless declared as the
         // nodata marker (reference preserve_nan_values, array.rs tests):
         // with no nodata configured nothing is pruned; NaN nodata prunes
         // NaN pixels (== comparison is always false for NaN)
-        val hasNodata = !r.isNullAt(7)
-        val nodata = if (hasNodata) r.getDouble(7) else 0.0
+        val hasNodata = !r.isNullAt(iNodata)
+        val nodata = if (hasNodata) r.getDouble(iNodata) else 0.0
         val inv = t.invert
         @inline def isNodata(v: Double): Boolean =
           hasNodata && (v == nodata || (nodata.isNaN && v.isNaN))

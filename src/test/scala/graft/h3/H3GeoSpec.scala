@@ -120,6 +120,26 @@ class H3GeoSpec extends AnyFunSuite {
     }
   }
 
+  test("k = 1 disk and ring equal the BFS: every res 0-3 cell, pentagon neighbourhoods at res 4-15") {
+    val cells = (0 to 3).iterator.flatMap(r => H3Core.res0Cells().iterator.flatMap(H3Core.cellToChildren(_, r))) ++
+      (for (bc <- H3Core.pentagonBaseCells.iterator; r <- (4 to 15).iterator)
+        yield H3Core.cellToCenterChild(H3Core.res0Cells()(bc), r)).flatMap(gridDiskDistancesMap(_, 2).keys)
+    var n = 0
+    for (c <- cells) {
+      val bfs = gridDiskDistancesMap(c, 1)
+      val disk = bfs.keys.toArray.sorted
+      val ring = bfs.iterator.collect { case (m, 1) => m }.toArray.sorted
+      val gotDisk = gridDisk(c, 1)
+      val gotRing = gridRing(c, 1)
+      assert(gotDisk.sameElements(disk), s"disk ${c.toHexString}")
+      assert(gotRing.sameElements(ring), s"ring ${c.toHexString}")
+      assert(gotDisk.distinct.length == gotDisk.length && gotRing.distinct.length == gotRing.length)
+      n += 1
+    }
+    assert(n > 48000)
+    assert(gridDisk(0L, 1).isEmpty && gridRing(0L, 1).isEmpty)
+  }
+
   test("grid ring 1 of 89283080ddbffff has 6 valid cells (cell.rs:521)") {
     val ring = gridRing(0x89283080ddbffffL, 1)
     assert(ring.length == 6 && ring.forall(H3Core.isValidCell))

@@ -173,6 +173,19 @@ class H3RasterSpec extends AnyFunSuite {
     assert(un == raw)
   }
 
+  test("rasterToCells reads tile fields by name: permuted tile columns give the same cells") {
+    val w = 16; val h = 16
+    val t = Transform.northUp(-122.5, 37.9, 0.02, 0.02)
+    val values = Array.tabulate(w * h)(i => if (i % 5 == 0) -1.0 else (i % 7).toDouble)
+    val tiles = tileRaster(spark, w, h, t, values, nodata = -1.0, tile = 8)
+    val want = rasterToCells(tiles, res = 8).as[(Double, Long)].collect().toSet
+    val permuted = tiles.select(tiles.columns.reverse.map(col).toSeq: _*)
+    assert(permuted.columns.toSeq != tiles.columns.toSeq)
+    val got = rasterToCells(permuted, res = 8).as[(Double, Long)].collect().toSet
+    assert(want.nonEmpty && !want.exists(_._1 == -1.0))
+    assert(got == want)
+  }
+
   test("nearest resolution picks by pixel area; smallerThanPixel is finer (R3)") {
     val coarse = Transform.northUp(0, 45, 1.0, 1.0) // ~1 degree pixels
     val fine = Transform.northUp(0, 45, 0.001, 0.001)
