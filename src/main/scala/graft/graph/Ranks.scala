@@ -137,10 +137,10 @@ object Ranks {
     }
     val (e, freeE) = CheckpointLayout.statSafeRecluster(e0, freeE0, key = "src")
     val (nodes, freeNodes) = CheckpointLayout.statSafeRecluster(nodes0, freeNodes0, key = "node")
-    val (withDeg, freeWithDeg) = CheckpointLayout.statSafeKeepingLayout(
+    val (withDeg, freeWithDeg) = CheckpointLayout.roundBarrierKeepingLayout(
       e.withColumn("deg", count(lit(1)).over(Window.partitionBy(col("src")))))
     val (init, tele) = lattice(n)
-    val (ranks0, freeRanks0) = CheckpointLayout.statSafeKeepingLayout(
+    val (ranks0, freeRanks0) = CheckpointLayout.roundBarrierKeepingLayout(
       nodes.select(col("node"), targeted(init).as("r")))
     Fixpoint.fixedRounds(ranks0, freeRanks0, iters, checkpointDir,
         release = () => { freeE(); freeNodes(); freeWithDeg() }) { ranks =>

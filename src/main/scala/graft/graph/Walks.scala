@@ -64,16 +64,13 @@ object Walks {
       graft.pipeline.CheckpointLayout.statSafeReclusterIfOver(
         und0, freeUnd0, measured = nNodes, key = "a")
     // Unlike the round loops (PR/LPA/CC/SSSP), walks materializes no
-    // per-round generations — the steps are a fixed-depth lazy join tree
-    // over three STATIC checkpoints (adj/deg/w0). The executor-loss
-    // durability parameter therefore applies to those: with
-    // `checkpointDir` set, the clustered regime writes them as RELIABLE
-    // file checkpoints (roundBarrierKeepingLayout with the cadence
-    // position pinned to the reliable slot) instead of local blocks, the
-    // same cadence contract the loops expose. Either way the barrier is
-    // eager: adj/deg live in the result's lineage (every step reads
-    // them), and once they are materialized the clustered und copy can be
-    // freed below.
+    // per-round generations: the steps are a fixed-depth lazy join tree
+    // over three STATIC checkpoints (adj/deg/w0), and the executor-loss
+    // durability parameter applies to those. With `checkpointDir` set, the
+    // clustered regime writes them as RELIABLE file checkpoints
+    // (roundBarrierKeepingLayout with the cadence position pinned to the
+    // reliable slot) instead of local blocks. Every barrier is eager, so
+    // once adj/deg/w0 exist the clustered und copy and nodes0 can go.
     def barrier(df: DataFrame): DataFrame =
       if (cluster) graft.pipeline.CheckpointLayout.roundBarrierKeepingLayout(
         df, Barriers.ReliableEvery - 1, checkpointDir)._1
@@ -86,29 +83,12 @@ object Walks {
 
     var w: DataFrame =
       if (cluster) {
-        // w0 lives in the result's lineage (step 1 reads it) — never
-        // freed here, but any fallback inner boundary (held tail) is
-        // releasable; once w0 is materialized the now-dead source copies
-        // can go too: nodes0, and (adj/deg being materialized above) the
-        // clustered und copy
-        // nodes0 is already stat-safe (statSafeFreeable dropped its
-        // origin stats), so the plain held variant suffices here
-        val (w0c, w0Held) = graft.pipeline.CheckpointLayout.clusteredByHeld(
-          nodes0, key = "walk_id")
+        // w0 lives in the result's lineage (step 1 reads it); the durable
+        // variant copies it to files and frees the clustered blocks
+        val w0c = graft.pipeline.CheckpointLayout.clusteredBy(nodes0, key = "walk_id")
         val w0 =
-          if (checkpointDir.isDefined) {
-            // durable variant: the reliable copy reads files, so EVERY
-            // local block behind it (the clustered copy and any fallback
-            // boundary) is dead once it materializes
-            val (ck, _) = graft.pipeline.CheckpointLayout.roundBarrierKeepingLayout(
-              w0c, Barriers.ReliableEvery - 1, checkpointDir)
-            w0Held.foreach(f => Barriers.freeThunk(f)())
-            ck
-          } else {
-            w0c.queryExecution.toRdd.count()
-            w0Held.drop(1).foreach(f => Barriers.freeThunk(f)())
-            w0c
-          }
+          if (checkpointDir.isEmpty) w0c
+          else { val ck = barrier(w0c); Barriers.freeThunk(w0c)(); ck }
         freeNodes0(); freeUnd()
         w0.select(col("walk_id"), col("walk_id").as("s0"))
       } else nodes0.select(col("walk_id"), col("walk_id").as("s0"))

@@ -857,11 +857,9 @@ object TextOps {
     // sort-free; the only per-iteration shuffle left is the per-bucket
     // gradient groupBy.
     // The corpus-side build (text explode + feature hashing + collapse)
-    // is checkpointed PLAINLY first so it keeps its fully-adaptive plan —
-    // clusteredBy captures with AQE suspended, which is fine for the slim
-    // LogicalRDD-leaf re-layout but must not cover the heavy scan; the
-    // leaf also makes the capture exprId-stable by construction. The
-    // slim inner copy is freed once the clustered frame is materialized.
+    // is checkpointed plainly first and measured; past the bound the slim
+    // frame is laid out off that checkpoint's blocks, and the plain copy is
+    // freed once the clustered one exists.
     val collapsed = df.select(id.cast("long").as("doc_id"),
         label.cast("long").as("y"),
         explode(classifierFeatures(text)).as("f"))
@@ -875,19 +873,19 @@ object TextOps {
     // Dual regime, gated on nDocs like every other loop
     // (CheckpointLayout.ClusterLayoutMinRows): below the bound the slim
     // frame fits AQE's runtime broadcast and the per-iteration window's
-    // shuffle is cheap — clustering would only add a build shuffle and
-    // cost the iterations their adaptive plans (measured +40-70% when
-    // clustered too early). Past it, bake the layout in once.
-    val feats =
-      if (CheckpointLayout.smallRegime(spark, nDocs)) collapsed
+    // shuffle is cheap — clustering would only add a build shuffle
+    // (measured +40-70% when clustered too early). Past it, bake the
+    // layout in once.
+    val docList = df.select(id.cast("long").as("doc_id"), label.cast("long").as("y"))
+    val (feats, docs) =
+      if (CheckpointLayout.smallRegime(spark, nDocs)) (collapsed, docList)
       else {
-        val (f, featsHeld) = CheckpointLayout.clusteredByHeld(collapsed, key = "doc_id")
-        CheckpointLayout.materialize(f)
-        // f materialized: the plain inner checkpoint and any fallback
-        // boundary (featsHeld tail) are dead; f itself (featsHeld head)
-        // lives in the returned result's lineage
-        graft.util.Barriers.freeAll(collapsed +: featsHeld.drop(1))()
-        f
+        // the doc list the scores join back to is laid out by doc_id too,
+        // so the final per-doc join streams both sides in place; both live
+        // in the returned result's lineage, collapsed is dead
+        val f = CheckpointLayout.clusteredBy(collapsed, key = "doc_id")
+        graft.util.Barriers.freeThunk(collapsed)()
+        (f, CheckpointLayout.clusteredBy(docList, key = "doc_id"))
       }
 
     def pE6(s: Column): Column = {
@@ -927,8 +925,7 @@ object TextOps {
         (floor(lit(1.0) / (lit(1.0) + exp(-logit)) * lit(10000.0) + lit(0.5))
           .cast("double") / lit(10000.0)).as("score")
       })
-    df.select(id.cast("long").as("doc_id"), label.cast("long").as("y"))
-      .join(scoredDocs, Seq("doc_id"), "left")
+    docs.join(scoredDocs, Seq("doc_id"), "left")
       .select(col("doc_id"), col("y"),
         coalesce(col("n_features"), lit(0L)).as("n_features"),
         coalesce(col("score"), lit(0.5)).as("score"))

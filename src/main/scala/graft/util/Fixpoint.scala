@@ -17,8 +17,10 @@ import graft.pipeline.CheckpointLayout
   *    changed rows and materialized by an eager Dataset checkpoint
   *    (`Barriers.roundCheckpoint`), so the count rides the barrier's job;
   *    the loop stops at its stop rule or at `maxRounds`.
-  *  - [[fixedRounds]]: a fixed number of layout-keeping round barriers
-  *    (`CheckpointLayout.roundBarrierKeepingLayout`).
+  *  - [[fixedRounds]]: a fixed number of rounds, each materialized by the
+  *    same eager checkpoint with the layout of its final plan declared on
+  *    it (`CheckpointLayout.roundBarrierKeepingLayout`), so a clustered
+  *    loop's next round joins in place.
   *
   * Blocks held at any moment: the current generation
   * (plus the caller's static frames), not one generation per round. */

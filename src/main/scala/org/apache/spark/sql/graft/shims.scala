@@ -1,10 +1,13 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeMap, AttributeSet, Expression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateFunction
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, PartitioningCollection, UnknownPartitioning}
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 
 /** Column <-> Expression bridge for Spark 4.x, where the classic helpers are
   * `private[sql]`. This is the only file that lives inside the Spark
@@ -38,7 +41,7 @@ object shims {
   }
 
   /** Drop the origin statistics (and constraints) carried by every
-    * LogicalRDD in `df`'s plan while KEEPING the captured
+    * LogicalRDD in `df`'s plan while KEEPING the declared
     * outputPartitioning/outputOrdering — the one stats reset of every
     * barrier (`Barriers.statSafe` semantics: with no origin stats the
     * leaf reports `spark.sql.defaultSizeInBytes`, so only AQE's exact
@@ -55,8 +58,8 @@ object shims {
     // projections) by explicit construction; unexpected shapes pass
     // through unchanged (keeping their stats) rather than failing.
     def strip(p: LogicalPlan): LogicalPlan = p match {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        new org.apache.spark.sql.execution.LogicalRDD(
+      case l: LogicalRDD =>
+        new LogicalRDD(
           l.output, l.rdd, l.outputPartitioning, l.outputOrdering,
           l.isStreaming, l.stream)(session, None, None)
       case pr: org.apache.spark.sql.catalyst.plans.logical.Project =>
@@ -66,50 +69,69 @@ object shims {
     org.apache.spark.sql.classic.Dataset.ofRows(session, strip(df.queryExecution.analyzed))
   }
 
-  /** A THROWAWAY clone of `spark` (same SparkContext, shared state, and
-    * registered functions; independent copied conf) with `pairs` set —
-    * the only way to plan ONE query under a conf override without
-    * mutating anything shared. A thread-local `SQLConf.withExistingConf`
-    * override does NOT work for the AQE gate: `InsertAdaptiveSparkPlan`
-    * overrides `conf` to read `adaptiveExecutionContext.session
-    * .sessionState.conf` DIRECTLY (verified in the 4.1.2 bytecode),
-    * bypassing `SQLConf.get`'s thread-local hook. Planning a frame
-    * re-rooted under the clone sees the override through that exact
-    * path; the original session and every other thread are untouched.
+  /** The eager checkpoint `cp` of `source` over a rebuilt leaf: fresh
+    * attributes, no origin statistics (stat-safe as [[dropOriginStats]]),
+    * and the layout of `source`'s final physical plan declared on it.
+    * Under AQE a checkpoint's leaf reports `UnknownPartitioning`, because
+    * the adaptive root does; the final plan, once the checkpoint's job has
+    * run, knows the real `HashPartitioning` and in-partition order. They
+    * are mapped onto the leaf output BY POSITION, so an alias the
+    * optimizer collapsed (a stale exprId in the physical output) cannot
+    * orphan them. Declared only when it holds row by row: a
+    * `HashPartitioning` (the first leaf of a `PartitioningCollection`, as
+    * `Dataset.checkpoint` takes it) over output columns whose
+    * `numPartitions` is the checkpoint RDD's partition count, so never a
+    * coalesced read's. Anything else declares nothing (`UnknownPartitioning`,
+    * no ordering) and downstream plans pay their usual exchanges.
+    * Needs this namespace for `Dataset.ofRows` (private[sql]). */
+  def declareLayout(cp: DataFrame, source: DataFrame): DataFrame = {
+    val session = cp.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val leaf = cp.queryExecution.analyzed match {
+      case l: LogicalRDD => l
+      case other => throw new IllegalStateException(
+        s"checkpoint plan is not a LogicalRDD leaf: ${other.getClass.getName}")
+    }
+    val fresh = leaf.output.map(_.newInstance())
+    val finalPlan = source.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => Some(a.executedPlan).filter(_ => a.isFinalPlan)
+      case p => Some(p)
+    }
+    val layout = finalPlan.filter(_.output.length == fresh.length).flatMap { p =>
+      val out = AttributeSet(p.output)
+      val byPosition = AttributeMap(p.output.zip(fresh))
+      def onLeaf[E <: Expression](e: E): E =
+        e.transform { case a: Attribute => byPosition.getOrElse(a, a) }.asInstanceOf[E]
+      val first = p.outputPartitioning match {
+        case PartitioningCollection(ps) => ps.head
+        case other => other
+      }
+      first match {
+        case h: HashPartitioning if h.references.subsetOf(out) &&
+            h.numPartitions == leaf.rdd.getNumPartitions =>
+          val ordering = p.outputOrdering.map(o => o.copy(sameOrderExpressions =
+              o.sameOrderExpressions.filter(_.references.subsetOf(out))))
+            .takeWhile(_.references.subsetOf(out))
+          Some((onLeaf(h), ordering.map(onLeaf(_))))
+        case _ => None
+      }
+    }
+    val (partitioning, ordering) = layout.getOrElse((UnknownPartitioning(0), Nil))
+    org.apache.spark.sql.classic.Dataset.ofRows(session, new LogicalRDD(
+      fresh, leaf.rdd, partitioning, ordering, leaf.isStreaming, leaf.stream)(session, None, None))
+  }
+
+  /** A clone of `spark` (same SparkContext, shared state, and registered
+    * functions; independent copied conf) with `pairs` set: a second session
+    * that differs from the first in those keys only, without mutating
+    * anything shared — the B side of a conf A/B (`StreamingQueries`'
+    * stream sessions, the query probe's `--conf`, the specs' modes). A
+    * thread-local `SQLConf.withExistingConf` override does not reach every
+    * planner rule (`InsertAdaptiveSparkPlan` reads its session's conf
+    * directly), so a per-query override needs its own session.
     * Needs this namespace for `cloneSession` (private[sql]). */
   def cloneSessionWithConf(spark: SparkSession, pairs: (String, String)*): SparkSession = {
     val clone = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].cloneSession()
     pairs.foreach { case (k, v) => clone.conf.set(k, v) }
     clone
-  }
-
-  /** `df`'s ANALYZED plan re-rooted under `target` (a
-    * [[cloneSessionWithConf]] clone): subsequent planning/execution of the
-    * returned frame reads the target's conf. The analyzed (not raw) plan
-    * skips re-analysis, so resolution cannot drift between sessions. */
-  def reRoot(df: DataFrame, target: SparkSession): DataFrame =
-    org.apache.spark.sql.classic.Dataset.ofRows(
-      target.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
-      df.queryExecution.analyzed)
-
-  /** A checkpoint Dataset created under a throwaway clone, re-bound to
-    * `target`: the LogicalRDD leaf is rebuilt with the target session and
-    * the leaf's current stats carried over (origin constraints dropped —
-    * none of the capture paths rely on them). Downstream queries rooted
-    * at the result plan under `target`'s conf (AQE on), not the clone's.
-    * Non-LogicalRDD-rooted plans would indicate a Spark behavior change:
-    * fail fast rather than silently keep a frame whose downstream
-    * planning reads the clone's suspended conf. */
-  def rebindCheckpoint(ck: DataFrame, target: SparkSession): DataFrame = {
-    val session = target.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    val plan = ck.queryExecution.analyzed match {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        new org.apache.spark.sql.execution.LogicalRDD(
-          l.output, l.rdd, l.outputPartitioning, l.outputOrdering,
-          l.isStreaming, l.stream)(session, Some(l.stats), None)
-      case other => throw new IllegalStateException(
-        s"checkpoint plan is not a LogicalRDD leaf: ${other.getClass.getName}")
-    }
-    org.apache.spark.sql.classic.Dataset.ofRows(session, plan)
   }
 }

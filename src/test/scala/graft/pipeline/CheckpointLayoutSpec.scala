@@ -1,23 +1,27 @@
 package graft.pipeline
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.expressions.{AttributeSet, Expression}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Ascending, AttributeSet, BoundReference,
+  Expression, InterpretedOrdering, Literal, Murmur3Hash, Pmod, SortOrder}
+import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, UnknownPartitioning}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.expr.SparkTestSession
+import graft.util.Barriers
 
-/** [[CheckpointLayout.clusteredBy]] must yield a checkpoint whose
-  * captured HashPartitioning+ordering reference its OWN output on both
-  * build paths: the direct capture (no alias collapse in the subtree)
-  * and the stable-boundary fallback that guards against Spark's
-  * RemoveRedundantAliases exprId staleness (a bare already-long column
-  * cast+aliased to its own name — the p77 shape). */
+/** [[CheckpointLayout.clusteredBy]] must yield a checkpoint whose declared
+  * HashPartitioning+ordering reference its OWN output, hold row by row, and
+  * let downstream per-key plans stream in place — also where the optimizer
+  * collapses a redundant alias (a bare already-long column cast+aliased to
+  * its own name, the p77 shape). Where a frame's final plan has no such
+  * layout the leaf declares nothing. */
 class CheckpointLayoutSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
-  private def capturedLayout(ck: DataFrame): (Boolean, Boolean) =
+  private def declaredLayout(ck: DataFrame): (Boolean, Boolean) =
     ck.queryExecution.analyzed.collectFirst { case l: LogicalRDD =>
       val out = AttributeSet(l.output)
       val partOk = (l.outputPartitioning match {
@@ -35,7 +39,58 @@ class CheckpointLayoutSpec extends AnyFunSuite {
     val fin = agg.queryExecution.executedPlan.toString
       .split("== Initial Plan ==").head
     assert(!fin.contains("Exchange hashpartitioning"),
-      s"expected the captured layout to satisfy the groupBy in:\n$fin")
+      s"expected the declared layout to satisfy the groupBy in:\n$fin")
+  }
+
+  /** `ck` joined (sort-merge: broadcast off) with `slim` on `key` = `k2`
+    * and aggregated by `key`: exactly ONE shuffle, the slim side's, and at
+    * most one Sort, the slim side's; the declared side streams in place. */
+  private def joinsInPlace(ck: DataFrame, key: String, slim: DataFrame): Unit = {
+    val thresholdWas = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try {
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      val joined = ck.join(slim, ck(key) === slim("k2"))
+        .groupBy(col(key)).agg(count(lit(1)).as("n"))
+      joined.collect()
+      val fin = joined.queryExecution.executedPlan.toString
+        .split("== Initial Plan ==").head
+      val shuffles = fin.linesIterator.count(_.contains("Exchange hashpartitioning"))
+      assert(shuffles == 1, s"expected only the slim side to exchange, got $shuffles in:\n$fin")
+      val sorts = fin.linesIterator.count(l => l.trim.matches("^[+:|\\-\\s*()0-9]*Sort \\[.*"))
+      assert(sorts <= 1, s"declared side re-sorted:\n$fin")
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresholdWas)
+  }
+
+  private def leafOf(df: DataFrame): LogicalRDD =
+    df.queryExecution.analyzed.collectFirst { case l: LogicalRDD => l }.get
+
+  /** The declared layout, checked on the leaf RDD itself: every row sits on
+    * partition `pmod(hash(key), n)` and no adjacent pair within a partition
+    * is out of ascending order. Returns (misplaced rows, unordered pairs). */
+  private def layoutViolations(ck: DataFrame): (Long, Long) = {
+    val leaf = leafOf(ck)
+    val n = leaf.rdd.getNumPartitions
+    val (key, declared) = leaf.outputPartitioning match {
+      case HashPartitioning(Seq(k), m) => (k, m)
+      case other => fail(s"no single-key HashPartitioning declared: $other")
+    }
+    assert(declared == n, s"declared $declared partitions over an RDD of $n")
+    assert(leaf.outputOrdering.headOption.exists(o =>
+      o.child.semanticEquals(key) && o.direction == Ascending), s"order: ${leaf.outputOrdering}")
+    val i = leaf.output.indexWhere(_.semanticEquals(key))
+    val bound = BoundReference(i, leaf.output(i).dataType, nullable = true)
+    val part = Pmod(new Murmur3Hash(Seq(bound)), Literal(n))
+    val order = new InterpretedOrdering(Seq(SortOrder(bound, Ascending)))
+    leaf.rdd.mapPartitionsWithIndex { (pid, rows) =>
+      var prev: InternalRow = null
+      var misplaced, unordered = 0L
+      rows.foreach { r =>
+        if (part.eval(r) != pid) misplaced += 1
+        if (prev != null && order.compare(prev, r) > 0) unordered += 1
+        prev = r.copy()
+      }
+      Iterator((misplaced, unordered))
+    }.collect().foldLeft((0L, 0L)) { case ((a, b), (c, d)) => (a + c, b + d) }
   }
 
   test("graft.layout.clusterMinRows: a non-integer or negative value is rejected by name") {
@@ -60,52 +115,37 @@ class CheckpointLayoutSpec extends AnyFunSuite {
   test("direct path: expression-derived key survives the checkpoint") {
     val df = spark.range(200).select((col("id") % 17).as("k"), col("id").as("v"))
     val ck = CheckpointLayout.clusteredBy(df, "k")
-    val (partOk, sortOk) = capturedLayout(ck)
-    assert(partOk && sortOk, s"layout not captured: part=$partOk sort=$sortOk")
+    val (partOk, sortOk) = declaredLayout(ck)
+    assert(partOk && sortOk, s"layout not declared: part=$partOk sort=$sortOk")
     shuffleFree(ck)
     assert(ck.count() == 200)
   }
 
   test("stale-alias shape: bare same-name long column still lands the layout") {
     // cast("long") on an already-long column + same-name alias is exactly
-    // what RemoveRedundantAliases collapses, leaving fromDataset's
-    // verbatim-copied partitioning pointing at dead exprIds. The internal
-    // rename shield must keep the capture stable (single materialization,
-    // no fallback) and the result must still be layout-true downstream.
+    // what RemoveRedundantAliases collapses, leaving the physical output
+    // on exprIds the logical output no longer has. The layout is declared
+    // by position, so the result must still be layout-true downstream.
     val src = spark.range(300).select(col("id").as("k"), (col("id") * 2).as("v0"))
     val df = src.select(col("k").cast("long").as("k"), col("v0").as("v"))
       .groupBy(col("k"), col("v")).agg(count(lit(1)).as("c"))
       .select(col("k"), col("v"))
     val ck = CheckpointLayout.clusteredBy(df, "k")
-    val (partOk, sortOk) = capturedLayout(ck)
-    assert(partOk && sortOk, s"layout not captured: part=$partOk sort=$sortOk")
+    val (partOk, sortOk) = declaredLayout(ck)
+    assert(partOk && sortOk, s"layout not declared: part=$partOk sort=$sortOk")
     shuffleFree(ck)
     assert(ck.count() == 300)
   }
 
-  test("stable-boundary fallback itself is layout-true") {
-    // The fallback is expected never to run behind the rename shield, but
-    // it is the safety net — pin it directly: even on the alias-collapse
-    // shape it must produce a usable captured layout (via its LogicalRDD
-    // leaf boundary) and satisfy a downstream clustering for free.
-    val df = spark.range(200)
-      .select(col("id").cast("long").as("k"), (col("id") % 7).as("v"))
-    val ck = CheckpointLayout.stableBoundaryCheckpoint(df,
-      d => d.repartition(col("k")).sortWithinPartitions(col("k")))
-    val (partOk, sortOk) = capturedLayout(ck)
-    assert(partOk && sortOk, s"layout not captured: part=$partOk sort=$sortOk")
-    shuffleFree(ck)
-    assert(ck.count() == 200)
-  }
-
-  test("statSafeClusteredBy: layout survives the stats drop and feeds a join exchange-free") {
+  test("clusteredBy: layout survives the stats drop and feeds a join exchange-free") {
     // The iterative-loop contract: the static big frame is shuffled+sorted
     // ONCE at build; every round's equi-join against a slim evolving frame
     // must then need no exchange and no sort on the big side, even in the
     // non-broadcast regime (threshold disabled to force SMJ/SHJ).
     val big = spark.range(2000)
       .select((col("id") % 97).as("k"), (col("id") * 3).as("v"))
-    val (ck, free) = CheckpointLayout.statSafeClusteredBy(big, "k")
+    val ck = CheckpointLayout.clusteredBy(big, "k")
+    val free = Barriers.freeThunk(ck)
     // stats dropped: the leaf must report the huge default, not the origin
     // estimate — so the static planner can never broadcast-build this side
     val leafStats = ck.queryExecution.optimizedPlan.collectFirst {
@@ -113,28 +153,70 @@ class CheckpointLayoutSpec extends AnyFunSuite {
     }
     assert(leafStats.exists(_ >= BigInt(spark.sessionState.conf.defaultSizeInBytes)),
       s"origin stats not dropped: $leafStats")
-    val (partOk, sortOk) = capturedLayout(ck)
+    val (partOk, sortOk) = declaredLayout(ck)
     assert(partOk && sortOk, s"layout lost in stats drop: part=$partOk sort=$sortOk")
 
-    val thresholdWas = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val slim = spark.range(97).select(col("id").as("k2"), lit(1L).as("w"))
-      val joined = ck.join(slim, ck("k") === slim("k2"))
-        .groupBy(col("k")).agg(sum(col("v") * col("w")).as("s"))
-      joined.collect()
-      val fin = joined.queryExecution.executedPlan.toString
-        .split("== Initial Plan ==").head
-      // exactly ONE shuffle: the slim side; the big side streams in place
-      val shuffles = fin.linesIterator.count(_.contains("Exchange hashpartitioning"))
-      assert(shuffles == 1, s"expected only the slim side to exchange, got $shuffles in:\n$fin")
-      // and the big side is not re-sorted: at most one Sort (slim side's SMJ sort)
-      val sorts = fin.linesIterator.count(l => l.trim.matches("^[+:|\\-\\s*()0-9]*Sort \\[.*"))
-      assert(sorts <= 1, s"big side re-sorted:\n$fin")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresholdWas)
-
+    joinsInPlace(ck, "k", spark.range(97).select(col("id").as("k2"), lit(1L).as("w")))
     assert(ck.count() == 2000)
     free() // after materialization: must not throw
+  }
+
+  test("declared layout is true row by row for int, long, string, binary and null keys") {
+    val df = spark.range(3000).select(
+      when(col("id") % 11 =!= 0, (col("id") % 97).cast("int")).as("k_int"),
+      when(col("id") % 13 =!= 0, col("id") * 7919L % 1009L).as("k_long"),
+      when(col("id") % 17 =!= 0, concat(lit("s"), (col("id") % 89).cast("string"))).as("k_string"),
+      when(col("id") % 19 =!= 0, concat(lit("b"), (col("id") % 83).cast("string")).cast("binary"))
+        .as("k_binary"),
+      col("id").as("v"))
+    for (key <- Seq("k_int", "k_long", "k_string", "k_binary")) {
+      val ck = CheckpointLayout.clusteredBy(df, key)
+      assert(layoutViolations(ck) == ((0L, 0L)), s"$key: (misplaced rows, unordered pairs)")
+      assert(ck.filter(col(key).isNull).count() > 0, s"$key: no null key exercised")
+      val agg = ck.groupBy(col(key)).agg(count(lit(1)).as("n"))
+      agg.collect()
+      val fin = agg.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
+      assert(!fin.contains("Exchange") && !fin.linesIterator.exists(_.trim.matches(
+        "^[+:|\\-\\s*()0-9]*Sort \\[.*")), s"$key: groupBy re-laid the frame out:\n$fin")
+      joinsInPlace(ck, key, df.select(col(key).as("k2")).distinct())
+      Barriers.freeThunk(ck)()
+    }
+  }
+
+  test("the shim declares nothing on a coalesced round, a dropped key or a partition-count mismatch") {
+    def unknown(ck: DataFrame, what: String): Unit =
+      assert(leafOf(ck).outputPartitioning.isInstanceOf[UnknownPartitioning] &&
+        leafOf(ck).outputOrdering.isEmpty, s"$what declared ${leafOf(ck).outputPartitioning}")
+    def exactJoin(ck: DataFrame, key: String, want: DataFrame): Unit = {
+      val other = spark.range(40).select(col("id").as(key), (col("id") * 10).as("w"))
+      def rows(d: DataFrame) = d.join(other, key).collect().map(_.toString).sorted.toSeq
+      assert(rows(ck) == rows(want))
+    }
+    // an LPA-shaped round: two aggregates, so tiny that AQE coalesces the
+    // last read
+    val e = spark.range(40).select((col("id") % 8).as("node"), (col("id") % 3).as("label"))
+    val round = e.groupBy(col("node"), col("label")).agg(count(lit(1)).as("c"))
+      .groupBy(col("node")).agg(max(struct(col("c"), col("label"))).as("m"))
+      .select(col("node"), col("m.label").as("label"))
+    val (coalesced, freeCoalesced) = CheckpointLayout.roundBarrierKeepingLayout(round)
+    assert(round.queryExecution.executedPlan.toString.contains("coalesced"),
+      s"the round's final read was not coalesced:\n${round.queryExecution.executedPlan}")
+    unknown(coalesced, "a coalesced round")
+    exactJoin(coalesced, "node", round)
+    // the final projection drops the partitioning column
+    val src = spark.range(200).select((col("id") % 7).as("k"), col("id").as("v"))
+    val dropped = src.repartition(4, col("k")).sortWithinPartitions(col("k")).select(col("v"))
+    val (noKey, freeNoKey) = CheckpointLayout.roundBarrierKeepingLayout(dropped)
+    unknown(noKey, "a dropped key")
+    exactJoin(noKey.withColumnRenamed("v", "id"), "id", dropped.withColumnRenamed("v", "id"))
+    // a final plan of 4 hash partitions declared over a checkpoint of 3
+    val four = src.repartition(4, col("k")).sortWithinPartitions(col("k"))
+    four.collect()
+    val three = src.repartition(3, col("k")).localCheckpoint(eager = true)
+    val mismatched = org.apache.spark.sql.graft.shims.declareLayout(three, four)
+    unknown(mismatched, "a partition-count mismatch")
+    exactJoin(mismatched, "k", src)
+    Seq(freeCoalesced, freeNoKey, Barriers.freeThunk(three)).foreach(_())
   }
 
   test("clustered regime is value-identical to the default regime across the loops") {
@@ -210,15 +292,14 @@ class CheckpointLayoutSpec extends AnyFunSuite {
   }
 
   test("AQE suspension is session-scoped to the capture: concurrent planning stays adaptive, session conf untouched") {
-    // The capture compiles under a throwaway session clone with AQE off —
-    // never by mutating the shared session conf (the round-14 exposure:
-    // every clustered round opened a session-conf mutation window in which
-    // a concurrently-planned query silently compiled non-adaptive). Pin
-    // it: while one thread runs captures back-to-back, a second thread
-    // plans queries continuously — EVERY concurrent plan must stay
-    // adaptive, and the session conf must never change. Also pin that the
-    // capture's DOWNSTREAM consumers plan adaptive (the re-bound leaf
-    // carries the caller's session, not the clone).
+    // A layout is never had by mutating the shared session conf (the
+    // round-14 exposure: every clustered round opened a session-conf
+    // mutation window in which a concurrently-planned query silently
+    // compiled non-adaptive). Pin it: while one thread builds clustered
+    // frames back-to-back, a second thread plans queries continuously —
+    // EVERY concurrent plan must stay adaptive, and the session conf must
+    // never change. Also pin that the frame's DOWNSTREAM consumers plan
+    // adaptive.
     val key = "spark.sql.adaptive.enabled"
     assert(spark.conf.get(key, "true") == "true", "precondition: AQE on")
     def planString(): String = {
@@ -240,21 +321,22 @@ class CheckpointLayoutSpec extends AnyFunSuite {
       (0 until 4).foreach { i =>
         val df = spark.range(500)
           .select((col("id") % 13).as("k"), (col("id") + i).as("v"))
-        val (ck, free) = CheckpointLayout.statSafeClusteredBy(df, "k")
-        val (partOk, sortOk) = capturedLayout(ck)
-        assert(partOk && sortOk, s"capture $i lost its layout")
-        // downstream of the re-bound leaf must plan ADAPTIVE again
+        val ck = CheckpointLayout.clusteredBy(df, "k")
+        val free = Barriers.freeThunk(ck)
+        val (partOk, sortOk) = declaredLayout(ck)
+        assert(partOk && sortOk, s"frame $i lost its layout")
+        // downstream of the declared leaf must plan ADAPTIVE
         val down = ck.join(spark.range(13).select(col("id").as("k")), Seq("k"))
           .groupBy(col("k")).agg(sum(col("v")))
         assert(down.queryExecution.executedPlan.toString.contains("AdaptiveSparkPlan"),
-          s"downstream of capture $i planned non-adaptive: clone session leaked into the result")
+          s"downstream of frame $i planned non-adaptive")
         assert(ck.count() == 500)
         free()
       }
     } finally { done = true; watcher.join(60000) }
-    assert(!confFlipped, "shared session conf mutated during a capture window")
+    assert(!confFlipped, "shared session conf mutated while frames were built")
     assert(badPlan == null,
-      s"concurrent thread lost AQE during a capture window:\n$badPlan")
+      s"concurrent thread lost AQE while frames were built:\n$badPlan")
   }
 
   test("reliable clustered round executes its lineage once (persist bridges count and file write)") {

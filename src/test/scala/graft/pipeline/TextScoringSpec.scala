@@ -263,10 +263,10 @@ class TextScoringSpec extends AnyFunSuite {
   }
 
   test("classifierTrain plan: slim-frame layout makes per-doc stages shuffle-free") {
-    // Past the regime bound the checkpointed slim frame is
-    // repartitioned+sorted by doc_id (captured with AQE off in a
-    // throwaway session clone), so the final per-doc aggregate (and each
-    // iteration's window, same requirement) needs no Exchange: the whole
+    // Past the regime bound the checkpointed slim frame and the doc list
+    // are repartitioned+sorted by doc_id (the layout declared on their
+    // eager checkpoints), so the final per-doc aggregate and join (and
+    // each iteration's window, same requirement) need no Exchange: the whole
     // returned plan's only shuffles are broadcasts. Forced via the regime
     // conf (tiny corpora stay on the fully-adaptive plain path); the two
     // regimes must agree on values. Also pin that the session's AQE conf
